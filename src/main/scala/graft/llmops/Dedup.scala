@@ -142,16 +142,6 @@ object Dedup {
         i => array_join(slice(toks, i + 1, lit(k)), " "))))
   }
 
-  /** MinHash signature: for each of `numHashes` universal hash
-    * functions h_i(x) = A_i·h(x) + B_i, the min over shingle hashes.
-    * HOF-expression form — NOTE: Spark higher-order functions are
-    * CodegenFallback (interpreted); use [[minhashSignatures]] (typed
-    * kernel) for bulk work — measured ~400 s vs ~2 s at sf0.1. */
-  def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), seed =>
-      aggregate(shingleArr, lit(Long.MaxValue),
-        (acc, s) => least(acc, xxhash64(s, seed))))
-
   /** Deterministic per-seed mixing constants (splitmix64 stream). */
   private def mixConstants(numHashes: Int): Array[(Long, Long)] = {
     var x = 0x9E3779B97F4A7C15L
@@ -202,22 +192,12 @@ object Dedup {
       }.toDF("id", "sig")
   }
 
-  /** LSH banding: split the signature into `bands` equal rows of
-    * signature values, hash each band → (band_idx, band_hash) rows.
-    * Docs sharing any band bucket are candidate pairs. Column form for
-    * single-expression use; bulk callers use [[bandRows]] (HOFs are
-    * interpreted — NOTES_r1 lesson 1). */
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)), b =>
-      struct(b.as("band"),
-        xxhash64(array_join(
-          transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)),
-            _.cast("string")), ",")).as("band_hash")))
-
-  /** Bulk banding kernel over (id, sig) rows → (id, band, band_hash).
-    * The bucket hash only needs to be equality-preserving on band
-    * slices (it never leaves the query), so a cheap FNV-over-longs mix
-    * replaces the string-join+xxhash64 of the column form. */
+  /** Bulk banding kernel over (id, sig) rows → (id, band, band_hash):
+    * the signature cut into `bands` slices of `rowsPerBand` values,
+    * each slice hashed. Docs sharing any band bucket are candidate
+    * pairs. The bucket hash only needs to be equality-preserving on
+    * band slices (it never leaves the query), so a cheap FNV-over-longs
+    * mix suffices. */
   def bandRows(withSig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     val spark = withSig.sparkSession
     import spark.implicits._
@@ -242,24 +222,11 @@ object Dedup {
       }.toDF("id", "band", "band_hash")
   }
 
-  /** Full MinHash-LSH near-dup candidate pipeline.
+  /** Full MinHash-LSH near-dup candidate pipeline: band buckets through
+    * [[BucketPairs]], then the signature-estimated Jaccard verify.
     *
-    * @param maxBucketSize adversarial-corpus guard: band buckets larger
-    *        than this are SAMPLED down to the cap before the self-join
-    *        (a bucket of size B contributes B² candidate rows — an
-    *        exact-dup flood of 10^5 identical docs would otherwise emit
-    *        10^10 pairs). The sample is deterministic and VARIES BY
-    *        BAND (ordered by xxhash64(id, band, bucket)), so an
-    *        exact-dup flood — whose members collide in EVERY band —
-    *        keeps different survivors per band and stays connected
-    *        across the union of bands instead of losing whole members.
-    *        RECALL CAVEAT (ADVICE r4 #6): a genuine near-dup pair whose
-    *        ONLY matching band lands in a flooded bucket is still lost
-    *        unless both members are sampled there (≈(cap/B)² per band);
-    *        oversized buckets are near-certainly exact-dup floods,
-    *        which the exact-dedup pre-collapse (the composed pipeline's
-    *        first stage, q33 → q35) owns. None (default) preserves
-    *        exact recall — the oracled gates run uncapped.
+    * @param maxBucketSize the [[BucketPairs]] flood cap per band bucket;
+    *        None (default) preserves exact recall.
     * @return (id_a, id_b, est_jaccard) for candidate pairs with
     *         signature-estimated Jaccard ≥ threshold, id_a < id_b.
     */
@@ -268,44 +235,28 @@ object Dedup {
       threshold: Double = 0.5, maxBucketSize: Option[Int] = None): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-
     val withSig = minhashSignatures(docs, idCol, textCol, shingleK, numHashes)
       .cache()
+    bandPairs(withSig, bandRows(withSig, bands, rowsPerBand)
+        .select(col("id"), col("band").as("tbl"), col("band_hash").as("key")),
+      numHashes, threshold, maxBucketSize)
+  }
 
-    // id-only banding rows: the bucket self-join can fan out to B² pairs
-    // per bucket (degenerate corpora share global minima), so candidate
-    // rows must be 16 bytes, not 16 bytes + two 512-byte signatures —
-    // signatures re-attach AFTER pair dedup (measured 30× at sf0.1)
-    val bandedAll = bandRows(withSig, bands, rowsPerBand)
-    // bucket-size cap: per-bucket deterministic SAMPLE (not wholesale
-    // drop) — a rank over the same shuffle key the join needs anyway,
-    // no extra exchange; the hash order varies by band so flood
-    // members stay represented across bands
-    val banded = maxBucketSize match {
-      case Some(cap) =>
-        val byBucket = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("band_hash"))
-          .orderBy(xxhash64(col("id"), col("band"), col("band_hash")), col("id"))
-        bandedAll.withColumn("__rk", row_number().over(byBucket))
-          .filter(col("__rk") <= cap).drop("__rk")
-      case None => bandedAll
-    }
-
-    val a = banded.select(col("band"), col("band_hash"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("band_hash"), col("id").as("id_b"))
-    a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-      .join(withSig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(withSig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+  /** The MinHash-LSH tail shared by the native and portable families:
+    * band-bucket candidates from [[BucketPairs]] (`banded` is
+    * (id, tbl = band, key = band key)), verified by the fraction of
+    * agreeing signature slots. Output (id_a, id_b, est_jaccard),
+    * unrounded. */
+  private def bandPairs(withSig: DataFrame, banded: DataFrame,
+      numHashes: Int, threshold: Double, cap: Option[Int]): DataFrame =
+    BucketPairs.withPayload(BucketPairs(banded, ascending = true, cap = cap),
+        withSig, "sig")
       .withColumn("est_jaccard",
         aggregate(zip_with(col("sig_a"), col("sig_b"),
             (x, y) => when(x === y, 1).otherwise(0)),
           lit(0), (acc, v) => acc + v).cast("double") / numHashes)
       .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
-  }
 
   // ---- n-gram Jaccard (exact verification) ------------------------
 
@@ -908,9 +859,6 @@ object Dedup {
   def hamming64(a: Column, b: Column): Column =
     length(regexp_replace(bin(a.bitwiseXOR(b)), "0", "")).cast("int")
 
-  /** SimHash near-dup pairs within a Hamming radius, blocked on 16-bit
-    * quarters (pigeonhole: radius ≤ 3 ⇒ some quarter matches exactly)
-    * so candidate generation is again an equi-join, not a cross join. */
   /** Bulk SimHash via typed kernel (64 interpreted bit-aggregates per
     * row are too slow in bulk; the column form [[simhash64]] remains for
     * single-expression use). Token hash: splitmix64-avalanched
@@ -994,33 +942,24 @@ object Dedup {
     * differs in at most `maxHamming` blocks, so at least
     * `kBlocks − maxHamming` blocks agree — and any `keyBlocks ≤
     * kBlocks − maxHamming` of those form a table the pair collides
-    * in. Candidate generation stays an equi-join on (table, key) —
-    * never a cross join.
+    * in. Candidates come from [[BucketPairs]] on (table, key).
     *
-    * SCALE KNOB — DERIVED BY DEFAULT since r13 (the r6 fixed-nPlanes
-    * lesson, completed): with `kBlocks <= 0` the blocking comes from
-    * [[simhashBlocksFor]] on the LIVE corpus size (one count() on the
-    * already-cached simhash frame — it materializes a cache the joins
-    * reuse), so the key space scales with the corpus instead of
-    * saturating. At gate scale (≤ 2.1M docs, radius 3) the derivation
-    * returns (4, 1) — exactly the old minimal default, so existing
-    * gate outputs are bit-identical; at 5M docs it returns (5, 2),
-    * where the r12 candidate diag measured the fixed default already
-    * quadratic (1.12B candidates vs Manku-keyed tens of millions).
-    * Passing explicit `(kBlocks, keyBlocks)` pins the blocking
-    * (contrast probes, reproducing historical operating points);
-    * `keyBlocks` is ignored when kBlocks <= 0. Recall is identical at
-    * every ladder point (pigeonhole is exact either way, and the
-    * Hamming verify makes precision exact always); cost of a wider
-    * point is C(kBlocks, keyBlocks) index rows per doc. */
-  /** @param maxBucketSize same adversarial-flood guard as
-    *        [[minhashCandidates]]: an exact-dup flood shares every
-    *        block bucket, making the block self-join quadratic in the
-    *        flood size. Oversized buckets are sampled down to the cap
-    *        (deterministic, block-varied order — see the recall caveat
-    *        on [[minhashCandidates]]); the exact-dedup pre-collapse
-    *        stage owns the flood's own pairs. None (default) preserves
-    *        exact recall for the gates. */
+    * The blocking is DERIVED by default: with `kBlocks <= 0` it comes
+    * from [[simhashBlocksFor]] on the live corpus size (one count() on
+    * the cached simhash frame, which the joins reuse), so the key space
+    * scales with the corpus instead of saturating. At ≤ 2.1M docs and
+    * radius 3 the derivation returns (4, 1), the minimal blocking; at
+    * 5M docs it returns (5, 2), where the fixed (4, 1) blocking was
+    * measured quadratic (1.12B candidates vs Manku-keyed tens of
+    * millions). Passing explicit `(kBlocks, keyBlocks)` pins the
+    * blocking; `keyBlocks` is ignored when kBlocks <= 0. Recall is
+    * identical at every ladder point (pigeonhole is exact either way,
+    * and the Hamming verify makes precision exact always); a wider
+    * point costs C(kBlocks, keyBlocks) index rows per doc.
+    *
+    * @param maxBucketSize the [[BucketPairs]] flood cap per block
+    *        bucket (an exact-dup flood shares every block bucket);
+    *        None (default) preserves exact recall. */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucketSize: Option[Int] = None,
       kBlocks: Int = 0, keyBlocks: Int = 1): DataFrame = {
@@ -1035,46 +974,43 @@ object Dedup {
         "(pigeonhole: a radius-r pair is only guaranteed a fully-agreeing " +
         "keyBlocks-subset when keyBlocks <= kBlocks - r)")
     // block widths: distribute 64 bits as evenly as possible
-    val widths = Array.tabulate(nBlocks)(i => 64 / nBlocks + (if (i < 64 % nBlocks) 1 else 0))
+    val widths = Seq.tabulate(nBlocks)(i => 64 / nBlocks + (if (i < 64 % nBlocks) 1 else 0))
+    simhashBlockPairs(sh, widths, nKeyBlocks, maxHamming, ascending = true,
+      maxBucketSize)
+      .select(col("id_a"), col("id_b"), col("hamming"))
+  }
+
+  /** The SimHash tail shared by the native and portable families: the
+    * (id, sh) codes cut into contiguous blocks of `widths` bits, one
+    * index table per `keyBlocks`-subset of blocks (key = the chosen
+    * blocks packed), candidates from [[BucketPairs]], verified by
+    * Hamming distance ≤ `maxHamming`. Output (id_a, id_b, sh_a, sh_b,
+    * hamming). */
+  private def simhashBlockPairs(sh: DataFrame, widths: Seq[Int],
+      keyBlocks: Int, maxHamming: Int, ascending: Boolean,
+      cap: Option[Int]): DataFrame = {
     val offsets = widths.scanLeft(0)(_ + _)
     def blockExpr(i: Int): Column = {
       val mask = if (widths(i) == 64) -1L else (1L << widths(i)) - 1L
       shiftrightunsigned(col("sh"), offsets(i)).bitwiseAND(mask)
     }
     // one struct per table: table id + packed concatenation of the
-    // chosen blocks (total key bits = Σ chosen widths ≤ 64 whenever
-    // keyBlocks·⌈64/kBlocks⌉ ≤ 64 — true for every sane (k,t));
-    // combos enumerate at plan-build time, the explode is C(k,t) rows
-    val combos = (0 until nBlocks).combinations(nKeyBlocks).toSeq
+    // chosen blocks; combos enumerate at plan-build time, the explode
+    // is C(k,t) rows
+    val combos = widths.indices.combinations(keyBlocks).toSeq
     require(combos.forall(c => c.map(widths(_)).sum <= 64),
-      s"packed key exceeds 64 bits for (kBlocks=$nBlocks, keyBlocks=$nKeyBlocks)")
+      s"packed key exceeds 64 bits for (kBlocks=${widths.size}, keyBlocks=$keyBlocks)")
     val blockStructs = array(combos.zipWithIndex.map { case (c, ci) =>
       val packed = c.foldLeft((lit(0L), 0)) { case ((acc, shift), bi) =>
         (acc.bitwiseOR(shiftleft(blockExpr(bi), shift)), shift + widths(bi))
       }._1
-      struct(lit(ci).as("q"), packed.as("qkey"))
+      struct(lit(ci).as("tbl"), packed.as("key"))
     }: _*)
-    val blocksAll = sh.select(col("id"), explode(blockStructs).as("qq"))
-      .select(col("id"), col("qq.q").as("q"), col("qq.qkey").as("qkey"))
-    val blocks = maxBucketSize match {
-      case Some(cap) =>
-        val byBucket = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q"), col("qkey"))
-          .orderBy(xxhash64(col("id"), col("q"), col("qkey")), col("id"))
-        blocksAll.withColumn("__rk", row_number().over(byBucket))
-          .filter(col("__rk") <= cap).drop("__rk")
-      case None => blocksAll
-    }
-    val a = blocks.select(col("q"), col("qkey"), col("id").as("id_a"))
-    val b = blocks.select(col("q"), col("qkey"), col("id").as("id_b"))
-    a.join(b, Seq("q", "qkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
+    val blocks = sh.select(col("id"), explode(blockStructs).as("b"))
+      .select(col("id"), col("b.tbl").as("tbl"), col("b.key").as("key"))
+    BucketPairs.withPayload(BucketPairs(blocks, ascending, cap = cap), sh, "sh")
       .withColumn("hamming", hamming64(col("sh_a"), col("sh_b")))
       .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
   // ---- portable (oracle-reproducible) variants ---------------------
@@ -1118,11 +1054,6 @@ object Dedup {
       ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
   }
 
-  /** Portable MinHash-LSH near-dup candidates: identical construction
-    * to [[minhashCandidates]] but with md5-derived shingle hashes and
-    * affine permutations mod [[portableP]], and band keys as the
-    * comma-joined signature slice (not a second hash) — every value the
-    * query produces is reproducible in the DuckDB oracle. */
   /** Portable MinHash signatures, one row per doc: (id, sig). The
     * shared kernel of [[minhashCandidatesPortable]] and
     * [[incrementalAdmit]] — both sides of an incremental join MUST use
@@ -1183,6 +1114,12 @@ object Dedup {
       }.toDF("id", "band", "band_key")
   }
 
+  /** Portable MinHash-LSH near-dup candidates: identical construction
+    * to [[minhashCandidates]] but with md5-derived shingle hashes and
+    * affine permutations mod [[portableP]], band keys as the
+    * comma-joined signature slice (not a second hash), and est_jaccard
+    * rounded to 6 digits — every value the query produces is
+    * reproducible in the DuckDB oracle. */
   def minhashCandidatesPortable(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 2, numHashes: Int = 32,
       bands: Int = 8, threshold: Double = 0.3): DataFrame = {
@@ -1190,21 +1127,9 @@ object Dedup {
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     val withSig = portableSignatures(docs, idCol, textCol, shingleK, numHashes)
       .cache()
-    val banded = portableBandRows(withSig, bands, rowsPerBand)
-
-    val a = banded.select(col("band"), col("band_key"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("band_key"), col("id").as("id_b"))
-    a.join(b, Seq("band", "band_key"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-      .join(withSig.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-      .join(withSig.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
+    bandPairs(withSig, portableBandRows(withSig, bands, rowsPerBand)
+        .select(col("id"), col("band").as("tbl"), col("band_key").as("key")),
+      numHashes, threshold, cap = None)
       .select(col("id_a"), col("id_b"),
         round(col("est_jaccard"), 6).as("est_jaccard"))
   }
@@ -1262,31 +1187,15 @@ object Dedup {
       textCol: String, maxHamming: Int = 3): DataFrame = {
     require(60 % (maxHamming + 1) == 0,
       "maxHamming+1 must divide 60 (blocks of equal width)")
-    val nBlocks = maxHamming + 1
-    val width = 60 / nBlocks
-    val mask = (1L << width) - 1L
-    // r18: eager cut, not cache() — the plan fans `sh` into several
-    // BROADCAST subtrees that execute as concurrent jobs; a lazy cache
-    // is not yet materialized when they race, so each job recomputed
-    // the whole SimHash kernel (profiled: FIVE identical 1.2 s single-
-    // task stages per pass). The cut materializes once, up front.
+    // eager cut, not cache(): the plan fans `sh` into several BROADCAST
+    // subtrees that execute as concurrent jobs, and a lazy cache is not
+    // yet materialized when they race, so each job would recompute the
+    // whole SimHash kernel. The cut materializes once, up front.
     val sh = graft.ops.Checkpoints.cut(
       simhashes60Portable(docs, idCol, textCol))
-    val blockStructs = array((0 until nBlocks).map { i =>
-      struct(lit(i).as("q"),
-        shiftrightunsigned(col("sh"), i * width).bitwiseAND(mask).as("qkey"))
-    }: _*)
-    val blocks = sh.select(col("id"), explode(blockStructs).as("qq"))
-      .select(col("id"), col("qq.q").as("q"), col("qq.qkey").as("qkey"))
-    val a = blocks.select(col("q"), col("qkey"), col("id").as("id_a"))
-    val b = blocks.select(col("q"), col("qkey"), col("id").as("id_b"))
-    val pairs = a.join(b, Seq("q", "qkey"))
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("hamming", hamming64(col("sh_a"), col("sh_b")))
-      .filter(col("hamming") <= maxHamming)
+    val pairs = simhashBlockPairs(sh,
+      Seq.fill(maxHamming + 1)(60 / (maxHamming + 1)), keyBlocks = 1,
+      maxHamming, ascending = false, cap = None)
     val nNear = pairs.groupBy(col("id_a").as("id"))
       .agg(count(lit(1)).as("n_near"))
     sh.join(nNear, Seq("id"), "left")

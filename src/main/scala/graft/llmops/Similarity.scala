@@ -57,47 +57,32 @@ object Similarity {
     Array.fill(nPlanes)(Array.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Sign-bit LSH bucket id for each vector: bit i = (v · plane_i) > 0.
-    * The planes are literal arrays folded into the plan (no closure). */
-  def lshBucket(vec: Column, nPlanes: Int, dim: Int, seed: Long = 42): Column = {
-    val planes = hyperplanes(nPlanes, dim, seed)
-    planes.zipWithIndex.map { case (p, i) =>
-      val lp = array(p.toIndexedSeq.map(lit): _*)
-      val dot = aggregate(zip_with(transform(vec, _.cast("double")), lp,
-        (x, y) => x * y), lit(0.0), (s, v) => s + v)
-      when(dot > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /** Approximate top-k via multi-table LSH (OR-amplification): `nTables`
     * independent `nPlanes`-bit sign buckets; candidates share a bucket
     * in ANY table. Recall ≈ 1-(1-p^b)^L for bit-agreement prob p —
     * single-table LSH collapses on near-orthogonal data, multi-table
     * doesn't (standard construction, MMDS ch.3).
     *
-    * Scale: equi-join on (table, bucket) — shuffle-partitioned, no
-    * cross join; pair dedup before the exact cosine pass.
+    * Candidates and re-rank are [[selfTopKFromBuckets]] (the
+    * [[BucketPairs]] core); this operator owns only the Gaussian
+    * bucket kernel.
     *
-    * `nPlanes = 0` / `nTables = 0` (the defaults since r14) DERIVE
-    * both sketch parameters — the fully zero-knob path:
-    * [[autoPlanes]] at [[TopKOccupancy]] holds candidate volume
-    * linear, and [[lshTablesFor]] at [[topKDesignCosMilli]] (this corpus's
-    * measured k-th-neighbor grade) holding [[TopKTargetRecallPpm]] holds
-    * recall — the same no-manual-choice discipline as the near-dup
-    * family. Pass explicit values to pin an operating point (q38/q66/
-    * q89 pin planes = autoPlanes, tables = 8 so the gates stay
-    * hash-exact).
+    * `nPlanes = 0` / `nTables = 0` (the defaults) DERIVE both sketch
+    * parameters: [[autoPlanes]] at [[TopKOccupancy]] holds candidate
+    * volume linear, and [[lshTablesFor]] at [[topKDesignCosMilli]]
+    * (this corpus's measured k-th-neighbor grade) holding
+    * [[TopKTargetRecallPpm]] holds recall — the same no-manual-choice
+    * discipline as the near-dup family. Pass explicit values to pin an
+    * operating point (q38/q66/q89 pin planes = autoPlanes, tables = 8
+    * so the gates stay hash-exact).
     *
-    * `probeRadius > 0` (r15, VERDICT r14 #2) brings multi-probe to
-    * the PRODUCTION float-plane path — the same probe-side XOR-mask
-    * explode as [[lshTopKPortableMultiProbe]] (Lv et al. 2007): each
-    * query probes its own bucket plus every bucket within Hamming
-    * distance `probeRadius` in each table, the index stays n·nTables
-    * rows, and the zero-knob table derivation shrinks by the
-    * collision-prob ratio (8× fewer tables at radius 1 at the r14
-    * 100× design point). Radius 1 is the DEFAULT since r16
-    * ([[TopKProbeRadius]] — it dominates single-probe on this path,
-    * SCALE.md r15); radius 0 takes the mask-free pre-r15 plan and
+    * `probeRadius > 0` is multi-probe (Lv et al. 2007): each query
+    * probes its own bucket plus every bucket within Hamming distance
+    * `probeRadius` in each table, the index stays n·nTables rows, and
+    * the zero-knob table derivation shrinks by the collision-prob ratio
+    * (8× fewer tables at radius 1 at the measured 100× design point).
+    * Radius 1 is the default ([[TopKProbeRadius]] — it dominates
+    * single-probe on this path); radius 0 takes the mask-free plan and
     * stays reachable explicitly (the pinned gates pass it). */
   def lshTopK(vectors: DataFrame, k: Int, nPlanes: Int = 0, dim: Int,
       nTables: Int = 0, probeRadius: Int = TopKProbeRadius,
@@ -136,35 +121,7 @@ object Similarity {
         (id, t, bucket)
       }
     }.toDF("id", "tbl", "bucket")
-    // candidate ids first — dedup BEFORE hauling vector payloads.
-    // Multi-probe expands the QUERY side only (masks on the probe,
-    // never the index); radius 0 skips the explode entirely.
-    val a =
-      if (probeRadius == 0)
-        withB.select(col("tbl"), col("bucket"), col("id").as("query_id"))
-      else {
-        val masks = array(probeMasks(planes, probeRadius).map(lit): _*)
-        withB
-          .select(col("tbl"), col("bucket"), col("id").as("query_id"),
-            explode(masks).as("mask"))
-          .select(col("tbl"),
-            col("bucket").bitwiseXOR(col("mask")).as("bucket"),
-            col("query_id"))
-      }
-    val b = withB.select(col("tbl"), col("bucket"), col("id").as("neighbor_id"))
-    val pairs = a.join(b, Seq("tbl", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    pairs
-      .join(base.select(col("id").as("query_id"), col("v").as("qv")), Seq("query_id"))
-      .join(base.select(col("id").as("neighbor_id"), col("v").as("cv")), Seq("neighbor_id"))
-      .withColumn("cos", graft.functions.VectorFunctions.cosineNative(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cos"), col("rn"))
+    selfTopKFromBuckets(base, withB, k, probeRadius, planes)
   }
 
   // ---- portable (oracle-reproducible) LSH -------------------------
@@ -178,14 +135,6 @@ object Similarity {
     if ((h(0) & 0x80) != 0) 1 else -1
   }
 
-  /** Portable multi-table sign-LSH top-k: embeddings quantized to
-    * `floor(x*1000)` integers and hyperplanes to md5-derived ±1, so
-    * bucket assignment is EXACT integer arithmetic (order-independent,
-    * no float-sum nondeterminism) that the DuckDB oracle recomputes
-    * bit-for-bit. Join/re-rank machinery identical to [[lshTopK]]; the
-    * final cosine uses the same double-precision path the oracle
-    * already matches on q37. Quantization only affects which bucket a
-    * near-zero dot lands in — recall behavior is unchanged. */
   /** Portable (md5-±1, quantized-integer) sign-LSH bucket assignment:
     * one row per (id, table, bucket) — exact integer arithmetic an
     * external oracle recomputes bit-for-bit. Shared by the top-k and
@@ -707,13 +656,23 @@ object Similarity {
     t
   }
 
-  /** Portable twin of [[lshTopK]] — same zero-knob defaults since r14
-    * (`nPlanes = 0` ⇒ [[autoPlanes]] at [[TopKOccupancy]];
+  /** Portable multi-table sign-LSH top-k: embeddings quantized to
+    * `floor(x*1000)` integers and hyperplanes to md5-derived ±1, so
+    * bucket assignment is EXACT integer arithmetic (order-independent,
+    * no float-sum nondeterminism) that the DuckDB oracle recomputes
+    * bit-for-bit. Candidates and re-rank are [[lshTopK]]'s
+    * ([[selfTopKFromBuckets]]); the final cosine uses the same
+    * double-precision path the oracle already matches on q37.
+    * Quantization only affects which bucket a near-zero dot lands in —
+    * recall behavior is unchanged. Same zero-knob defaults as
+    * [[lshTopK]] (`nPlanes = 0` ⇒ [[autoPlanes]] at [[TopKOccupancy]];
     * `nTables = 0` ⇒ [[lshTablesFor]] at [[topKDesignCosMilli]] holding
-    * [[TopKTargetRecallPpm]]), probing at [[TopKProbeRadius]] since r16
-    * (radius 1 dominates single-probe — fewer derived tables at held
-    * recall; radius 0 stays reachable and is what the pinned
-    * single-probe math gates pass). */
+    * [[TopKTargetRecallPpm]]) and the same [[TopKProbeRadius]] default:
+    * radius 1 needs ~8× fewer derived tables than single-probe at the
+    * measured 100× operating point (24 vs 193 at planes 13, design cos
+    * 0.45) for ~1.75× more candidate verifications; radius 0 stays
+    * reachable explicitly (the pinned single-probe math gates pass
+    * it). */
   def lshTopKPortable(vectors: DataFrame, k: Int, nPlanes: Int = 0, dim: Int,
       nTables: Int = 0, probeRadius: Int = TopKProbeRadius,
       idCol: String = "vec_id",
@@ -728,176 +687,72 @@ object Similarity {
     selfTopKFromBuckets(base, withB, k, probeRadius, planes)
   }
 
-  /** Shared self-top-k tail of the portable LSH family: bucket-join
-    * candidate pairs (deduped BEFORE vector payloads are hauled), then
-    * exact-cosine re-rank to k. `withB` is a (id, tbl, bucket) frame —
-    * freshly computed by [[portableBuckets]] or loaded from a
-    * persisted index snapshot ([[graft.llmops.AnnIndexSnapshot]], r15)
-    * — ONE implementation, so the persisted path cannot diverge from
-    * the computed one. `probeRadius > 0` expands the QUERY side with
-    * the Hamming-ball XOR masks (needs `nPlanes` for the mask set);
-    * the index side — and therefore a persisted snapshot — is
-    * radius-independent. */
+  /** Shared self-top-k tail of the sign-LSH family: [[BucketPairs]]
+    * candidates (id_a ≠ id_b) over the (id, tbl, bucket) frame `withB`,
+    * then the [[BucketPairs.cosineTopK]] re-rank against `base`
+    * (id, v). `withB` is freshly computed ([[lshTopK]],
+    * [[portableBuckets]]) or loaded from a persisted index snapshot
+    * ([[graft.llmops.AnnIndexSnapshot]]) — ONE implementation, so the
+    * persisted path cannot diverge from the computed one.
+    * `probeRadius > 0` expands the QUERY side with the Hamming-ball XOR
+    * masks (needs `nPlanes` for the mask set); the index side — and
+    * therefore a persisted snapshot — is radius-independent. */
   private[llmops] def selfTopKFromBuckets(base: DataFrame, withB: DataFrame,
       k: Int, probeRadius: Int = 0, nPlanes: Int = 0): DataFrame = {
     require(probeRadius == 0 || nPlanes > 0,
       "selfTopKFromBuckets: multi-probe needs the plane count for masks")
-    val a0 = withB.select(col("tbl"), col("bucket"), col("id").as("query_id"))
-    val a =
-      if (probeRadius == 0) a0
-      else {
-        val masks = array(probeMasks(nPlanes, probeRadius).map(lit): _*)
-        a0.select(col("tbl"), col("bucket"), col("query_id"),
-            explode(masks).as("mask"))
-          .select(col("tbl"),
-            col("bucket").bitwiseXOR(col("mask")).as("bucket"),
-            col("query_id"))
-      }
-    val b = withB.select(col("tbl"), col("bucket"), col("id").as("neighbor_id"))
-    val pairs = a.join(b, Seq("tbl", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"))
-      .distinct()
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    pairs
-      .join(base.select(col("id").as("query_id"), col("v").as("qv")), Seq("query_id"))
-      .join(base.select(col("id").as("neighbor_id"), col("v").as("cv")), Seq("neighbor_id"))
-      .withColumn("cos", graft.functions.VectorFunctions.cosineNative(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cos"), col("rn"))
+    val pairs = BucketPairs(
+      withB.select(col("id"), col("tbl"), col("bucket").as("key")),
+      ascending = false, BucketPairs.probeMasks(nPlanes, probeRadius))
+    BucketPairs.cosineTopK(BucketPairs.withPayload(pairs, base, "v"), k)
   }
-
-  /** Probe masks for multi-probe: bucket XOR mask enumerates every
-    * bucket within Hamming distance `radius` of the query's own code.
-    * Radius 1 = 1 + nPlanes masks; radius 2 adds C(nPlanes, 2). */
-  private def probeMasks(nPlanes: Int, radius: Int): Seq[Long] = {
-    require(radius >= 0 && radius <= 2, "probe radius 0..2 supported")
-    val r1 = (0 until nPlanes).map(j => 1L << j)
-    val r2 = for {
-      i <- 0 until nPlanes; j <- (i + 1) until nPlanes
-    } yield (1L << i) | (1L << j)
-    Seq(0L) ++ (if (radius >= 1) r1 else Nil) ++ (if (radius >= 2) r2 else Nil)
-  }
-
-  /** MULTI-PROBE portable sign-LSH top-k (r14) — the remedy the
-    * [[lshTablesFor]] regime guard names, now shipped: each query
-    * probes its own bucket in every table PLUS all buckets within
-    * Hamming distance `probeRadius` (bit-flip XOR masks on the probe
-    * side only). The INDEX side is untouched — still n·nTables rows,
-    * still one `portableBuckets` pass — so per-table recall rises from
-    * p^planes to Σ_{i≤r} C(planes,i)p^(planes−i)(1−p)^i at ZERO extra
-    * dot products, and the derived table count
-    * ([[lshTablesFor]] with `probeRadius`) shrinks accordingly: at
-    * this round's measured 100× top-k operating point (planes 13,
-    * design cos 0.45, target 0.5) radius 1 needs 24 tables where
-    * single-probe needs ~193 — 8× less hashing and index shuffle for
-    * ~1.75× more candidate verifications (SCALE.md r14 multi-probe
-    * leg). Zero-knob defaults like [[lshTopKPortable]]; identical
-    * output contract; hash-exact DuckDB replay (q175 — the q66 CTEs
-    * plus a mask-expansion probe join). Radius 0 degenerates to
-    * [[lshTopKPortable]] exactly (spec-pinned). */
-  def lshTopKPortableMultiProbe(vectors: DataFrame, k: Int,
-      nPlanes: Int = 0, dim: Int, nTables: Int = 0, probeRadius: Int = 1,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    // r16: [[lshTopKPortable]] IS multi-probe by default now — this
-    // name remains for the probe tools and the explicit-radius specs
-    lshTopKPortable(vectors, k, nPlanes, dim, nTables, probeRadius,
-      idCol, vecCol)
 
   /** Embedding near-duplicate PAIRS through the bucketed LSH candidate
-    * path — the 100 TB plan for the product that
+    * path — the scale plan for the product that
     * [[graft.queries.Llm.embeddingNearDups]] (q97) anchors with exact
-    * all-pairs: candidates are (table, bucket) equi-join collisions
-    * (shuffle-partitioned, never a cross product), deduped BEFORE the
-    * vector payloads are hauled, then exact-cosine verified against
-    * `threshold` on the round-6 value (identical comparison to q97, so
-    * a surviving pair is bit-identical to the all-pairs pair).
+    * all-pairs: [[BucketPairs]] candidates (id_a < id_b) over the
+    * portable sign buckets, exact-cosine verified against `threshold` on
+    * the round-6 value (identical comparison to q97, so a surviving pair
+    * is bit-identical to the all-pairs pair).
     *
-    * Uses the portable quantized-sign buckets, so an external oracle
-    * replays the whole product hash-exactly; recall vs the all-pairs
-    * truth is 1-(1-p^nPlanes)^nTables for bit-agreement prob
-    * p = 1-θ/π — tunable per corpus, measured by the companion recall
-    * gate (q97c).
+    * The portable quantized-sign buckets let an external oracle replay
+    * the whole product hash-exactly; recall vs the all-pairs truth is
+    * 1-(1-p^nPlanes)^nTables for bit-agreement prob p = 1-θ/π, measured
+    * by the companion recall gate (q97c).
     *
-    * Parameterization discipline at scale (measured, tools/ScaleProbe
-    * r6): bucket count is 2^nPlanes per table, so at FIXED nPlanes the
-    * candidate volume grows ~ n²/2^nPlanes — the 10× probe measures
-    * exponent 1.41 at frozen planes. Hold per-bucket occupancy
-    * constant by deriving nPlanes from the live corpus
-    * ([[autoPlanes]] at [[NearDupOccupancy]] — what the gates and the
-    * probe's default leg do since r7): the derived leg measures
-    * ~linear. Recall lost to extra planes at larger corpora is
-    * recovered by raising nTables — and since r13 the DEFAULT
-    * (`nTables = 0`) derives it: [[lshTablesFor]] at
-    * [[NearDupDesignCosMilli]], so recall at the design similarity is held
-    * with no manual table choice. r12 measured why a fixed count is
-    * wrong: dup-grade recall 0.998 → 0.855 across 100× corpus growth
-    * at the old fixed 8 tables; the derived count restored 0.943 (and
-    * see the boundary-grade REGIME LIMIT on [[lshTablesFor]]). Pass
-    * `nTables > 0` to pin an explicit count (the recall gates pin
-    * their measured operating point this way). */
+    * Both sketch parameters derive from the corpus by default. Bucket
+    * count is 2^nPlanes per table, so at FIXED nPlanes the candidate
+    * volume grows ~ n²/2^nPlanes (measured exponent 1.41 at 10×);
+    * `nPlanes = 0` derives it via [[autoPlanes]] at [[NearDupOccupancy]],
+    * holding per-bucket occupancy constant (measured ~linear). Recall
+    * lost to extra planes is recovered with more tables: `nTables = 0`
+    * derives them via [[lshTablesFor]] at [[NearDupDesignCosMilli]] (a
+    * fixed 8 tables measured dup-grade recall 0.998 → 0.855 across 100×
+    * corpus growth; the derived count restored 0.943 — and see the
+    * boundary-grade REGIME LIMIT on [[lshTablesFor]]). Pass explicit
+    * values to pin an operating point (the recall gates do).
+    * `probeRadius > 0` XOR-probes Hamming-≤r buckets on the probe side,
+    * and the derived table count shrinks by the same collision-prob
+    * ratio (~4× at the near-dup design cos); the default 0 is what the
+    * oracled gates replay. */
   def lshNearDupPairsPortable(vectors: DataFrame, threshold: Double,
       nPlanes: Int = 0, dim: Int, nTables: Int = 0, probeRadius: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // r14: nPlanes = 0 derives via the family's occupancy target, so
-    // the zero-knob call holds BOTH disciplines (volume + recall);
-    // probeRadius > 0 (multi-probe, the lshTopKPortableMultiProbe
-    // machinery on the pair product) raises per-table recall by
-    // XOR-probing Hamming-≤r buckets on one side of the self-join —
-    // the derived table count shrinks by the same collision-prob
-    // ratio (~4× at the near-dup design cos, measured in the probe).
-    // Default 0: the oracled gates replay single-probe buckets.
     val planes = if (nPlanes > 0) nPlanes
       else autoPlanes(vectors, NearDupOccupancy)
     val tables = if (nTables > 0) nTables
       else lshTablesFor(planes, NearDupDesignCosMilli, probeRadius = probeRadius)
     val base = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
     val withB = portableBuckets(vectors, planes, dim, tables, idCol, vecCol)
-    val masks = array(probeMasks(planes, probeRadius).map(lit): _*)
-    val a = withB
-      .select(col("tbl"), col("bucket"), col("id").as("id_a"),
-        explode(masks).as("mask"))
-      .select(col("tbl"), col("bucket").bitwiseXOR(col("mask")).as("bucket"),
-        col("id_a"))
-    val b = withB.select(col("tbl"), col("bucket"), col("id").as("id_b"))
-    val pairs = a.join(b, Seq("tbl", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .distinct()
-    pairs
-      .join(base.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
+      .select(col("id"), col("tbl"), col("bucket").as("key"))
+    BucketPairs.withPayload(BucketPairs(withB, ascending = true,
+        BucketPairs.probeMasks(planes, probeRadius)), base, "v")
       .withColumn("cos", round(
-        graft.functions.VectorFunctions.cosineNative(col("va"), col("vb")), 6))
+        graft.functions.VectorFunctions.cosineNative(col("v_a"), col("v_b")), 6))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
   }
 
-  /** Portable IVF-Flat: cells are integer-quantized label-seeded
-    * centroids, so the WHOLE index — centroid build, corpus
-    * assignment, query routing — is exact arithmetic an external
-    * oracle replays bit-for-bit (the IVF twin of [[lshTopKPortable]];
-    * VERDICT r5 "Next round" #2).
-    *
-    * Centroid `c[lbl][d] = Σ_v floor(v[d]·1000)` over the label's
-    * vectors — an un-normalized integer mean, which ranks identically
-    * to the mean under cosine (scale invariance). Every routing cosine
-    * is `dot/(sqrt(na)·sqrt(nb))` over exactly-representable integer
-    * doubles (|dot| ≲ 1e10, norms ≲ 4e12 — all < 2^53), and IEEE
-    * sqrt/mul/div are correctly rounded, so Spark and any IEEE engine
-    * produce the same 64 bits. The within-cell re-rank is the same
-    * double-cosine path the q37/q66 oracles already match.
-    *
-    * Scale: same join/shuffle shape as [[ivfTopK]] — corpus shuffled
-    * once by cell, probes routed by a broadcast centroid table (one
-    * row per label); the label seeding replaces the KMeans fit with
-    * one keyed agg. Caveat: cell count = label cardinality, which
-    * bounds both within-cell candidate pruning and join parallelism —
-    * fine for the oracle gate's 10-label fixture, but a large corpus
-    * wants [[ivfTopK]]'s KMeans cells (nCells sized ~√n), which this
-    * variant exists to oracle, not replace. */
   /** Label-seeded integer-centroid cell routing shared by
     * [[ivfTopKPortable]] and [[ivfPqTopKPortable]]: every vector gets
     * its top-1 cell (`assigned`: id, v, cell) and its `nProbe` nearest
@@ -945,20 +800,35 @@ object Similarity {
     (assigned, probes)
   }
 
+  /** Portable IVF-Flat: cells are integer-quantized label-seeded
+    * centroids, so the WHOLE index — centroid build, corpus
+    * assignment, query routing — is exact arithmetic an external
+    * oracle replays bit-for-bit (the IVF twin of [[lshTopKPortable]]).
+    *
+    * Centroid `c[lbl][d] = Σ_v floor(v[d]·1000)` over the label's
+    * vectors — an un-normalized integer mean, which ranks identically
+    * to the mean under cosine (scale invariance). Every routing cosine
+    * is `dot/(sqrt(na)·sqrt(nb))` over exactly-representable integer
+    * doubles (|dot| ≲ 1e10, norms ≲ 4e12 — all < 2^53), and IEEE
+    * sqrt/mul/div are correctly rounded, so Spark and any IEEE engine
+    * produce the same 64 bits. The within-cell re-rank is
+    * [[ivfTopK]]'s ([[withinCellTopK]]), the same double-cosine path
+    * the q37/q66 oracles already match.
+    *
+    * Scale: same join/shuffle shape as [[ivfTopK]] — corpus shuffled
+    * once by cell, probes routed by a broadcast centroid table (one
+    * row per label); the label seeding replaces the KMeans fit with
+    * one keyed agg. Caveat: cell count = label cardinality, which
+    * bounds both within-cell candidate pruning and join parallelism —
+    * fine for the oracle gate's 10-label fixture, but a large corpus
+    * wants [[ivfTopK]]'s KMeans cells (nCells sized ~√n), which this
+    * variant exists to oracle, not replace. */
   def ivfTopKPortable(vectors: DataFrame, k: Int, nProbe: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       labelCol: String = "label"): DataFrame = {
     val (assigned, probes) =
       portableIvfRouting(vectors, nProbe, idCol, vecCol, labelCol)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    probes.join(assigned.select(col("cell"), col("id").as("neighbor_id"),
-        col("v").as("cv")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", graft.functions.VectorFunctions.cosineNative(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cos"), col("rn"))
+    withinCellTopK(probes, assigned, k)
   }
 
   /** IVF-PQ: cell routing + ADC re-rank — the composition FAISS ships
@@ -1124,7 +994,7 @@ object Similarity {
   /** IVF probe routing + within-cell re-rank from an ALREADY-BUILT
     * index (`assigned`: id, v, cell; `centersDf`: cell, centroid) —
     * one implementation shared by [[ivfTopK]] and the persisted-index
-    * path ([[graft.llmops.AnnIndexSnapshot]], r15), so a loaded index
+    * path ([[graft.llmops.AnnIndexSnapshot]]), so a loaded index
     * cannot diverge from the computed operator. */
   private[llmops] def ivfSearchFromIndex(assigned: DataFrame,
       centersDf: DataFrame, k: Int, nProbe: Int): DataFrame = {
@@ -1135,15 +1005,19 @@ object Similarity {
       .withColumn("pr", row_number().over(probeW))
       .filter(col("pr") <= nProbe)
       .select(col("query_id"), col("qv"), col("cell"))
-
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    probes.join(assigned.select(col("cell"), col("id").as("neighbor_id"),
-        col("v").as("cv")), Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", graft.functions.VectorFunctions.cosineNative(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cos"), 6).as("cos"), col("rn"))
+    withinCellTopK(probes, assigned, k)
   }
+
+  /** The within-cell re-rank of the IVF family: each probe
+    * (query_id, qv, cell) meets every OTHER vector assigned (id, v,
+    * cell) to its cell, then [[BucketPairs.cosineTopK]]. A vector sits
+    * in exactly one cell and a query's probe cells are distinct, so
+    * the cell join yields each pair at most once — no dedup needed. */
+  private def withinCellTopK(probes: DataFrame, assigned: DataFrame,
+      k: Int): DataFrame =
+    BucketPairs.cosineTopK(
+      probes.select(col("query_id").as("id_a"), col("qv").as("v_a"), col("cell"))
+        .join(assigned.select(col("cell"), col("id").as("id_b"),
+          col("v").as("v_b")), Seq("cell"))
+        .filter(col("id_a") =!= col("id_b")), k)
 }

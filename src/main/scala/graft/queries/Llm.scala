@@ -1833,7 +1833,7 @@ object Llm {
     * expansion, the cosine re-rank AND the derived plane count. */
   def annLshMultiProbe(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    Similarity.lshTopKPortableMultiProbe(emb, k = 5,
+    Similarity.lshTopKPortable(emb, k = 5,
         nPlanes = Similarity.autoPlanes(emb, Similarity.TopKOccupancy),
         dim = 64, nTables = 4, probeRadius = 1)
       .select(col("query_id"), col("neighbor_id"), col("cos"),

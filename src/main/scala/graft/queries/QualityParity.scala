@@ -139,31 +139,43 @@ object QualityParity {
         .withColumn("within_band",
           col("ndcg") >= col("band_lo") && col("ndcg") <= col("band_hi"))
     }
-    // r18 (guide §2.6 overlap independent jobs): the five evaluations
-    // share nothing past the warmed caches and each collapses to ONE
-    // metric row, but evaluated as a single 5-way union they ran ~84
-    // strictly sequential stages — each stage's straggler tail leaving
-    // the other 31 cores idle. Submitting the five collects from a
-    // small pool lets each evaluation's tail back-fill with the next
-    // one's tasks (FIFO scheduling does the right thing). Rows, values
-    // and final ordering are IDENTICAL: same per-frame plans, same
-    // union row set, same orderBy.
+    // Overlap independent jobs: the five evaluations share
+    // nothing past the warmed caches and each collapses to ONE metric
+    // row, but evaluated as a single 5-way union they ran ~84 strictly
+    // sequential stages — each stage's straggler tail leaving the other
+    // cores idle. Submitting the five collects from a small pool lets
+    // each evaluation's tail back-fill with the next one's tasks (FIFO
+    // scheduling does the right thing). Rows, values and final ordering
+    // are IDENTICAL: same per-frame plans, same union row set, same
+    // orderBy. The collects share one job group, so when one fails its
+    // siblings are cancelled rather than left running; the fixture
+    // caches are released on every exit, since the result below is
+    // built from the collected rows alone.
+    val sc = spark.sparkContext
+    val group = s"cg-quality-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     val rows = try {
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val fs = metricFrames.map(f => scala.concurrent.Future(f.collect()))
+      val fs = metricFrames.map(f => scala.concurrent.Future {
+        sc.setJobGroup(group, "cgQuality metric collect",
+          interruptOnCancel = true)
+        try f.collect() finally sc.clearJobGroup()
+      })
       scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(fs),
         scala.concurrent.duration.Duration.Inf).flatten
-    } finally pool.shutdown()
-    val out = spark.createDataFrame(
+    } catch { case e: Throwable =>
+      sc.cancelJobGroup(group)
+      throw e
+    } finally {
+      pool.shutdownNow()
+      inter.unpersist()
+      test.unpersist()
+    }
+    spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), metricFrames.head.schema)
       .orderBy(col("recommender"))
-    // the result is 5 rows (one per CG) — materialize it into a local relation so the
-    // fixture caches can be released NOW instead of pinning executor
-    // memory for the life of the session (ADVICE r3 #5: cache leak)
-    graft.ops.Materialize.localThenUnpersist(out, inter, test)
   }
 
   /** Observed NDCG@5 band for the FM second stage (seed 42, 3dp, same

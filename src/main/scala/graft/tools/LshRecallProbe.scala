@@ -242,7 +242,7 @@ object LshRecallProbe {
       val derivedR = Similarity.lshTablesFor(planes, design,
         Similarity.TopKTargetRecallPpm, probeRadius = radius)
       val (resMp, secsMp) = timed(stage(s"topkres_${f}_mp",
-        Similarity.lshTopKPortableMultiProbe(emb, k = 5, nPlanes = planes,
+        Similarity.lshTopKPortable(emb, k = 5, nPlanes = planes,
           dim = 64, probeRadius = radius)))
       score(s"MULTIPROBE-r$radius-DEFAULT($derivedR)", resMp, secsMp)
       // r15 (VERDICT r14 #2): the PRODUCTION float-plane path at the

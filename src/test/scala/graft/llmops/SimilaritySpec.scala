@@ -232,19 +232,15 @@ class SimilaritySpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id", "cos", "rn")
         .as[(Long, Long, Double, Int)].collect().toSet
-    // radius 0 degenerates to the single-probe operator bit-for-bit
-    // (r16: the portable default is radius 1, so single-probe is the
-    // EXPLICIT radius-0 call now)
-    val single = rows(Similarity.lshTopKPortable(emb, 5, nPlanes = 4,
+    // the portable default is radius 1, so single-probe is the
+    // EXPLICIT radius-0 call
+    val r0 = rows(Similarity.lshTopKPortable(emb, 5, nPlanes = 4,
       dim = 64, nTables = 4, probeRadius = 0))
-    val r0 = rows(Similarity.lshTopKPortableMultiProbe(emb, 5, nPlanes = 4,
-      dim = 64, nTables = 4, probeRadius = 0))
-    assert(r0 == single, "radius-0 multi-probe diverges from single-probe")
+    val r1 = rows(Similarity.lshTopKPortable(emb, 5, nPlanes = 4,
+      dim = 64, nTables = 4, probeRadius = 1))
     // and the portable DEFAULT is the radius-1 multi-probe point
     assert(rows(Similarity.lshTopKPortable(emb, 5, nPlanes = 4,
-        dim = 64, nTables = 4)) ==
-      rows(Similarity.lshTopKPortableMultiProbe(emb, 5, nPlanes = 4,
-        dim = 64, nTables = 4, probeRadius = 1)),
+        dim = 64, nTables = 4)) == r1,
       "default lshTopKPortable diverges from explicit radius-1")
 
     // radius 1 at the same tables: per-query top-5 recall vs brute
@@ -256,8 +252,6 @@ class SimilaritySpec extends SparkSpec {
       brute.count { case (q, n) => byQ.getOrElse(q, Set()).contains(n) }
         .toDouble / brute.size
     }
-    val r1 = rows(Similarity.lshTopKPortableMultiProbe(emb, 5, nPlanes = 4,
-      dim = 64, nTables = 4, probeRadius = 1))
     assert(recall(r1) >= recall(r0) - 1e-12,
       s"radius-1 recall ${recall(r1)} below radius-0 ${recall(r0)}")
     assert(recall(r1) > 0.5, s"multi-probe recall ${recall(r1)} too low")

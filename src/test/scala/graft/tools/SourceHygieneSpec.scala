@@ -107,6 +107,49 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(dead.isEmpty, s"allowlist rows with no remaining global window: $dead")
   }
 
+  /** llmops file → (max pair-order filters, the shape that owns them).
+    * Bucketed candidate generation goes through `llmops/BucketPairs`
+    * (bucket self-join, flood cap, probe masks, dedup before payloads);
+    * a hand-copied bucket join re-grows its own pair-order filter and
+    * fails here. Extend ONLY with a shape that is not a bucket
+    * self-join. */
+  private val pairFilterAllowlist: Map[String, (Int, String)] = Map(
+    "llmops/BucketPairs.scala" -> (2,
+      "the candidate core itself — id_a < id_b and id_a != id_b modes"),
+    "llmops/Similarity.scala" -> (5,
+      "brute-force top-k (corpus broadcast), the queries-broadcast exact " +
+        "top-k, the design-cosine probe scan, the IVF within-cell join " +
+        "and the IVF-PQ cell join — broadcast or cell-routed scans, not " +
+        "bucket self-joins"),
+    "llmops/ProductQuantization.scala" -> (1,
+      "ADC scan of codes against the broadcast query distance tables"),
+    "llmops/Dedup.scala" -> (1,
+      "containment join: left prefixes against the full inverted index " +
+        "(asymmetric, the indexed side is not a bucket self-join)"))
+
+  test("pair-order filters in llmops confined to the bucket core and " +
+      "the documented other shapes") {
+    val needles = Seq("""col("id_a") < col("id_b")""",
+      """col("id_a") =!= col("id_b")""",
+      """col("query_id") =!= col("neighbor_id")""")
+    val hits = scalaFiles(mainRoot.resolve("llmops")).flatMap { p =>
+      val text = new String(Files.readAllBytes(p))
+      val n = needles.map(s => text.sliding(s.length).count(_ == s)).sum
+      if (n > 0) Some(mainRoot.relativize(p).toString -> n) else None
+    }.toMap
+    val violations = hits.collect {
+      case (f, n) if !pairFilterAllowlist.contains(f) =>
+        s"$f has $n pair-order filter(s) but is not allowlisted — " +
+          "generate bucket candidates with BucketPairs"
+      case (f, n) if n > pairFilterAllowlist(f)._1 =>
+        s"$f has $n pair-order filters, allowlist caps it at " +
+          s"${pairFilterAllowlist(f)._1}"
+    }
+    assert(violations.isEmpty, violations.mkString("; "))
+    val dead = pairFilterAllowlist.keySet -- hits.keySet
+    assert(dead.isEmpty, s"allowlist rows with no remaining pair filter: $dead")
+  }
+
   test(".collect() confined to the documented bounded allowlist") {
     val hits = scalaFiles(mainRoot).flatMap { p =>
       val rel = mainRoot.relativize(p).toString
