@@ -388,16 +388,6 @@ object Dedup {
     * r12 probes burned >70 GB and died mid-verify.
     *
     * Output: (id_a, id_b, jaccard) for id_a < id_b, jaccard ≥ t. */
-
-  /** Dev-only A/B hook (r18, VERDICT r17 "Next round" #4): the eager
-    * hashed-set materialization vs re-deriving the kernel per consumer.
-    * Default = cut (the r17 shape); GRAFT_DEDUP_SKIP_CUT=1 keeps the
-    * long-key narrowing but skips the materialization. Bench/Verify
-    * never set it. */
-  private def maybeCutHashedSets(df: DataFrame): DataFrame =
-    if (sys.env.get("GRAFT_DEDUP_SKIP_CUT").contains("1")) df
-    else graft.ops.Checkpoints.cut(df)
-
   def prefixFilterJoin(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, threshold: Double = 0.5,
       verifyBuckets: Int = 0, collisionGuard: Boolean = false,
@@ -424,7 +414,7 @@ object Dedup {
     // sf0.1); the checkpoint materializes the post-kernel LONG arrays
     // instead — re-adjudicated r17: all four family gates faster
     // back-to-back (q132 6.83→4.77 s etc., OPTIMIZATION_r17.md).
-    val shh = maybeCutHashedSets(hashedShingleSets(sh))
+    val shh = graft.ops.Checkpoints.cut(hashedShingleSets(sh))
     val candidates = prefixCandidatesFromHashed(shh, T)
     val withInter =
       if (verifyBuckets > 0) bucketedIntersections(shh, candidates, verifyBuckets)
@@ -775,7 +765,7 @@ object Dedup {
     // the positional filter has rk_b; the right side still ships EVERY
     // position (containment puts no floor on |B|, so the indexed side
     // cannot prefix).
-    val shh = maybeCutHashedSets(hashedShingleSets(sh))
+    val shh = graft.ops.Checkpoints.cut(hashedShingleSets(sh))
     val inst = shh.select(col("id"), size(col("sh")).cast("long").as("n"),
       explode(col("sh")).as("tid"))
     val freq = inst.groupBy(col("tid")).agg(count(lit(1)).as("f"))
@@ -1182,7 +1172,10 @@ object Dedup {
     * same pigeonhole block join as [[simhashPairs]] (maxHamming+1
     * blocks of 15 bits at radius 3). The DuckDB oracle recomputes
     * n_near by brute force, so a hash-match also PROVES the blocking
-    * is candidate-complete at the requested radius. */
+    * is candidate-complete at the requested radius.
+    *
+    * Not lazy: building the returned plan eagerly cuts the simhash
+    * frame, so the call itself runs the SimHash kernel over `docs`. */
   def simhashNearProfilePortable(docs: DataFrame, idCol: String,
       textCol: String, maxHamming: Int = 3): DataFrame = {
     require(60 % (maxHamming + 1) == 0,

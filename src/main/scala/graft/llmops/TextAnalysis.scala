@@ -2,6 +2,7 @@ package graft.llmops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting.
@@ -240,9 +241,17 @@ object TextAnalysis {
     * Catalyst and stays ABOVE a caller's Adaptive.spread instead of
     * being pushed back into the single-split scan. Row set identical
     * to `filter(langId(col) === lang)` — the twins are spec-pinned
-    * and q34 oracle-gates the scalar against the DuckDB mirror. */
+    * and q34 oracle-gates the scalar against the DuckDB mirror.
+    * `textCol` must name a top-level string column; anything else is
+    * rejected at call time, not by a cast failure inside a task. */
   def langFilterBulk(docs: DataFrame, textCol: String,
       lang: String): DataFrame = {
+    val field = docs.schema.find(_.name == textCol)
+    require(field.exists(_.dataType.isInstanceOf[StringType]),
+      s"langFilterBulk: textCol '$textCol' must be a top-level string column, " +
+        field.fold("but there is no such column among " +
+          docs.schema.fieldNames.mkString("[", ", ", "]"))(
+          f => s"but its type is ${f.dataType.simpleString}"))
     val idx = docs.schema.fieldIndex(textCol)
     docs.filter((r: org.apache.spark.sql.Row) =>
       langIdScalar(r.getString(idx)) == lang)

@@ -36,10 +36,13 @@ object Checkpoints {
     * the caller is about to fan the frame into several consumers). */
   def cut(df: DataFrame): DataFrame = cut(df, eager = true)
 
-  /** Cut lineage. `eager = false` defers materialization to the first
-    * action — use when the caller's next action already scans every
-    * row (e.g. a convergence count), so one job both materializes the
-    * blocks and computes the answer. */
+  /** Cut lineage. `eager = false` defers only the frame's final stage:
+    * under AQE, building the checkpoint RDD runs every shuffle stage
+    * of the frame's plan at the call, and the first action runs the
+    * last stage, persisting its blocks. Use when the caller's next
+    * action already scans every row (e.g. a convergence count), so
+    * that one job both materializes the blocks and computes the
+    * answer. */
   def cut(df: DataFrame, eager: Boolean): DataFrame = {
     val sc = df.sparkSession.sparkContext
     if (!isLocal(df) && sc.getCheckpointDir.isDefined) df.checkpoint(eager)

@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
   * list plus a min-aggregate — no driver-side graph state, no
   * collect. The per-round `changed` test is carried as a flag column
   * inside the round's result; the round frame is LAZILY
-  * localCheckpointed and the convergence count is its first action, so
-  * one job per round both materializes the round's blocks and counts
-  * the flags — the join never re-executes (VERDICT r2 "What's wrong"
-  * #2) and no separate checkpoint job runs (VERDICT r17 #6). Rounds
-  * needed = the largest
+  * localCheckpointed. Under AQE a lazy cut still runs the round's
+  * shuffle stages at the call — only the final stage is deferred — and
+  * the convergence count is the action that runs that stage, persisting
+  * the round's blocks and counting the flags in the same job: the join
+  * never re-executes (VERDICT r2 "What's wrong" #2) and no separate
+  * materialization job runs (VERDICT r17 #6). Rounds needed = the largest
   * component's diameter; LSH dup clusters are near-cliques (every
   * member collides with the canon in some band), so 2–4 rounds in
   * practice. For adversarial long-chain graphs the alternating
@@ -56,15 +57,15 @@ object ConnectedComponents {
   def hashMin(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 25, reliableCheckpoint: Boolean = false): DataFrame = {
     // r18 (VERDICT r17 "Next round" #6): the per-round lineage cut is
-    // LAZY on the local path — the convergence count below is the
-    // round's first action, so ONE job computes the round's join,
-    // persists the localCheckpoint blocks as a side effect of being a
-    // persisted RDD, and counts the chg flags; the former eager cut
-    // ran a separate materialization job (~2 stages) per round per CC
-    // gate. The reliable path stays eager: a lazy `checkpoint()`
-    // recomputes the frame a second time when writing the checkpoint
-    // dir (the classic RDD.checkpoint double-compute), which is worse
-    // than the job it saves.
+    // LAZY on the local path. Under AQE the cut call runs the round's
+    // shuffle stages (the join and min-aggregate exchanges); only the
+    // final stage is deferred, and the convergence count below runs it,
+    // persisting the localCheckpoint blocks and counting the chg flags
+    // in one job; the former eager cut ran a separate materialization
+    // job per round. The reliable path stays eager: a lazy
+    // `checkpoint()` recomputes the frame a second time when writing
+    // the checkpoint dir (the classic RDD.checkpoint double-compute),
+    // which is worse than the job it saves.
     def cutLazy(df: DataFrame): DataFrame =
       if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint(false)
     val fwd = edges.select(col(srcCol).cast("long").as("src"),
@@ -116,17 +117,24 @@ object ConnectedComponents {
     *   small-star: every node and its smaller neighbors re-point to m:
     *     SS(E) = { (v, m(u)) : v ∈ Γ(u), v < u } ∪ { (u, m(u)) }
     *
-    * At the fixpoint the edge set is a union of stars (member → min);
-    * fixpoint is detected by an order-independent checksum of the edge
-    * set (count + hash sum) over the checkpointed frame — one extra
-    * cheap scan, never a re-join. Returns (id, component), identical
+    * Each round is SS(LS(E)); a round never changes the components.
+    * The loop stops after the first round whose edge set is a star
+    * forest ([[isStarForest]]: every `src` has exactly one out-edge,
+    * `dst < src`, and no `dst` is also a `src`). A star forest is a
+    * fixpoint of both LS and SS, and each star's root is its
+    * component's minimum id, so the labels are final; the test is
+    * exact, so no hash collision can end the loop early. `maxIter`
+    * caps the rounds that run; if the last one still leaves a non-star
+    * edge set, the call throws. Returns (id, component), identical
     * labeling contract to [[hashMin]].
     */
   def largeStarSmallStar(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 20, reliableCheckpoint: Boolean = false): DataFrame = {
-    // lazy on the local path (the checksum scan is each round's first
-    // action and materializes the blocks — the hashMin rationale);
-    // eager on the reliable path (lazy checkpoint() double-computes)
+    // lazy on the local path: under AQE the cut runs the frame's
+    // shuffle stages at the call and defers only the final stage to the
+    // next action (the round's star-forest test, or the next round's
+    // cut), so no separate materialization job runs; eager on the
+    // reliable path (lazy checkpoint() double-computes)
     def cut(df: DataFrame): DataFrame =
       if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint(false)
     def neighbors(e: DataFrame): DataFrame =
@@ -149,28 +157,19 @@ object ConnectedComponents {
         .union(withM.select(col("src"), col("m").as("dst")))
         .filter(col("src") =!= col("dst")).distinct()
     }
-    def checksum(e: DataFrame): (Long, Long) = {
-      // bit_xor: order-independent, overflow-free under ANSI (a sum of
-      // xxhash64 values overflows long)
-      val r = e.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
 
-    val input = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val allNodes = cut(neighbors(input).select(col("src").as("id")).distinct())
-
-    var e = cut(input.distinct())
-    var prev = checksum(e)
+    // the edge lineage (in semanticDedup: bucket kernel, bucket
+    // self-join, payload joins, cosine verify) runs once, here; the
+    // node set and round 0 both read the cut
+    var e = cut(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .filter(col("src") =!= col("dst")).distinct())
+    val allNodes = neighbors(e).select(col("src").as("id")).distinct()
     var round = 0
     var converged = false
     while (!converged && round < maxIter) {
       e = cut(smallStar(largeStar(e)))
-      val cur = checksum(e)
-      converged = cur == prev
-      prev = cur
+      converged = isStarForest(e)
       round += 1
     }
     if (!converged)
@@ -182,5 +181,24 @@ object ConnectedComponents {
       .join(e.groupBy(col("src").as("id")).agg(min(col("dst")).as("root")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("root"), col("id")).as("comp"))
+  }
+
+  /** True when the directed edge set `e` (long columns `src`, `dst`,
+    * no self-loops) is a star forest pointing at its roots: every `src`
+    * has exactly one out-edge, `dst < src`, and no `dst` is also a
+    * `src`. One groupBy over the endpoints: per node, its out-degree,
+    * its total degree, and whether all of its out-edges point down. */
+  private[ops] def isStarForest(e: DataFrame): Boolean = {
+    val ends = e.select(col("src").as("n"), lit(1L).as("out"),
+        (col("dst") < col("src")).as("down"))
+      .union(e.select(col("dst").as("n"), lit(0L).as("out"), lit(true).as("down")))
+    ends.groupBy(col("n"))
+      .agg(sum(col("out")).as("out"), count(lit(1)).as("deg"),
+        bool_and(col("down")).as("down"))
+      // two out-edges; one out-edge and also some edge's dst; an edge
+      // pointing up
+      .filter(col("out") > 1 || (col("out") === 1 && col("deg") > 1) ||
+        !col("down"))
+      .isEmpty
   }
 }

@@ -32,6 +32,22 @@ class TextAnalysisSpec extends SparkSpec {
     assert(fpExpr == fpKernel)
   }
 
+  test("langFilterBulk rejects a non-string or missing text column at " +
+      "call time") {
+    val docs = Seq((1L, 7L, "the cat sat on the mat and the dog is with it"))
+      .toDF("doc_id", "n", "text")
+    val bad = intercept[IllegalArgumentException] {
+      TextAnalysis.langFilterBulk(docs, "n", "en")
+    }
+    assert(bad.getMessage.contains("'n'") && bad.getMessage.contains("bigint"),
+      bad.getMessage)
+    val missing = intercept[IllegalArgumentException] {
+      TextAnalysis.langFilterBulk(docs, "body", "en")
+    }
+    assert(missing.getMessage.contains("'body'"), missing.getMessage)
+    assert(TextAnalysis.langFilterBulk(docs, "text", "en").count() == 1)
+  }
+
   test("langId detects major languages from stopword profiles") {
     val samples = Seq(
       "the cat sat on the mat and the dog is with it",

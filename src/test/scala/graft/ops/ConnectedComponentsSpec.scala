@@ -67,6 +67,43 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(labels.forall(_._2 == 1L), "single chain must collapse to min id")
   }
 
+  test("largeStarSmallStar evaluates the edge lineage once") {
+    val seen = spark.sparkContext.longAccumulator("cc-edge-rows")
+    // nondeterministic: keeps the optimizer from copying the call into
+    // the self-loop filter, so each evaluation is one row read
+    val tick = udf { (a: Long) => seen.add(1); a }.asNondeterministic()
+    val rows = Seq((1L, 2L), (2L, 3L), (3L, 2L), (10L, 11L), (21L, 20L), (7L, 7L))
+    val edges = spark.sparkContext.parallelize(rows, 2).toDF("a", "b")
+      .select(tick(col("a")).as("a"), col("b"))
+    val l = ConnectedComponents.largeStarSmallStar(edges, "a", "b")
+      .as[(Long, Long)].collect().toMap
+    assert(l == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+      10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
+    assert(seen.value == rows.size,
+      s"edge rows evaluated ${seen.value} times for ${rows.size} input rows")
+  }
+
+  test("isStarForest accepts exactly the forests of stars pointing at " +
+      "smaller roots") {
+    def star(es: (Long, Long)*): Boolean =
+      ConnectedComponents.isStarForest(es.toDF("src", "dst"))
+    assert(star((2L, 1L), (3L, 1L), (9L, 1L), (5L, 4L)), "valid forest")
+    assert(star(), "empty edge set")
+    assert(!star((2L, 1L), (4L, 5L)), "dst > src")
+    assert(!star((3L, 1L), (3L, 2L)), "two out-edges")
+    assert(!star((3L, 2L), (2L, 1L)), "2-hop chain")
+  }
+
+  test("largeStarSmallStar returns a star forest's own labels and no " +
+      "labels for no edges") {
+    val forest = Seq((2L, 1L), (3L, 1L), (5L, 4L)).toDF("a", "b")
+    assert(ConnectedComponents.largeStarSmallStar(forest, "a", "b")
+      .as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L))
+    val none = Seq.empty[(Long, Long)].toDF("a", "b")
+    assert(ConnectedComponents.largeStarSmallStar(none, "a", "b").isEmpty)
+  }
+
   test("reliableCheckpoint variant produces identical labels") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)

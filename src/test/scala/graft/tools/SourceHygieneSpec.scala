@@ -150,6 +150,49 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(dead.isEmpty, s"allowlist rows with no remaining pair filter: $dead")
   }
 
+  /** owner (a file, or a directory ending in `/`) → (max environment
+    * reads, why that code may read the environment). Engine paths take
+    * their settings from parameters and Spark confs; a dev-only env
+    * knob in an engine path changes behavior that no caller, spec or
+    * plan can see. Extend ONLY with an entry point or a read of a
+    * deployment setting Spark itself defines. */
+  private val envAllowlist: Map[String, (Int, String)] = Map(
+    "Bench.scala" -> (6,
+      "benchmark main — fixture dir, cores, passes, scan split floor, " +
+        "output dir and commit flag come from its launcher"),
+    "Verify.scala" -> (3,
+      "verify main — cores, scan split floor and the gate filter come " +
+        "from its launcher"),
+    "tools/" -> (Int.MaxValue,
+      "diagnostic mains, configured from the environment by design"),
+    "llmops/Dedup.scala" -> (1,
+      "transient-disk guard falls back to SPARK_LOCAL_DIRS, the " +
+        "deployment setting Spark itself reads for shuffle space, when " +
+        "spark.local.dir is unset"))
+
+  test("environment reads confined to entry points and the documented " +
+      "deployment settings") {
+    val needles = Seq("sys.env", "System.getenv")
+    val hits = scalaFiles(mainRoot).flatMap { p =>
+      val rel = mainRoot.relativize(p).toString
+      val text = new String(Files.readAllBytes(p))
+      val n = needles.map(s => text.sliding(s.length).count(_ == s)).sum
+      if (n > 0) Some((if (rel.startsWith("tools/")) "tools/" else rel) -> n)
+      else None
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+    val violations = hits.collect {
+      case (f, n) if !envAllowlist.contains(f) =>
+        s"$f reads the environment $n time(s) but is not allowlisted — " +
+          "take the setting as a parameter or a Spark conf"
+      case (f, n) if n > envAllowlist(f)._1 =>
+        s"$f reads the environment $n times, allowlist caps it at " +
+          s"${envAllowlist(f)._1}"
+    }
+    assert(violations.isEmpty, violations.mkString("; "))
+    val dead = envAllowlist.keySet -- hits.keySet
+    assert(dead.isEmpty, s"allowlist rows with no remaining env read: $dead")
+  }
+
   test(".collect() confined to the documented bounded allowlist") {
     val hits = scalaFiles(mainRoot).flatMap { p =>
       val rel = mainRoot.relativize(p).toString
