@@ -150,7 +150,7 @@ object ScaleCorpus {
     * deterministic; `label` is the planted cluster id, so recall
     * probes can score cluster-mate precision directly. */
   /** Planted near-dup DOC pairs at controlled shingle Jaccard (r13,
-    * for tools/MinhashRecallProbe): each pair is two `tokensPerDoc`-
+    * SCALE.md MinHash banding recall): each pair is two `tokensPerDoc`-
     * token docs over a pair-unique vocabulary, the B side with its
     * first `m` tokens replaced by pair-unique substitutes. For
     * 2-shingles and m < L−1 the exact Jaccard is CLOSED-FORM:

@@ -439,7 +439,7 @@ object Dedup {
   /** The candidate stage of [[prefixFilterJoin]], extracted (r12) so
     * scale diagnostics can measure candidate volume counts-only
     * without materializing the verify exchange (the stage that needs
-    * ~540 GiB of shuffle at 1000× — tools/PrefixCandDiag). Returns the
+    * ~540 GiB of shuffle at 1000×, SCALE.md r12). Returns the
     * grouped, fully PPJoin-filtered candidates (id_a, id_b, n_a, n_b)
     * when `grouped` (the operator's input to verify); `grouped = false`
     * returns the RAW prefix-join matches before the pair aggregation —

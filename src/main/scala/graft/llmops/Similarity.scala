@@ -514,8 +514,8 @@ object Similarity {
     * fixed-bucket-space mistake as fixed nPlanes — candidate volume
     * per self-top-k is n·nProbe·(n/nCells), quadratic by arithmetic
     * once cells stop scaling — while occupancy-held cells keep it
-    * n·nProbe·occ, linear. Recall under cell scaling is measured by
-    * tools/IvfRecallProbe (nProbe is the recovery knob; unlike
+    * n·nProbe·occ, linear. Recall under cell scaling: SCALE.md "r12
+    * IVF recall at scale" (nProbe is the recovery knob; unlike
     * sign-LSH's table count it multiplies a BOUNDED per-query cost,
     * so holding recall at scale is cheap here). */
   def ivfCellsFor(corpusSize: Long, targetOccupancy: Long = 256): Int = {
@@ -528,7 +528,7 @@ object Similarity {
     * holds candidate volume linear by raising nPlanes with the corpus —
     * which silently shrinks per-table collision probability p^nPlanes
     * (p = 1 − θ/π for a pair at angle θ), so recall at FIXED nTables
-    * decays as the corpus grows (measured, tools/LshRecallProbe on the
+    * decays as the corpus grows (SCALE.md "r12 recall at scale", the
     * planted-cluster fixture: dup-grade cos≥0.9 recall 0.998 at 500
     * vectors → 0.855 at 50k with 8 tables; the derived count — 12 —
     * restores 0.943).

@@ -371,8 +371,8 @@ object FmRanker {
     * broadcast joins against the tiny coefficient dims, keyed aggs on
     * (user, repo[, f]), then rank-by-score ≤ k — every exchange keyed
     * by pair or user, so throughput is linear in feature entries at
-    * any corpus size (FmScaleProbe measures the exponent). Extracted
-    * so scale probes drive the REAL operator, not a twin. */
+    * any corpus size (exponent: SCALE.md "r13 FM apply path").
+    * Extracted so scale probes drive the REAL operator, not a twin. */
   def scoreEntries(sp: DataFrame, mo: DataFrame): DataFrame = {
     val interceptQ = {
       val w0 = mo.select(col("intercept")).head().getDouble(0)

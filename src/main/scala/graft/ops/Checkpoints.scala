@@ -42,10 +42,14 @@ object Checkpoints {
     * last stage, persisting its blocks. Use when the caller's next
     * action already scans every row (e.g. a convergence count), so
     * that one job both materializes the blocks and computes the
-    * answer. */
+    * answer. The reliable `checkpoint()` branch is eager whatever
+    * `eager` says: a lazy `checkpoint()` computes the frame once for
+    * the action and again when writing the checkpoint dir (the RDD
+    * checkpoint double-compute), which costs more than the job it
+    * saves. */
   def cut(df: DataFrame, eager: Boolean): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    if (!isLocal(df) && sc.getCheckpointDir.isDefined) df.checkpoint(eager)
+    if (!isLocal(df) && sc.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint(eager)
   }
 }

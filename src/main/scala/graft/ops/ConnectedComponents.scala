@@ -32,12 +32,10 @@ import org.apache.spark.sql.functions._
   * form is kept here because dedup graphs are shallow and the simpler
   * plan wins — and if the cap is ever hit on a deeper graph the loop
   * now THROWS instead of silently returning non-converged labels
-  * (ADVICE r2). Lineage is cut every round, else the iterated join
-  * plan grows unboundedly and re-optimizes from scratch each action;
-  * `reliableCheckpoint = true` writes rounds to the configured
-  * checkpoint dir so an executor loss on a real cluster cannot kill
-  * truncated lineage (localCheckpoint blocks are memory/disk-local to
-  * the executor that wrote them).
+  * (ADVICE r2). Lineage is cut every round through
+  * [[Checkpoints.cut]], else the iterated join plan grows unboundedly
+  * and re-optimizes from scratch each action; the deployment picks
+  * local or reliable cuts there, as for every other cut site.
   */
 object ConnectedComponents {
 
@@ -48,59 +46,52 @@ object ConnectedComponents {
     * @param edges   two long-typed columns naming an undirected edge
     * @param maxIter hard round cap; if hit while labels are still
     *                changing, throws IllegalStateException rather than
-    *                returning wrong (non-converged) components
-    * @param reliableCheckpoint cut lineage via `checkpoint()` (needs
-    *                `sparkContext.setCheckpointDir`) instead of
-    *                `localCheckpoint()`; use on real clusters where an
-    *                executor loss must not lose truncated lineage
+    *                returning wrong (non-converged) components; the
+    *                cached adjacency is released either way
     */
   def hashMin(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 25, reliableCheckpoint: Boolean = false): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     // r18 (VERDICT r17 "Next round" #6): the per-round lineage cut is
-    // LAZY on the local path. Under AQE the cut call runs the round's
-    // shuffle stages (the join and min-aggregate exchanges); only the
-    // final stage is deferred, and the convergence count below runs it,
-    // persisting the localCheckpoint blocks and counting the chg flags
-    // in one job; the former eager cut ran a separate materialization
-    // job per round. The reliable path stays eager: a lazy
-    // `checkpoint()` recomputes the frame a second time when writing
-    // the checkpoint dir (the classic RDD.checkpoint double-compute),
-    // which is worse than the job it saves.
-    def cutLazy(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint(false)
+    // LAZY. Under AQE the cut call runs the round's shuffle stages (the
+    // join and min-aggregate exchanges); only the final stage is
+    // deferred, and the convergence count below runs it, persisting the
+    // cut's blocks and counting the chg flags in one job; the former
+    // eager cut ran a separate materialization job per round.
+    def cutLazy(df: DataFrame): DataFrame = Checkpoints.cut(df, eager = false)
     val fwd = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     val adj = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
       .distinct().cache()
-
-    var labels = cutLazy(adj.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
     var changed = 1L
-    var round = 0
-    while (changed > 0 && round < maxIter) {
-      // min label among each node's neighbors this round
-      val nbrMin = adj.join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("comp")).as("nbr_min"))
-      // the changed flag rides along in the lazily-checkpointed result:
-      // the convergence count is the action that materializes the
-      // round's blocks, so the join executes exactly once per round and
-      // no separate checkpoint job runs
-      val next = cutLazy(labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"),
-          (coalesce(col("nbr_min"), col("comp")) < col("comp")).as("chg")))
-      changed = next.filter(col("chg")).count()
-      labels = next.select(col("id"), col("comp"))
-      round += 1
-    }
-    adj.unpersist()
+    val comps = try {
+      var labels = cutLazy(adj.select(col("src").as("id")).distinct()
+        .withColumn("comp", col("id")))
+      var round = 0
+      while (changed > 0 && round < maxIter) {
+        // min label among each node's neighbors this round
+        val nbrMin = adj.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+          .groupBy(col("dst").as("id"))
+          .agg(min(col("comp")).as("nbr_min"))
+        // the changed flag rides along in the lazily-checkpointed result:
+        // the convergence count is the action that materializes the
+        // round's blocks, so the join executes exactly once per round and
+        // no separate checkpoint job runs
+        val next = cutLazy(labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"),
+            (coalesce(col("nbr_min"), col("comp")) < col("comp")).as("chg")))
+        changed = next.filter(col("chg")).count()
+        labels = next.select(col("id"), col("comp"))
+        round += 1
+      }
+      labels
+    } finally adj.unpersist()
     if (changed > 0)
       throw new IllegalStateException(
         s"hashMin did not converge in $maxIter rounds ($changed labels still " +
           "changing) — component diameter exceeds the cap; raise maxIter or " +
           "switch to largeStarSmallStar for deep graphs")
-    labels
+    comps
   }
 
   /** Alternating large-star/small-star connected components (Kiveris,
@@ -129,14 +120,12 @@ object ConnectedComponents {
     * labeling contract to [[hashMin]].
     */
   def largeStarSmallStar(edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 20, reliableCheckpoint: Boolean = false): DataFrame = {
-    // lazy on the local path: under AQE the cut runs the frame's
-    // shuffle stages at the call and defers only the final stage to the
-    // next action (the round's star-forest test, or the next round's
-    // cut), so no separate materialization job runs; eager on the
-    // reliable path (lazy checkpoint() double-computes)
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint() else df.localCheckpoint(false)
+      maxIter: Int = 20): DataFrame = {
+    // lazy: under AQE the cut runs the frame's shuffle stages at the
+    // call and defers only the final stage to the next action (the
+    // round's star-forest test, or the next round's cut), so no
+    // separate materialization job runs
+    def cut(df: DataFrame): DataFrame = Checkpoints.cut(df, eager = false)
     def neighbors(e: DataFrame): DataFrame =
       e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     def minOfClosedNbr(nb: DataFrame): DataFrame =

@@ -34,8 +34,8 @@ object ContentRecommender {
     * discriminative value nil — so pruning it is the IR-correct move,
     * not an approximation knob. The cap binds only past ~10⁶ docs
     * (every driver gate corpus is far below it → gate hashes
-    * unchanged); tools/TfidfHotTokenProbe measures it binding at the
-    * amplified scale. */
+    * unchanged); SCALE.md "r16 raw TF-IDF index hot-token leg"
+    * measures it binding at the amplified scale. */
   val TfidfStopDf: Long = 1000000L
 
   /** L2-normalized tf·idf term weights: (id, term, w).

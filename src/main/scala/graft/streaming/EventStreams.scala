@@ -233,12 +233,12 @@ object EventStreams {
           // a session can still grow only if a later event could merge
           // into it, i.e. wm < lastUs+gap. Boundaries probed on Spark
           // 4.1: batch session_window's merge comparator is INCLUSIVE
-          // (tools/GapBoundaryProbe — mergeSorted's `<=` matches), the
-          // built-in streaming aggregation evicts at wm == lastUs+gap
-          // (tools/WmEdgeProbe — strict `>` here matches), and a row at
-          // ts == wm never reaches this function anyway: the operator's
-          // own late filter drops it (tools/SessionEdgeTrace), so only
-          // rows strictly above the watermark can arrive.
+          // (mergeSorted's `<=` matches), the built-in streaming
+          // aggregation evicts at wm == lastUs+gap (strict `>` here
+          // matches), and a row at ts == wm never reaches this function
+          // anyway: the operator's own late filter drops it (all three
+          // in NOTES_r5.md §12), so only rows strictly above the
+          // watermark can arrive.
           val (open, done) = merged.partition(s => s.lastUs + gapUs > wmUs)
           if (open.nonEmpty) {
             state.update(SessionBuf(open))

@@ -123,7 +123,7 @@ class ScaleCorpusSpec extends SparkSpec {
   }
 
   test("plantedDocPairs: closed-form 2-shingle Jaccard holds exactly (r13)") {
-    // the MinhashRecallProbe's ground truth: J = (L-1-m)/(L-1+m) for a
+    // SCALE.md's MinHash-recall ground truth: J = (L-1-m)/(L-1+m) for a
     // pair whose B side replaces the first m of L tokens — verified
     // against the operator's own exactJaccard, not re-derived by hand
     val L = 50

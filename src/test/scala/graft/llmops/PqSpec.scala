@@ -97,13 +97,13 @@ class PqSpec extends SparkSpec {
     assert(recall >= 0.18, s"ADC recall@10 $recall below measured band")
   }
 
-  /** The measured recall@5 CURVE from SCALE.md §r9 (PqRecallProbe,
-    * VERDICT r8 #5): operating-point floors sit just under the
-    * observed values (0.200 at m=8/k=16; 0.375 at m=16/k=16;
-    * IVF-PQ 0.094→0.213 over nProbe 1→8), and the FAISS-shaped
-    * monotonicity relations — finer quantization and more probes
-    * recall strictly more — hold structurally across fixture
-    * regenerations where any point value could drift. */
+  /** The measured recall@5 CURVE from SCALE.md §r9 (VERDICT r8 #5):
+    * operating-point floors sit just under the observed values
+    * (0.200 at m=8/k=16; 0.375 at m=16/k=16; IVF-PQ 0.094→0.213
+    * over nProbe 1→8), and the FAISS-shaped monotonicity relations
+    * — finer quantization and more probes recall strictly more — hold
+    * structurally across fixture regenerations where any point value
+    * could drift. */
   test("recall@5 follows the measured (m, k, nProbe) curve") {
     import spark.implicits._
     val nq = 32

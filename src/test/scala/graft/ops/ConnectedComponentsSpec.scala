@@ -1,7 +1,11 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -104,17 +108,36 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(ConnectedComponents.largeStarSmallStar(none, "a", "b").isEmpty)
   }
 
-  test("reliableCheckpoint variant produces identical labels") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
+  test("hashMin releases its cached adjacency when it throws") {
+    // hashMin's adjacency plan, rebuilt: the session's CacheManager
+    // finds an entry for it while hashMin's cache() is registered
+    def cached(e: DataFrame): Boolean = {
+      val fwd = e.select(col("a").cast("long").as("src"),
+        col("b").cast("long").as("dst"))
+      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+        .distinct().storageLevel != StorageLevel.NONE
+    }
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
+    intercept[IllegalStateException] {
+      ConnectedComponents.hashMin(chain, "a", "b", maxIter = 1)
+    }
+    assert(!cached(chain), "non-converged call kept adj cached")
+    // a round that throws after adj is cached: an optimizer rule fails
+    // the first plan with a join, i.e. round 1's neighbor-min join
+    object FailJoins extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan =
+        if (plan.exists(_.isInstanceOf[Join]))
+          throw new UnsupportedOperationException("round failed")
+        else plan
+    }
+    val experimental = spark.asInstanceOf[classic.SparkSession].experimental
+    experimental.extraOptimizations = Seq(FailJoins)
     try {
-      val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (21L, 20L)).toDF("a", "b")
-      val l = ConnectedComponents
-        .hashMin(edges, "a", "b", reliableCheckpoint = true)
-        .as[(Long, Long)].collect().toMap
-      assert(l == Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
-        10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L))
-    } finally spark.sparkContext.setCheckpointDir(null)
+      val e = intercept[Exception](ConnectedComponents.hashMin(chain, "a", "b"))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage == "round failed"), e)
+    } finally experimental.extraOptimizations = Nil
+    assert(!cached(chain), "failed round kept adj cached")
   }
 
   test("edge direction and duplicates are irrelevant") {

@@ -32,8 +32,8 @@ class BucketedJoinSpec extends SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val joined = ord.join(cust, $"o_custkey" === $"c_custkey")
         .select($"o_orderkey", $"c_mktsegment")
-      // execute, then read the FINAL adaptive plan (the Sf1Bench
-      // discipline: pre-execution AQE plans are guesses)
+      // execute, then read the FINAL adaptive plan (SCALE.md r13 sf1
+      // leg: pre-execution AQE plans are guesses)
       joined.queryExecution.toRdd.foreach(_ => ())
       val plan = joined.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)

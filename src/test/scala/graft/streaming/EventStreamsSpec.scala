@@ -181,12 +181,12 @@ class EventStreamsSpec extends SparkSpec {
       "MERGES (inclusive comparator, matching batch session_window)") {
     def us(baseUs: Long, m: Long) = baseUs + m * 60000000L
     // Boundary probed on Spark 4.1: batch session_window merges an
-    // event exactly gap after the previous one (tools/GapBoundaryProbe)
+    // event exactly gap after the previous one (NOTES_r5.md §12)
     // — the merge comparator is INCLUSIVE, so the custom sessionizer's
     // `<=` must match; a strict `<` would split [0] and [30] here.
     // (An event at ts == watermark is a separate, moot boundary:
     // flatMapGroupsWithState + EventTimeTimeout drops it before the
-    // state function runs — tools/SessionEdgeTrace — so this fixture
+    // state function runs — NOTES_r5.md §12 — so this fixture
     // keeps the late event strictly above the watermark.)
     // wave 1: u1@0, u2@35 -> wm 25. wave 2: u1@30 (legal: 30 > wm 25,
     // exactly gap 30 after u1@0) must MERGE; u3@100 -> wm 90 closes all.

@@ -17,7 +17,7 @@ import graft.SparkSpec
   * statistic is width/load-sensitive BY MECHANISM, not by plan:
   * peakExecutionMemory of a pool-greedy consumer reads as min(need,
   * pool/(2·activeTasks)), Spark's guaranteed-share grant. Measured
-  * (r17, tools/Q90MemProbe): q90's max stage peak is 518.7 MB at
+  * (NOTES_r17.md, VERDICT r16 #1): q90's max stage peak is 518.7 MB at
   * local[4] = exactly pool/8 (the 4-active share of the ~4.15 GB
   * pool), 70.7 MB at a quiet local[32] (= the pool/64 share), and the
   * loaded r16 driver run at local[32] reproduced 518.7 exactly —

@@ -87,13 +87,9 @@ class SourceHygieneSpec extends AnyFunSuite {
       "to the documented bounded allowlist") {
     val needle = "Window.orderBy"
     val hits = scalaFiles(mainRoot).flatMap { p =>
-      val rel = mainRoot.relativize(p).toString
-      if (rel.startsWith("tools/")) None
-      else {
-        val n = new String(Files.readAllBytes(p))
-          .sliding(needle.length).count(_ == needle)
-        if (n > 0) Some(rel -> n) else None
-      }
+      val n = new String(Files.readAllBytes(p))
+        .sliding(needle.length).count(_ == needle)
+      if (n > 0) Some(mainRoot.relativize(p).toString -> n) else None
     }.toMap
     val violations = hits.collect {
       case (f, n) if !globalWindowAllowlist.contains(f) =>
@@ -150,12 +146,12 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(dead.isEmpty, s"allowlist rows with no remaining pair filter: $dead")
   }
 
-  /** owner (a file, or a directory ending in `/`) → (max environment
-    * reads, why that code may read the environment). Engine paths take
-    * their settings from parameters and Spark confs; a dev-only env
-    * knob in an engine path changes behavior that no caller, spec or
-    * plan can see. Extend ONLY with an entry point or a read of a
-    * deployment setting Spark itself defines. */
+  /** file → (max environment reads, why that code may read the
+    * environment). Engine paths take their settings from parameters
+    * and Spark confs; a dev-only env knob in an engine path changes
+    * behavior that no caller, spec or plan can see. Extend ONLY with
+    * an entry point or a read of a deployment setting Spark itself
+    * defines. */
   private val envAllowlist: Map[String, (Int, String)] = Map(
     "Bench.scala" -> (6,
       "benchmark main — fixture dir, cores, passes, scan split floor, " +
@@ -163,8 +159,6 @@ class SourceHygieneSpec extends AnyFunSuite {
     "Verify.scala" -> (3,
       "verify main — cores, scan split floor and the gate filter come " +
         "from its launcher"),
-    "tools/" -> (Int.MaxValue,
-      "diagnostic mains, configured from the environment by design"),
     "llmops/Dedup.scala" -> (1,
       "transient-disk guard falls back to SPARK_LOCAL_DIRS, the " +
         "deployment setting Spark itself reads for shuffle space, when " +
@@ -174,12 +168,10 @@ class SourceHygieneSpec extends AnyFunSuite {
       "deployment settings") {
     val needles = Seq("sys.env", "System.getenv")
     val hits = scalaFiles(mainRoot).flatMap { p =>
-      val rel = mainRoot.relativize(p).toString
       val text = new String(Files.readAllBytes(p))
       val n = needles.map(s => text.sliding(s.length).count(_ == s)).sum
-      if (n > 0) Some((if (rel.startsWith("tools/")) "tools/" else rel) -> n)
-      else None
-    }.groupMapReduce(_._1)(_._2)(_ + _)
+      if (n > 0) Some(mainRoot.relativize(p).toString -> n) else None
+    }.toMap
     val violations = hits.collect {
       case (f, n) if !envAllowlist.contains(f) =>
         s"$f reads the environment $n time(s) but is not allowlisted — " +
@@ -194,15 +186,11 @@ class SourceHygieneSpec extends AnyFunSuite {
   }
 
   test(".collect() confined to the documented bounded allowlist") {
+    val needle = ".collect()"
     val hits = scalaFiles(mainRoot).flatMap { p =>
-      val rel = mainRoot.relativize(p).toString
-      if (rel.startsWith("tools/")) None // diagnostic mains, driver-side
-      else {
-        val needle = ".collect()"
-        val n = new String(Files.readAllBytes(p))
-          .sliding(needle.length).count(_ == needle)
-        if (n > 0) Some(rel -> n) else None
-      }
+      val n = new String(Files.readAllBytes(p))
+        .sliding(needle.length).count(_ == needle)
+      if (n > 0) Some(mainRoot.relativize(p).toString -> n) else None
     }.toMap
     val violations = hits.collect {
       case (f, n) if !collectAllowlist.contains(f) =>
@@ -215,5 +203,31 @@ class SourceHygieneSpec extends AnyFunSuite {
     // prune dead allowlist rows so the list stays honest
     val dead = collectAllowlist.keySet -- hits.keySet
     assert(dead.isEmpty, s"allowlist rows with no remaining collect: $dead")
+  }
+
+  /** file → who runs its `main`. `src/main` holds the engine and the
+    * entry points something calls; a one-off probe main that nothing
+    * runs belongs in a scratch checkout, not in every build. Extend
+    * ONLY with a main that code, a spec or a script invokes. */
+  private val entryPointAllowlist: Map[String, String] = Map(
+    "Verify.scala" -> ("the gate sweep: dumps every registry query for " +
+      "tools/check.py"),
+    "Bench.scala" -> "the per-gate timing sweep, `sbt runMain graft.Bench`",
+    "tools/ExplainAudit.scala" -> ("PlanAuditSpec runs its auditGates " +
+      "core; the main is the same audit from the command line"),
+    "tools/OracleDump.scala" -> "perfbench/tests/test_reference.py",
+    "tools/DumpOne.scala" -> ("single-gate companion of OracleDump for " +
+      "tools/check.py"))
+
+  test("main entry points confined to the allowlist of called mains") {
+    val needle = "def main("
+    val hits = scalaFiles(mainRoot).filter(p =>
+      new String(Files.readAllBytes(p)).contains(needle))
+      .map(p => mainRoot.relativize(p).toString).toSet
+    val violations = hits -- entryPointAllowlist.keySet
+    assert(violations.isEmpty, s"mains that no allowlisted caller runs: " +
+      s"${violations.mkString(", ")} — delete the probe or name its caller")
+    val dead = entryPointAllowlist.keySet -- hits
+    assert(dead.isEmpty, s"allowlist rows with no remaining main: $dead")
   }
 }
