@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Bucketed candidate generation — the one partition-and-verify core
   * under every near-duplicate and ANN family in this package (MinHash
-  * bands, SimHash blocks, sign-LSH tables; native and portable twins
-  * alike). A family supplies its hash kernel as `(id, tbl, key)` bucket
+  * bands, SimHash blocks, sign-LSH tables). A family supplies its hash kernel as `(id, tbl, key)` bucket
   * rows and its own verify expression; everything between the two is
   * here, so skew and performance work lands once for all of them.
   *

@@ -142,146 +142,37 @@ object Dedup {
         i => array_join(slice(toks, i + 1, lit(k)), " "))))
   }
 
-  /** Deterministic per-seed mixing constants (splitmix64 stream). */
-  private def mixConstants(numHashes: Int): Array[(Long, Long)] = {
-    var x = 0x9E3779B97F4A7C15L
-    def next(): Long = {
-      x += 0x9E3779B97F4A7C15L
-      var z = x
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
+  /** Distinct k-word shingles of one text: lowercased whitespace
+    * tokens, each run of k joined by a space; a text of fewer than k
+    * tokens is one shingle. The typed kernel behind [[shingleSets]] and
+    * [[portableSignatures]] (the HOF `shingles` expression is
+    * interpreted — fine per-row, slow in bulk). */
+  private def shingleSet(text: String,
+      k: Int): scala.collection.mutable.HashSet[String] = {
+    val toks = Option(text).getOrElse("").toLowerCase
+      .split("\\s+").filter(_.nonEmpty)
+    val set = new scala.collection.mutable.HashSet[String]
+    if (toks.length < k) set += toks.mkString(" ")
+    else {
+      var i = 0
+      while (i + k <= toks.length) {
+        set += toks.slice(i, i + k).mkString(" ")
+        i += 1
+      }
     }
-    Array.fill(numHashes)((next() | 1L, next()))
+    set
   }
-
-  /** Bulk MinHash signatures via a typed per-row kernel: one string
-    * hash per shingle, then numHashes cheap integer mixes — the
-    * imperative escape hatch (SURVEY.md preference (d)), justified
-    * because the HOF formulation falls back to interpreted eval.
-    * Output: (id, sig array<long>). */
-  def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int, numHashes: Int): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val consts = mixConstants(numHashes)
-    docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = Option(text).getOrElse("").toLowerCase
-          .split("\\s+").filter(_.nonEmpty)
-        val shingleSet = new scala.collection.mutable.HashSet[String]
-        if (toks.length < shingleK) shingleSet += toks.mkString(" ")
-        else {
-          var i = 0
-          while (i + shingleK <= toks.length) {
-            shingleSet += toks.slice(i, i + shingleK).mkString(" ")
-            i += 1
-          }
-        }
-        val sig = Array.fill(numHashes)(Long.MaxValue)
-        shingleSet.foreach { s =>
-          val h = scala.util.hashing.MurmurHash3.stringHash(s).toLong
-          var j = 0
-          while (j < numHashes) {
-            val v = h * consts(j)._1 + consts(j)._2
-            if (v < sig(j)) sig(j) = v
-            j += 1
-          }
-        }
-        (id, sig)
-      }.toDF("id", "sig")
-  }
-
-  /** Bulk banding kernel over (id, sig) rows → (id, band, band_hash):
-    * the signature cut into `bands` slices of `rowsPerBand` values,
-    * each slice hashed. Docs sharing any band bucket are candidate
-    * pairs. The bucket hash only needs to be equality-preserving on
-    * band slices (it never leaves the query), so a cheap FNV-over-longs
-    * mix suffices. */
-  def bandRows(withSig: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
-    val spark = withSig.sparkSession
-    import spark.implicits._
-    withSig.select(col("id"), col("sig")).as[(Long, Array[Long])]
-      .flatMap { case (id, sig) =>
-        (0 until bands).iterator.map { b =>
-          var h = -3750763034362895579L // FNV-1a offset basis
-          var j = b * rowsPerBand
-          val end = j + rowsPerBand
-          while (j < end) {
-            var v = sig(j)
-            var k = 0
-            while (k < 8) { // byte-wise FNV over the long
-              h = (h ^ (v & 0xFF)) * 1099511628211L
-              v >>>= 8
-              k += 1
-            }
-            j += 1
-          }
-          (id, b, h)
-        }
-      }.toDF("id", "band", "band_hash")
-  }
-
-  /** Full MinHash-LSH near-dup candidate pipeline: band buckets through
-    * [[BucketPairs]], then the signature-estimated Jaccard verify.
-    *
-    * @param maxBucketSize the [[BucketPairs]] flood cap per band bucket;
-    *        None (default) preserves exact recall.
-    * @return (id_a, id_b, est_jaccard) for candidate pairs with
-    *         signature-estimated Jaccard ≥ threshold, id_a < id_b.
-    */
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-      shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
-      threshold: Double = 0.5, maxBucketSize: Option[Int] = None): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
-    val withSig = minhashSignatures(docs, idCol, textCol, shingleK, numHashes)
-      .cache()
-    bandPairs(withSig, bandRows(withSig, bands, rowsPerBand)
-        .select(col("id"), col("band").as("tbl"), col("band_hash").as("key")),
-      numHashes, threshold, maxBucketSize)
-  }
-
-  /** The MinHash-LSH tail shared by the native and portable families:
-    * band-bucket candidates from [[BucketPairs]] (`banded` is
-    * (id, tbl = band, key = band key)), verified by the fraction of
-    * agreeing signature slots. Output (id_a, id_b, est_jaccard),
-    * unrounded. */
-  private def bandPairs(withSig: DataFrame, banded: DataFrame,
-      numHashes: Int, threshold: Double, cap: Option[Int]): DataFrame =
-    BucketPairs.withPayload(BucketPairs(banded, ascending = true, cap = cap),
-        withSig, "sig")
-      .withColumn("est_jaccard",
-        aggregate(zip_with(col("sig_a"), col("sig_b"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / numHashes)
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("est_jaccard"))
 
   // ---- n-gram Jaccard (exact verification) ------------------------
 
-  /** Bulk shingle sets via the same typed kernel as
-    * [[minhashSignatures]] (the HOF `shingles` expression is
-    * interpreted — fine per-row, slow in bulk). */
+  /** Bulk shingle sets, (id, sh: sorted array<string>). */
   def shingleSets(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = Option(text).getOrElse("").toLowerCase
-          .split("\\s+").filter(_.nonEmpty)
-        val set = new scala.collection.mutable.HashSet[String]
-        if (toks.length < shingleK) set += toks.mkString(" ")
-        else {
-          var i = 0
-          while (i + shingleK <= toks.length) {
-            set += toks.slice(i, i + shingleK).mkString(" ")
-            i += 1
-          }
-        }
-        (id, set.toArray.sorted)
-      }.toDF("id", "sh")
+      .map { case (id, text) => (id, shingleSet(text, shingleK).toArray.sorted) }
+      .toDF("id", "sh")
   }
 
   /** Exact Jaccard over k-word shingle sets for given candidate pairs.
@@ -598,8 +489,8 @@ object Dedup {
         f"~${budget / 1e9}%.0f GB of local shuffle capacity — the exact " +
         "similarity join is a CLUSTER operator at this corpus size (its " +
         "candidate volume is measured-linear; the wall is single-box disk). " +
-        "Alternatives on one box: minhashCandidates / " +
-        "minhashCandidatesPortable (the approximate family member), a " +
+        "Alternatives on one box: minhashCandidatesPortable (the " +
+        "approximate family member), a " +
         "champion-capped similarity (ContentRecommender.similarDocsPrefix), " +
         "or a higher threshold. To proceed anyway: diskGuard = false, or " +
         "set graft.exactJoin.diskBudgetBytes to the capacity you actually " +
@@ -823,61 +714,15 @@ object Dedup {
 
   // ---- SimHash -----------------------------------------------------
 
-  /** 64-bit SimHash over normalized tokens (Charikar 2002): sum ±1 per
-    * bit weighted by token frequency, sign → bit. Expressed as 64
-    * bit-position aggregates over the token array. */
-  def simhash64(text: Column): Column =
-    simhash64FromHashes(transform(
-      TextAnalysis.tokens(TextAnalysis.normalize(text)), t => xxhash64(t)))
-
-  /** SimHash from a pre-materialized token-hash array. Callers doing
-    * bulk work should project the hash array in its own select first —
-    * the 64 bit-aggregates each reference it, and fusing them with the
-    * tokenize would recompute tokenization 64×. */
-  def simhash64FromHashes(hashes: Column): Column =
-    // for each bit i: sum over tokens of (bit set ? +1 : -1); bit i of
-    // result = (sum > 0). Bit loop unrolled at plan-build time (Int
-    // shift counts) — 64 array-aggregates, all inside codegen.
-    (0 until 64).map { i =>
-      val bitSum = aggregate(hashes, lit(0L),
-        (s, h) => s + when(shiftright(h, i).bitwiseAND(1) === 1, 1L).otherwise(-1L))
-      when(bitSum > 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  /** Hamming distance between two 64-bit simhashes (popcount of XOR via
+  /** Hamming distance between two simhashes (popcount of XOR via
     * binary-string trick — dialect-portable). */
   def hamming64(a: Column, b: Column): Column =
     length(regexp_replace(bin(a.bitwiseXOR(b)), "0", "")).cast("int")
 
-  /** Bulk SimHash via typed kernel (64 interpreted bit-aggregates per
-    * row are too slow in bulk; the column form [[simhash64]] remains for
-    * single-expression use). Token hash: splitmix64-avalanched
-    * String.hashCode. */
-  def simhashes(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = Option(text).getOrElse("").toLowerCase
-          .split("\\s+").filter(_.nonEmpty)
-        val counts = new Array[Long](64)
-        toks.foreach { t =>
-          var z = t.hashCode.toLong + 0x9E3779B97F4A7C15L
-          z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-          z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-          z = z ^ (z >>> 31)
-          var b = 0
-          while (b < 64) {
-            if (((z >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
-            b += 1
-          }
-        }
-        var out = 0L
-        var b = 0
-        while (b < 64) { if (counts(b) > 0) out |= (1L << b); b += 1 }
-        (id, out)
-      }.toDF("id", "sh")
-  }
+  /** Width of each of `k` contiguous blocks of the 60-bit
+    * [[simhashes60Portable]] code, as even as possible (wider first). */
+  private def blockWidths(k: Int): Seq[Int] =
+    Seq.tabulate(k)(i => 60 / k + (if (i < 60 % k) 1 else 0))
 
   /** The occupancy-preserving (kBlocks, keyBlocks) for a corpus — the
     * [[graft.llmops.Similarity.lshPlanesFor]] discipline applied to
@@ -896,10 +741,10 @@ object Dedup {
     * conservative key width is the sum of the `keyBlocks` SMALLEST
     * block widths, and the occupancy test is a shift-divide —
     * `(n-1) >> keyBits < occ` — so the derivation is exact arithmetic
-    * any replay reproduces. Ladder at radius 3, occupancy 32:
-    * (4,1) ≤ 2.1M docs · 4 tables; (5,2) ≤ 1.07B · 10 tables;
-    * (6,3) ≤ 68B · 20 tables; (7,4) ≤ 2.2T · 35 tables. Table count
-    * grows far slower than the decade it buys — the derived config
+    * any replay reproduces. Ladder over the 60-bit code at radius 3,
+    * occupancy 32: (4,1) ≤ ~1.05M docs · 4 tables; (5,2) ≤ ~537M · 10
+    * tables; (6,3) ≤ ~34B · 20 tables; (7,4) ≤ ~275B · 35 tables.
+    * Table count grows far slower than the decade it buys — the derived config
     * holds candidates linear where the fixed default is quadratic by
     * arithmetic. */
   def simhashBlocksFor(corpusSize: Long, maxHamming: Int,
@@ -909,9 +754,8 @@ object Dedup {
     var t = 1
     while (t <= 16) {
       val k = maxHamming + t
-      val widths = Array.tabulate(k)(i => 64 / k + (if (i < 64 % k) 1 else 0))
-      val keyBits = widths.sorted.take(t).sum
-      if (keyBits >= 62 || (corpusSize - 1) >> keyBits < targetOccupancy)
+      val keyBits = blockWidths(k).sorted.take(t).sum
+      if (keyBits >= 60 || (corpusSize - 1) >> keyBits < targetOccupancy)
         return (k, t)
       t += 1
     }
@@ -919,13 +763,14 @@ object Dedup {
       s"simhashBlocksFor: no (kBlocks, keyBlocks) ladder point holds " +
         s"occupancy $targetOccupancy at corpusSize=$corpusSize, " +
         s"maxHamming=$maxHamming within 16 key blocks — the corpus is " +
-        "beyond the 64-bit simhash key space; shard the corpus or raise " +
+        "beyond the 60-bit simhash key space; shard the corpus or raise " +
         "targetOccupancy deliberately")
   }
 
   /** SimHash near-dup pairs within a Hamming radius. Blocking is
-    * pigeonhole-complete for the REQUESTED radius: the 64 bits are cut
-    * into `kBlocks` contiguous blocks and every `keyBlocks`-subset of
+    * pigeonhole-complete for the REQUESTED radius: the 60 bits of the
+    * [[simhashes60Portable]] code are cut into `kBlocks` contiguous
+    * blocks and every `keyBlocks`-subset of
     * blocks forms one index table whose key is the concatenation of
     * the chosen blocks (multi-index Hamming search, Manku et al.
     * WWW'07 §3 / HmSearch). A pair within Hamming `maxHamming`
@@ -937,7 +782,7 @@ object Dedup {
     * The blocking is DERIVED by default: with `kBlocks <= 0` it comes
     * from [[simhashBlocksFor]] on the live corpus size (one count() on
     * the cached simhash frame, which the joins reuse), so the key space
-    * scales with the corpus instead of saturating. At ≤ 2.1M docs and
+    * scales with the corpus instead of saturating. At ≤ ~1.05M docs and
     * radius 3 the derivation returns (4, 1), the minimal blocking; at
     * 5M docs it returns (5, 2), where the fixed (4, 1) blocking was
     * measured quadratic (1.12B candidates vs Manku-keyed tens of
@@ -954,25 +799,24 @@ object Dedup {
       maxHamming: Int = 3, maxBucketSize: Option[Int] = None,
       kBlocks: Int = 0, keyBlocks: Int = 1): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 32, "maxHamming must be in [0, 31]")
-    val sh = simhashes(docs, idCol, textCol).cache()
+    val sh = simhashes60Portable(docs, idCol, textCol).cache()
     val (nBlocks, nKeyBlocks) =
       if (kBlocks <= 0) simhashBlocksFor(sh.count().max(1L), maxHamming)
       else (kBlocks, keyBlocks)
-    require(nBlocks <= 64, "kBlocks must be <= 64")
+    require(nBlocks <= 60, "kBlocks must be <= 60")
     require(nKeyBlocks >= 1 && nKeyBlocks <= nBlocks - maxHamming,
       s"keyBlocks must be in [1, kBlocks - maxHamming] = [1, ${nBlocks - maxHamming}] " +
         "(pigeonhole: a radius-r pair is only guaranteed a fully-agreeing " +
         "keyBlocks-subset when keyBlocks <= kBlocks - r)")
-    // block widths: distribute 64 bits as evenly as possible
-    val widths = Seq.tabulate(nBlocks)(i => 64 / nBlocks + (if (i < 64 % nBlocks) 1 else 0))
-    simhashBlockPairs(sh, widths, nKeyBlocks, maxHamming, ascending = true,
-      maxBucketSize)
+    simhashBlockPairs(sh, blockWidths(nBlocks), nKeyBlocks, maxHamming,
+      ascending = true, maxBucketSize)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** The SimHash tail shared by the native and portable families: the
-    * (id, sh) codes cut into contiguous blocks of `widths` bits, one
-    * index table per `keyBlocks`-subset of blocks (key = the chosen
+  /** The SimHash tail shared by [[simhashPairs]] and
+    * [[simhashNearProfilePortable]]: the (id, sh) codes cut into
+    * contiguous blocks of `widths` bits, one index table per
+    * `keyBlocks`-subset of blocks (key = the chosen
     * blocks packed), candidates from [[BucketPairs]], verified by
     * Hamming distance ≤ `maxHamming`. Output (id_a, id_b, sh_a, sh_b,
     * hamming). */
@@ -980,16 +824,12 @@ object Dedup {
       keyBlocks: Int, maxHamming: Int, ascending: Boolean,
       cap: Option[Int]): DataFrame = {
     val offsets = widths.scanLeft(0)(_ + _)
-    def blockExpr(i: Int): Column = {
-      val mask = if (widths(i) == 64) -1L else (1L << widths(i)) - 1L
-      shiftrightunsigned(col("sh"), offsets(i)).bitwiseAND(mask)
-    }
+    def blockExpr(i: Int): Column =
+      shiftrightunsigned(col("sh"), offsets(i)).bitwiseAND((1L << widths(i)) - 1L)
     // one struct per table: table id + packed concatenation of the
     // chosen blocks; combos enumerate at plan-build time, the explode
     // is C(k,t) rows
     val combos = widths.indices.combinations(keyBlocks).toSeq
-    require(combos.forall(c => c.map(widths(_)).sum <= 64),
-      s"packed key exceeds 64 bits for (kBlocks=${widths.size}, keyBlocks=$keyBlocks)")
     val blockStructs = array(combos.zipWithIndex.map { case (c, ci) =>
       val packed = c.foldLeft((lit(0L), 0)) { case ((acc, shift), bi) =>
         (acc.bitwiseOR(shiftleft(blockExpr(bi), shift)), shift + widths(bi))
@@ -1003,16 +843,13 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
   }
 
-  // ---- portable (oracle-reproducible) variants ---------------------
+  // ---- the MinHash and SimHash kernels (md5, oracle-reproducible) ---
   //
-  // The fast kernels above hash with xxhash64 / murmur, which no other
-  // engine reproduces — their gates are rows-only. These variants
-  // derive every hash from md5 (which DuckDB, Spark, and any POSIX
-  // stack compute identically) plus affine arithmetic that is plain
-  // SQL, so the ENTIRE pipeline — signatures, banding, bucket join,
-  // estimate — is reproducible hash-exact in the DuckDB oracle. Same
-  // asymptotics and shuffle shape as the fast path; md5 per shingle is
-  // ~3× slower per byte than xxhash64, which is why both exist.
+  // One kernel per hash family. Every hash derives from md5 (which
+  // DuckDB, Spark, and any POSIX stack compute identically) plus affine
+  // arithmetic that is plain SQL, so the ENTIRE pipeline — signatures,
+  // banding, bucket join, estimate — is reproducible hash-exact in the
+  // DuckDB oracle, and every gate over it is hash-checked.
 
   /** Largest prime below 2^32 — the modulus of the affine permutation
     * family. a*h+b with a < 2^31 and h < 2^32 stays below 2^63, so the
@@ -1063,19 +900,8 @@ object Dedup {
       .mapPartitions { rows =>
         val md = java.security.MessageDigest.getInstance("MD5")
         rows.map { case (id, text) =>
-          val toks = Option(text).getOrElse("").toLowerCase
-            .split("\\s+").filter(_.nonEmpty)
-          val shingleSet = new scala.collection.mutable.HashSet[String]
-          if (toks.length < shingleK) shingleSet += toks.mkString(" ")
-          else {
-            var i = 0
-            while (i + shingleK <= toks.length) {
-              shingleSet += toks.slice(i, i + shingleK).mkString(" ")
-              i += 1
-            }
-          }
           val sig = Array.fill(numHashes)(Long.MaxValue)
-          shingleSet.foreach { s =>
+          shingleSet(text, shingleK).foreach { s =>
             val h = md5Base32(md, s)
             var j = 0
             while (j < numHashes) {
@@ -1104,29 +930,43 @@ object Dedup {
       }.toDF("id", "band", "band_key")
   }
 
-  /** Portable MinHash-LSH near-dup candidates: identical construction
-    * to [[minhashCandidates]] but with md5-derived shingle hashes and
-    * affine permutations mod [[portableP]], band keys as the
-    * comma-joined signature slice (not a second hash), and est_jaccard
-    * rounded to 6 digits — every value the query produces is
-    * reproducible in the DuckDB oracle. */
+  /** MinHash-LSH near-dup candidates: md5-derived shingle hashes under
+    * affine permutations mod [[portableP]], band buckets (key = the
+    * comma-joined signature slice, not a second hash) through
+    * [[BucketPairs]], verified by the fraction of agreeing signature
+    * slots, est_jaccard rounded to 6 digits — every value the query
+    * produces is reproducible in the DuckDB oracle.
+    *
+    * @param maxBucketSize the [[BucketPairs]] flood cap per band bucket;
+    *        None (default) preserves exact recall.
+    * @return (id_a, id_b, est_jaccard) for candidate pairs with
+    *         signature-estimated Jaccard ≥ threshold, id_a < id_b. */
   def minhashCandidatesPortable(docs: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 2, numHashes: Int = 32,
-      bands: Int = 8, threshold: Double = 0.3): DataFrame = {
+      bands: Int = 8, threshold: Double = 0.3,
+      maxBucketSize: Option[Int] = None): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     val withSig = portableSignatures(docs, idCol, textCol, shingleK, numHashes)
       .cache()
-    bandPairs(withSig, portableBandRows(withSig, bands, rowsPerBand)
-        .select(col("id"), col("band").as("tbl"), col("band_key").as("key")),
-      numHashes, threshold, cap = None)
+    val banded = portableBandRows(withSig, bands, rowsPerBand)
+      .select(col("id"), col("band").as("tbl"), col("band_key").as("key"))
+    BucketPairs.withPayload(
+        BucketPairs(banded, ascending = true, cap = maxBucketSize),
+        withSig, "sig")
+      .withColumn("est_jaccard",
+        aggregate(zip_with(col("sig_a"), col("sig_b"),
+            (x, y) => when(x === y, 1).otherwise(0)),
+          lit(0), (acc, v) => acc + v).cast("double") / numHashes)
+      .filter(col("est_jaccard") >= threshold)
       .select(col("id_a"), col("id_b"),
         round(col("est_jaccard"), 6).as("est_jaccard"))
   }
 
-  /** Portable 60-bit SimHash: token hash = first 15 md5 hex chars (60
-    * bits keeps every intermediate in signed-64 range on both engines),
-    * frequency-weighted bit votes as in [[simhashes]]. */
+  /** 60-bit SimHash (Charikar 2002): token hash = the first 60 bits of
+    * its md5, i.e. the first 15 hex chars (60 bits keeps every
+    * intermediate in signed-64 range on both engines); each bit is the
+    * sign of its frequency-weighted ±1 votes. */
   def simhashes60Portable(docs: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val spark = docs.sparkSession
@@ -1143,16 +983,9 @@ object Dedup {
             .split("\\s+").filter(_.nonEmpty)
           val counts = new Array[Long](60)
           toks.foreach { t =>
-            val hex = {
-              val d = md.digest(t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              val sb = new StringBuilder(15)
-              var i = 0
-              while (sb.length < 15) {
-                sb.append(f"${d(i) & 0xFF}%02x"); i += 1
-              }
-              sb.substring(0, 15)
-            }
-            val z = java.lang.Long.parseLong(hex, 16) // 60 bits
+            // first 8 digest bytes big-endian, top 60 bits kept
+            val z = java.nio.ByteBuffer.wrap(md.digest(
+              t.getBytes(java.nio.charset.StandardCharsets.UTF_8))).getLong >>> 4
             var b = 0
             while (b < 60) {
               if (((z >>> b) & 1L) == 1L) counts(b) += 1 else counts(b) -= 1
@@ -1167,10 +1000,10 @@ object Dedup {
       }.toDF("id", "sh")
   }
 
-  /** Portable SimHash near-dup profile: per doc, its 60-bit simhash
-    * and the count of OTHER docs within `maxHamming`, found via the
-    * same pigeonhole block join as [[simhashPairs]] (maxHamming+1
-    * blocks of 15 bits at radius 3). The DuckDB oracle recomputes
+  /** SimHash near-dup profile: per doc, its 60-bit simhash and the
+    * count of OTHER docs within `maxHamming`, found via the same
+    * pigeonhole block join as [[simhashPairs]] (maxHamming+1 blocks, 15
+    * bits each at radius 3). The DuckDB oracle recomputes
     * n_near by brute force, so a hash-match also PROVES the blocking
     * is candidate-complete at the requested radius.
     *
@@ -1178,17 +1011,14 @@ object Dedup {
     * frame, so the call itself runs the SimHash kernel over `docs`. */
   def simhashNearProfilePortable(docs: DataFrame, idCol: String,
       textCol: String, maxHamming: Int = 3): DataFrame = {
-    require(60 % (maxHamming + 1) == 0,
-      "maxHamming+1 must divide 60 (blocks of equal width)")
     // eager cut, not cache(): the plan fans `sh` into several BROADCAST
     // subtrees that execute as concurrent jobs, and a lazy cache is not
     // yet materialized when they race, so each job would recompute the
     // whole SimHash kernel. The cut materializes once, up front.
     val sh = graft.ops.Checkpoints.cut(
       simhashes60Portable(docs, idCol, textCol))
-    val pairs = simhashBlockPairs(sh,
-      Seq.fill(maxHamming + 1)(60 / (maxHamming + 1)), keyBlocks = 1,
-      maxHamming, ascending = false, cap = None)
+    val pairs = simhashBlockPairs(sh, blockWidths(maxHamming + 1),
+      keyBlocks = 1, maxHamming, ascending = false, cap = None)
     val nNear = pairs.groupBy(col("id_a").as("id"))
       .agg(count(lit(1)).as("n_near"))
     sh.join(nNear, Seq("id"), "left")

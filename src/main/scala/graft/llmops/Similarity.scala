@@ -4,15 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import scala.util.Random
-
 /** Similarity search over embedding columns (Array[Float]).
   *
   * Three tiers:
   *  - `bruteForceTopK`: exact cosine top-k via broadcast join + window —
   *    the correctness baseline; right answer for corpus ≤ ~1M × small k.
-  *  - `lshBuckets`/`lshTopK`: random-hyperplane LSH (Charikar 2002) —
-  *    sign-bit bucket key turns all-pairs into an equi-join.
+  *  - `lshTopKPortable`: multi-table random-hyperplane LSH (Charikar
+  *    2002) — sign-bit bucket key turns all-pairs into an equi-join.
+  *    One sign-LSH kernel ([[portableBuckets]]): md5-derived ±1 planes
+  *    over quantized integer vectors, so a DuckDB oracle replays every
+  *    bucket.
   *  - `ivfTopK`: IVF (inverted-file) — KMeans centroids partition the
   *    corpus; queries probe the nearest `nProbe` cells. The 100 TB
   *    path: corpus shuffled once by cell, queries routed by a tiny
@@ -51,80 +52,7 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rn"))
   }
 
-  /** Deterministic random hyperplanes: nPlanes × dim gaussian matrix. */
-  private def hyperplanes(nPlanes: Int, dim: Int, seed: Long): Array[Array[Double]] = {
-    val rnd = new Random(seed)
-    Array.fill(nPlanes)(Array.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Approximate top-k via multi-table LSH (OR-amplification): `nTables`
-    * independent `nPlanes`-bit sign buckets; candidates share a bucket
-    * in ANY table. Recall ≈ 1-(1-p^b)^L for bit-agreement prob p —
-    * single-table LSH collapses on near-orthogonal data, multi-table
-    * doesn't (standard construction, MMDS ch.3).
-    *
-    * Candidates and re-rank are [[selfTopKFromBuckets]] (the
-    * [[BucketPairs]] core); this operator owns only the Gaussian
-    * bucket kernel.
-    *
-    * `nPlanes = 0` / `nTables = 0` (the defaults) DERIVE both sketch
-    * parameters: [[autoPlanes]] at [[TopKOccupancy]] holds candidate
-    * volume linear, and [[lshTablesFor]] at [[topKDesignCosMilli]]
-    * (this corpus's measured k-th-neighbor grade) holding
-    * [[TopKTargetRecallPpm]] holds recall — the same no-manual-choice
-    * discipline as the near-dup family. Pass explicit values to pin an
-    * operating point (q38/q66/q89 pin planes = autoPlanes, tables = 8
-    * so the gates stay hash-exact).
-    *
-    * `probeRadius > 0` is multi-probe (Lv et al. 2007): each query
-    * probes its own bucket plus every bucket within Hamming distance
-    * `probeRadius` in each table, the index stays n·nTables rows, and
-    * the zero-knob table derivation shrinks by the collision-prob ratio
-    * (8× fewer tables at radius 1 at the measured 100× design point).
-    * Radius 1 is the default ([[TopKProbeRadius]] — it dominates
-    * single-probe on this path); radius 0 takes the mask-free plan and
-    * stays reachable explicitly (the pinned gates pass it). */
-  def lshTopK(vectors: DataFrame, k: Int, nPlanes: Int = 0, dim: Int,
-      nTables: Int = 0, probeRadius: Int = TopKProbeRadius,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding", seed: Long = 42): DataFrame = {
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val planes = if (nPlanes > 0) nPlanes
-      else autoPlanes(vectors, TopKOccupancy)
-    val numTables = if (nTables > 0) nTables
-      else lshTablesFor(planes, topKDesignCosMilli(vectors, k, idCol, vecCol),
-        TopKTargetRecallPpm, probeRadius)
-    val base = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    // bucket assignment as a typed kernel: the column form is
-    // nTables×nPlanes aggregate-HOFs per row, ALL interpreted
-    // (CodegenFallback — NOTES_r1 lesson 1); the kernel does the same
-    // double-precision index-order dot products ~2× faster. The plane
-    // matrix (nTables×nPlanes×dim gaussians) is driver-built and rides
-    // the task closure — kilobytes.
-    val planeMatrix = Array.tabulate(numTables)(t =>
-      hyperplanes(planes, dim, seed + t * 7919))
-    val withB = base.as[(Long, Seq[Float])].flatMap { case (id, v) =>
-      (0 until numTables).iterator.map { t =>
-        val tPlanes = planeMatrix(t)
-        var bucket = 0L
-        var j = 0
-        while (j < planes) {
-          val p = tPlanes(j)
-          var dot = 0.0
-          var d = 0
-          val n = math.min(dim, v.length)
-          while (d < n) { dot += v(d).toDouble * p(d); d += 1 }
-          if (dot > 0) bucket |= (1L << j)
-          j += 1
-        }
-        (id, t, bucket)
-      }
-    }.toDF("id", "tbl", "bucket")
-    selfTopKFromBuckets(base, withB, k, probeRadius, planes)
-  }
-
-  // ---- portable (oracle-reproducible) LSH -------------------------
+  // ---- sign-LSH (oracle-reproducible) ------------------------------
 
   /** ±1 hyperplane entry derived from md5 — reproducible as
     * `substr(md5(t||'_'||j||'_'||d),1,1)` high-bit in any engine. */
@@ -215,8 +143,8 @@ object Similarity {
     * ~8× fewer derived tables at equal-or-better recall (100×
     * operating point: 24 tables vs 193 at planes 13 / design cos 0.45;
     * measured recall 0.610 vs 0.590 float, 0.55 vs 0.42 derived-row
-    * band) — so the zero-knob entry points ([[lshTopK]],
-    * [[lshTopKPortable]], [[graft.llmops.AnnIndexSnapshot]]) now
+    * band) — so the zero-knob entry points ([[lshTopKPortable]],
+    * [[graft.llmops.AnnIndexSnapshot]]) now
     * derive tables at radius 1 and probe accordingly. Radius 0 stays
     * reachable by passing `probeRadius = 0` explicitly (the pinned
     * single-probe math gates do). Folded into the ANN snapshot key, so
@@ -271,7 +199,7 @@ object Similarity {
     * query per map partition, no single-task sort). Cost ≈ 64/nPlanes
     * extra hash-pass equivalents, memoized per (session, input plan,
     * resolved input files, k) — a caller deriving tables for several
-    * lshTopK invocations over the same corpus pays the probe once.
+    * lshTopKPortable invocations over the same corpus pays the probe once.
     * r15 (ADVICE r14 #2): the memo lives in [[graft.ml.ModelMemo]]
     * (weak session key, soft values — dead-session entries evict with
     * the session) and the key folds in
@@ -656,18 +584,22 @@ object Similarity {
     t
   }
 
-  /** Portable multi-table sign-LSH top-k: embeddings quantized to
-    * `floor(x*1000)` integers and hyperplanes to md5-derived ±1, so
-    * bucket assignment is EXACT integer arithmetic (order-independent,
-    * no float-sum nondeterminism) that the DuckDB oracle recomputes
-    * bit-for-bit. Candidates and re-rank are [[lshTopK]]'s
-    * ([[selfTopKFromBuckets]]); the final cosine uses the same
+  /** Approximate top-k via multi-table sign-LSH (OR-amplification):
+    * `nTables` independent `nPlanes`-bit sign buckets; candidates share
+    * a bucket in ANY table. Recall ≈ 1-(1-p^b)^L for bit-agreement prob
+    * p — single-table LSH collapses on near-orthogonal data, multi-table
+    * doesn't (standard construction, MMDS ch.3). Embeddings are
+    * quantized to `floor(x*1000)` integers and hyperplanes to
+    * md5-derived ±1, so bucket assignment is EXACT integer arithmetic
+    * (order-independent, no float-sum nondeterminism) that the DuckDB
+    * oracle recomputes bit-for-bit. Candidates and re-rank are
+    * [[selfTopKFromBuckets]]; the final cosine uses the same
     * double-precision path the oracle already matches on q37.
     * Quantization only affects which bucket a near-zero dot lands in —
-    * recall behavior is unchanged. Same zero-knob defaults as
-    * [[lshTopK]] (`nPlanes = 0` ⇒ [[autoPlanes]] at [[TopKOccupancy]];
-    * `nTables = 0` ⇒ [[lshTablesFor]] at [[topKDesignCosMilli]] holding
-    * [[TopKTargetRecallPpm]]) and the same [[TopKProbeRadius]] default:
+    * recall behavior is unchanged. Zero-knob defaults (`nPlanes = 0` ⇒
+    * [[autoPlanes]] at [[TopKOccupancy]]; `nTables = 0` ⇒
+    * [[lshTablesFor]] at [[topKDesignCosMilli]] holding
+    * [[TopKTargetRecallPpm]]) and the [[TopKProbeRadius]] default:
     * radius 1 needs ~8× fewer derived tables than single-probe at the
     * measured 100× operating point (24 vs 193 at planes 13, design cos
     * 0.45) for ~1.75× more candidate verifications; radius 0 stays
@@ -690,8 +622,8 @@ object Similarity {
   /** Shared self-top-k tail of the sign-LSH family: [[BucketPairs]]
     * candidates (id_a ≠ id_b) over the (id, tbl, bucket) frame `withB`,
     * then the [[BucketPairs.cosineTopK]] re-rank against `base`
-    * (id, v). `withB` is freshly computed ([[lshTopK]],
-    * [[portableBuckets]]) or loaded from a persisted index snapshot
+    * (id, v). `withB` is freshly computed ([[portableBuckets]]) or
+    * loaded from a persisted index snapshot
     * ([[graft.llmops.AnnIndexSnapshot]]) — ONE implementation, so the
     * persisted path cannot diverge from the computed one.
     * `probeRadius > 0` expands the QUERY side with the Hamming-ball XOR

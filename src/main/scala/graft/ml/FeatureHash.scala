@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * global distinct + broadcast dictionary first).
   *
   * md5 instead of murmur3 keeps the bucket assignment engine-portable,
-  * so the ENTIRE featurization is oracle-checkable (same trade
-  * documented at Dedup.minhashCandidatesPortable — ~3×/byte slower
-  * than xxhash64; swap the hash for bulk production runs).
+  * so the ENTIRE featurization is oracle-checkable — the same choice
+  * as the MinHash, SimHash and sign-LSH kernels in graft.llmops,
+  * which keep one md5 kernel per hash family.
   */
 object FeatureHash {
 

@@ -9,7 +9,7 @@ class DedupSpec extends SparkSpec {
   /** Brute-force ground truth for simhash pair recall. */
   private def bruteForcePairs(docs: org.apache.spark.sql.DataFrame,
       r: Int): Set[(Long, Long)] = {
-    val sh = Dedup.simhashes(docs, "doc_id", "text")
+    val sh = Dedup.simhashes60Portable(docs, "doc_id", "text")
       .as[(Long, Long)].collect()
     (for {
       (ia, ha) <- sh; (ib, hb) <- sh
@@ -89,7 +89,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash LSH surfaces exact and near dup pairs, not unrelated") {
-    val cands = Dedup.minhashCandidates(toy, "doc_id", "text",
+    val cands = Dedup.minhashCandidatesPortable(toy, "doc_id", "text",
       shingleK = 2, numHashes = 64, bands = 16, threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(cands.contains((1L, 2L)))
@@ -106,12 +106,31 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash: identical hash for identical text, close for near dup") {
-    val sh = toy.select($"doc_id", Dedup.simhash64($"text").as("sh"))
+    val sh = Dedup.simhashes60Portable(toy, "doc_id", "text")
       .as[(Long, Long)].collect().toMap
     assert(sh(1L) == sh(2L))
     val hamNear = java.lang.Long.bitCount(sh(1L) ^ sh(3L))
     val hamFar = java.lang.Long.bitCount(sh(1L) ^ sh(4L))
     assert(hamNear < hamFar)
+  }
+
+  test("simhashes60Portable: a token's code is the first 15 hex chars of " +
+      "its md5, the value the DuckDB oracle replays") {
+    val toks = Seq("alpha", "beta", "gamma", "日本語")
+    val code = toks.toDF("t")
+      .select($"t", conv(substring(md5($"t"), 1, 15), 16, 10).cast("long"))
+      .as[(String, Long)].collect().toMap
+    val docs = (toks :+ "alpha beta gamma").zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val sh = Dedup.simhashes60Portable(docs, "doc_id", "text")
+      .as[(Long, Long)].collect().toMap
+    // one token: every bit's vote is that token's bit
+    toks.indices.foreach { i =>
+      assert(sh(i.toLong) == code(toks(i)), s"token ${toks(i)}")
+    }
+    // three tokens: each bit is the majority of their three codes
+    val Seq(a, b, c) = Seq("alpha", "beta", "gamma").map(code)
+    assert(sh(toks.size.toLong) == ((a & b) | (a & c) | (b & c)))
   }
 
   test("simhashPairs finds the exact-dup pair via quarter blocking") {
@@ -121,20 +140,20 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashBlocksFor: occupancy ladder derivation (r13)") {
-    // gate scale (and anything under ~2.1M docs at radius 3) derives
-    // the old minimal blocking — existing gate outputs bit-identical
+    // gate scale (and anything under ~1.05M docs at radius 3) derives
+    // the minimal blocking (4 blocks of the 60-bit code)
     assert(Dedup.simhashBlocksFor(500L, 3) == ((4, 1)))
     assert(Dedup.simhashBlocksFor(5000L, 3) == ((4, 1)))
-    // exact integer boundary: 16-bit keys hold occupancy 32 up to
-    // n-1 < 32·2^16; one doc past it steps to (5,2) — 25-bit min key
-    assert(Dedup.simhashBlocksFor(2097152L, 3) == ((4, 1)))
-    assert(Dedup.simhashBlocksFor(2097153L, 3) == ((5, 2)))
-    // the r12-measured saturation point (5M docs) now derives (5,2) —
+    // exact integer boundary: 15-bit keys hold occupancy 32 up to
+    // n-1 < 32·2^15; one doc past it steps to (5,2) — 24-bit min key
+    assert(Dedup.simhashBlocksFor(1048576L, 3) == ((4, 1)))
+    assert(Dedup.simhashBlocksFor(1048577L, 3) == ((5, 2)))
+    // the r12-measured saturation point (5M docs) derives (5,2) —
     // the config the 1000x diag shows holds candidates linear
     assert(Dedup.simhashBlocksFor(5000000L, 3) == ((5, 2)))
-    // next decade boundary: (5,2) holds to n-1 < 32·2^25
-    assert(Dedup.simhashBlocksFor(1L << 30, 3) == ((5, 2)))
-    assert(Dedup.simhashBlocksFor((1L << 30) + 1L, 3) == ((6, 3)))
+    // next boundary: (5,2) holds to n-1 < 32·2^24
+    assert(Dedup.simhashBlocksFor(1L << 29, 3) == ((5, 2)))
+    assert(Dedup.simhashBlocksFor((1L << 29) + 1L, 3) == ((6, 3)))
     // other radii keep the same rule (radius 8 gate scale = (9,1))
     assert(Dedup.simhashBlocksFor(60L, 8) == ((9, 1)))
     // huge corpora terminate with a wide point, not an overflow

@@ -70,7 +70,7 @@ class PrefixJoinSpec extends SparkSpec {
         Dedup.prefixFilterJoin(docs, "doc_id", "text", 3, 0.5)
       }
       assert(e.getMessage.contains("CLUSTER operator"))
-      assert(e.getMessage.contains("minhashCandidates"))
+      assert(e.getMessage.contains("minhashCandidatesPortable"))
       assert(e.getMessage.contains("graft.exactJoin.diskBudgetBytes"))
       // same contract on the containment sibling
       val e2 = intercept[IllegalStateException] {

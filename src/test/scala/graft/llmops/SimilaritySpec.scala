@@ -26,20 +26,6 @@ class SimilaritySpec extends SparkSpec {
     assert(out == Seq((1L, 1), (2L, 2)))
   }
 
-  test("lsh recall: most brute-force top-1 neighbors found at sf0.001") {
-    val emb = graft.sources.Tables.embeddings(spark, sf0001).cache()
-    val brute = Similarity.bruteForceTopK(emb, emb, 1)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
-    val lsh = Similarity.lshTopK(emb, 5, nPlanes = 4, dim = 64, nTables = 8)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val recalled = brute.count { case (q, n) => lsh.getOrElse(q, Set()).contains(n) }
-    // near-orthogonal random vectors are LSH's worst case; multi-table
-    // OR-amplification (8 tables × 4 bits) must still recall most top-1s
-    assert(recalled.toDouble / brute.size > 0.5,
-      s"recall ${recalled.toDouble / brute.size} too low")
-  }
-
   test("topKDesignCosMilli is the exact-floor median kth-neighbor " +
       "quantized cosine; derived-table default holds the recall band") {
     val emb = graft.sources.Tables.embeddings(spark, sf0001).cache()
@@ -286,40 +272,7 @@ class SimilaritySpec extends SparkSpec {
     assert(nd1.forall(_._3 >= 0.4))
   }
 
-  test("float-plane lshTopK multi-probe (r15): radius 0 == pre-multiprobe " +
-      "operator bit-for-bit; radius 1 recall >= at equal tables") {
-    val emb = graft.sources.Tables.embeddings(spark, sf0001).cache()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "neighbor_id", "cos", "rn")
-        .as[(Long, Long, Double, Int)].collect().toSet
-    // r16: the DEFAULT radius is the derived multi-probe point
-    // (TopKProbeRadius = 1) — a default call must be identical to an
-    // explicit radius-1 call, and radius 0 stays reachable explicitly
-    assert(Similarity.TopKProbeRadius == 1)
-    val defaultR = rows(Similarity.lshTopK(emb, 5, nPlanes = 4,
-      dim = 64, nTables = 4))
-    val r0 = rows(Similarity.lshTopK(emb, 5, nPlanes = 4,
-      dim = 64, nTables = 4, probeRadius = 0))
-    assert(defaultR == rows(Similarity.lshTopK(emb, 5, nPlanes = 4,
-      dim = 64, nTables = 4, probeRadius = 1)),
-      "default lshTopK diverges from explicit radius-1")
-
-    val brute = Similarity.bruteForceTopK(emb, emb, 1)
-      .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
-    def recall(rs: Set[(Long, Long, Double, Int)]): Double = {
-      val byQ = rs.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
-      brute.count { case (q, n) => byQ.getOrElse(q, Set()).contains(n) }
-        .toDouble / brute.size
-    }
-    val r1 = rows(Similarity.lshTopK(emb, 5, nPlanes = 4,
-      dim = 64, nTables = 4, probeRadius = 1))
-    assert(recall(r1) >= recall(r0) - 1e-12,
-      s"float multi-probe radius-1 recall ${recall(r1)} below " +
-        s"radius-0 ${recall(r0)}")
-    assert(recall(r1) > 0.5, s"float multi-probe recall ${recall(r1)} too low")
-  }
-
-  test("portable lsh recall matches the float-plane variant's ballpark") {
+  test("sign-LSH top-k recalls most brute-force top-1 neighbors at sf0.001") {
     val emb = graft.sources.Tables.embeddings(spark, sf0001).cache()
     val brute = Similarity.bruteForceTopK(emb, emb, 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
@@ -328,6 +281,8 @@ class SimilaritySpec extends SparkSpec {
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recalled = brute.count { case (q, n) => lsh.getOrElse(q, Set()).contains(n) }
+    // near-orthogonal random vectors are LSH's worst case; multi-table
+    // OR-amplification (8 tables × 4 bits) must still recall most top-1s
     assert(recalled.toDouble / brute.size > 0.5,
       s"recall ${recalled.toDouble / brute.size} too low")
   }

@@ -86,10 +86,10 @@ class SkewStressSpec extends SparkSpec {
 
     // raw banding: every flood doc lands in the same bucket per band
     val bands = 8
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text",
+    val sigs = Dedup.portableSignatures(docs, "doc_id", "text",
       shingleK = 3, numHashes = 32)
-    val rawMaxBucket = Dedup.bandRows(sigs, bands, 4)
-      .groupBy("band", "band_hash").count()
+    val rawMaxBucket = Dedup.portableBandRows(sigs, bands, 4)
+      .groupBy("band", "band_key").count()
       .agg(max("count")).head().getLong(0)
     assert(rawMaxBucket >= 2000,
       s"expected flood bucket of >=2000, got $rawMaxBucket")
@@ -99,15 +99,15 @@ class SkewStressSpec extends SparkSpec {
     val canon = Dedup.exact(docs, "doc_id", "text")
       .filter(!col("is_dup")).select(col("doc_id"), col("text")).cache()
     assert(canon.count() == 51)
-    val canonSigs = Dedup.minhashSignatures(canon, "doc_id", "text",
+    val canonSigs = Dedup.portableSignatures(canon, "doc_id", "text",
       shingleK = 3, numHashes = 32)
-    val canonMaxBucket = Dedup.bandRows(canonSigs, bands, 4)
-      .groupBy("band", "band_hash").count()
+    val canonMaxBucket = Dedup.portableBandRows(canonSigs, bands, 4)
+      .groupBy("band", "band_key").count()
       .agg(max("count")).head().getLong(0)
     assert(canonMaxBucket <= 10,
       s"canonical corpus still floods buckets: $canonMaxBucket")
     // candidate pairs: n^2 avoided (2000^2/2 = 2M raw -> bounded)
-    val canonPairs = Dedup.minhashCandidates(canon, "doc_id", "text",
+    val canonPairs = Dedup.minhashCandidatesPortable(canon, "doc_id", "text",
       shingleK = 3, numHashes = 32, bands = 8, threshold = 0.5).cache()
     val candidates = canonPairs.count()
     assert(candidates < 1000)
@@ -116,7 +116,7 @@ class SkewStressSpec extends SparkSpec {
     // buckets are SAMPLED to the cap (r5: no longer dropped wholesale),
     // bounding the join at ≤ bands·cap²/2 flood pairs instead of B²/2
     val cap = 100
-    val capped = Dedup.minhashCandidates(docs, "doc_id", "text",
+    val capped = Dedup.minhashCandidatesPortable(docs, "doc_id", "text",
       shingleK = 3, numHashes = 32, bands = 8, threshold = 0.5,
       maxBucketSize = Some(cap)).cache()
     val cappedN = capped.count()

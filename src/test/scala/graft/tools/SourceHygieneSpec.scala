@@ -146,6 +146,39 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(dead.isEmpty, s"allowlist rows with no remaining pair filter: $dead")
   }
 
+  /** llmops file → (max non-md5 hash calls, why that file may hash
+    * outside its family's kernel). Each hash family in llmops (MinHash,
+    * SimHash, sign-LSH) has ONE kernel, derived from md5 so a DuckDB
+    * oracle replays it; a murmur, `String.hashCode` or Gaussian-plane
+    * twin hashes in a way no oracle reproduces, so the gates that run
+    * it check nothing but row counts. Empty: no file needs one. Extend
+    * ONLY with a hash no query output depends on. */
+  private val hashKernelAllowlist: Map[String, (Int, String)] = Map()
+
+  test("one hash kernel per family in llmops: no murmur, hashCode or " +
+      "Gaussian-plane hashing") {
+    val needles = Seq("MurmurHash3", "nextGaussian", ".hashCode")
+    val hits = scalaFiles(mainRoot.resolve("llmops")).flatMap { p =>
+      // code lines only: a doc comment may name the kernels it replaced
+      val code = new String(Files.readAllBytes(p)).linesIterator
+        .filterNot(l => Seq("*", "//", "/*").exists(l.trim.startsWith))
+        .mkString("\n")
+      val n = needles.map(s => code.sliding(s.length).count(_ == s)).sum
+      if (n > 0) Some(mainRoot.relativize(p).toString -> n) else None
+    }.toMap
+    val violations = hits.collect {
+      case (f, n) if !hashKernelAllowlist.contains(f) =>
+        s"$f has $n murmur/hashCode/Gaussian hash call(s) but is not " +
+          "allowlisted — hash with the family's md5 kernel"
+      case (f, n) if n > hashKernelAllowlist(f)._1 =>
+        s"$f has $n murmur/hashCode/Gaussian hash calls, allowlist caps " +
+          s"it at ${hashKernelAllowlist(f)._1}"
+    }
+    assert(violations.isEmpty, violations.mkString("; "))
+    val dead = hashKernelAllowlist.keySet -- hits.keySet
+    assert(dead.isEmpty, s"allowlist rows with no remaining hash call: $dead")
+  }
+
   /** file → (max environment reads, why that code may read the
     * environment). Engine paths take their settings from parameters
     * and Spark confs; a dev-only env knob in an engine path changes
