@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{Registry, Relational}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Engine entry points — see SURVEY.md §7.
   * All queries live in `graft.queries.*` as [[QueryDef]]s; this object
   * just flattens the registry into the driver's two maps.
   */

@@ -28,8 +28,11 @@ object AlbedoFixtures {
     * q49/q50 oracles reference these paths via read_parquet).
     * Overwritten on every call — the generator is seed-fixed, so the
     * contents are identical across runs; overwrite just guards against
-    * stale copies from older generator versions. */
-  val persistDir = "/root/repo/target/albedo_fixtures"
+    * stale copies from older generator versions. Lives under the JVM's
+    * working directory (`sbt` runs and tests fork in the checkout's
+    * root), so each checkout publishes into its own `target/`. */
+  val persistDir: String = java.nio.file.Paths
+    .get(System.getProperty("user.dir"), "target", "albedo_fixtures").toString
 
   def persist(spark: SparkSession): Unit = {
     // publish (atomic make-equal), not overwrite: identical bytes are

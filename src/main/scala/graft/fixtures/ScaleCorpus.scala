@@ -90,39 +90,6 @@ object ScaleCorpus {
     }.reduce(_ unionByName _)
   }
 
-  /** events ×factor: disjoint user/event-id copies over the IDENTICAL
-    * timeline — N× users in the same window, which is how a larger
-    * deployment actually grows. Per-user structure (sessions, funnels,
-    * interval overlaps) is preserved exactly; no key joins across
-    * copies, so keyed-window/join outputs scale ∝ factor by
-    * construction and any super-linear probe reading is the engine's. */
-  def amplifyEvents(events: DataFrame, factor: Int,
-      idShift: Long = 10000000L, carry: Seq[String] = Nil): DataFrame =
-    (0 until factor).map { k =>
-      events.select((Seq((col("event_id") + lit(k * idShift)).as("event_id"),
-        (col("user_id") + lit(k * idShift)).as("user_id"),
-        col("event_type"), col("ts")) ++ carry.map(col)): _*)
-    }.reduce(_ unionByName _)
-
-  /** Relational fact tables ×factor (r12, for the relational-core
-    * scale legs): every row appears `factor` times with its key
-    * columns shifted per copy — shift BOTH sides of a join by the
-    * same copy offset and the per-copy join fan-out / key
-    * distributions are preserved exactly while rows grow ×factor
-    * (the production shape: more transactions, same schema). Group-by
-    * columns are untouched, so aggregate group counts stay constant
-    * unless the group key IS a shifted key (then groups grow ×factor
-    * too — the wide-agg stressor). One explode node, not a
-    * factor-way union: plan size stays O(1) at any factor. */
-  def amplifyFacts(facts: DataFrame, keyCols: Seq[String], factor: Int,
-      idShift: Long = 1000000000L): DataFrame = {
-    val withK = facts.withColumn("__copy",
-      explode(sequence(lit(0L), lit(factor - 1L))))
-    keyCols.foldLeft(withK) { (d, c) =>
-      d.withColumn(c, col(c) + col("__copy") * idShift)
-    }.drop("__copy")
-  }
-
   /** embeddings ×factor with per-copy orthogonal sign flips. */
   def amplifyEmbeddings(emb: DataFrame, factor: Int, dim: Int = 64,
       idShift: Long = 10000000L): DataFrame =

@@ -180,31 +180,45 @@ object Dedup {
     * candidate set, never all-pairs. */
   def exactJaccard(docs: DataFrame, pairs: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 3): DataFrame =
-    exactJaccardOn(shingleSets(docs, idCol, textCol, shingleK), pairs)
-
-  /** [[exactJaccard]] over pre-materialized shingle sets — callers that
-    * already computed (and cached) the sets avoid re-running the
-    * shingle kernel. */
-  def exactJaccardOn(sh: DataFrame, pairs: DataFrame): DataFrame =
-    exactJaccardCountsOn(sh, pairs)
+    exactJaccardCountsOn(shingleSets(docs, idCol, textCol, shingleK), pairs)
       .withColumn("jaccard",
         when(col("uni") > 0, col("inter") / col("uni").cast("double")).otherwise(0.0))
       .select(col("id_a"), col("id_b"), col("jaccard"))
 
-  /** The shared pair-counts core: (id_a, id_b, inter, uni) as BIGINTs.
-    * Gate/oracle callers derive integer ppm from these (late r17 —
-    * a hashed `round(inter/uni, 6)` double can flip at a half-way
-    * shortest-repr boundary cross-engine, the q76 flake class);
-    * library callers keep the double `jaccard` above. */
+  /** The pair counts (id_a, id_b, inter, uni) as BIGINTs over
+    * [[shingleSets]] output. Gate/oracle callers derive integer ppm
+    * from these (late r17 — a hashed `round(inter/uni, 6)` double can
+    * flip at a half-way shortest-repr boundary cross-engine, the q76
+    * flake class); library callers keep the double `jaccard` above. */
   def exactJaccardCountsOn(sh: DataFrame, pairs: DataFrame): DataFrame =
-    pairs
-      .join(sh.withColumnRenamed("id", "id_a").withColumnRenamed("sh", "sh_a"), Seq("id_a"))
-      .join(sh.withColumnRenamed("id", "id_b").withColumnRenamed("sh", "sh_b"), Seq("id_b"))
-      .withColumn("inter",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("uni",
-        size(array_union(col("sh_a"), col("sh_b"))).cast("long"))
-      .select(col("id_a"), col("id_b"), col("inter"), col("uni"))
+    intersections(sh, pairs)
+      .select(col("id_a"), col("id_b"), col("inter"),
+        (col("n_a") + col("n_b") - col("inter")).as("uni"))
+
+  /** The one verify of the exact set-similarity family: |sh(a) ∩ sh(b)|
+    * for every (id_a, id_b) row of `pairs`, as (id_a, id_b, n_a, n_b,
+    * inter) BIGINTs over DISTINCT sets `sets` (id, sh) — string or
+    * hashed elements alike — so union is n_a + n_b − inter.
+    *
+    * Two shuffle-hash joins, not sort-merge: the second join's SMJ
+    * would SORT the pair×array intermediate (the spill that caused the
+    * 100× knee); hashing builds on the small per-doc side and STREAMS
+    * the wide rows unsorted. SCALE.md r11 is the record of why this is
+    * the only verify: its A/B measured the bucketed alternative (each
+    * doc's array shipped once per pair-home bucket) slower and larger
+    * at every operating point (uniform 100× q132: 58.8 s / 19.25 GiB
+    * here vs 211.9 s / 21.67 GiB bucketed). */
+  private def intersections(sets: DataFrame, pairs: DataFrame): DataFrame = {
+    def side(s: String) = sets.hint("shuffle_hash")
+      .select(col("id").as(s"id_$s"), col("sh").as(s"sh_$s"))
+    pairs.select(col("id_a"), col("id_b"))
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(col("sh_a")).cast("long").as("n_a"),
+        size(col("sh_b")).cast("long").as("n_b"),
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("long").as("inter"))
+  }
 
   /** EXACT similarity join via prefix filtering (AllPairs/PPJoin
     * family, Bayardo et al. WWW'07): all pairs with shingle-set
@@ -226,7 +240,7 @@ object Dedup {
     * pass that FAILS the job if any two distinct shingles collide
     * (count ≠ countDistinct(xxhash64)), instead of silently
     * answering. The gate fixtures are pinned collision-free by
-    * `PrefixJoinSpec`, making q132/q150/q161/q162 unconditional.
+    * `PrefixJoinSpec`, making q132/q150 unconditional.
     *
     * Why it scales: order every doc's shingles by ascending GLOBAL
     * frequency (rarest first, shingle string as tie-break). For
@@ -238,18 +252,18 @@ object Dedup {
     * each doc's RAREST shingles, the join's per-key buckets are the
     * small tail of the frequency distribution — the head ("the quick
     * brown") never enters the shuffle. Candidates then verify exactly,
-    * candidate-pairs-only.
+    * candidate-pairs-only ([[intersections]]).
     *
     * r10 scale rework (the 100× probe found the verify stage at 452 s
     * of a 500 s run — candidate pairs each shuffling two ~5 KB
     * array<string> columns, a ~200 GB exchange):
     *  - shingles carry through the plan as 64-bit `xxhash64`
-    *    identities after the one freq join: the rank/count windows,
-    *    the candidate join and the verify arrays all move longs, not
-    *    strings. The Jaccard on hashed sets equals the string-set
-    *    Jaccard unless two distinct co-candidate shingles collide in
-    *    64 bits (expected events < 1e-7 per run at any realistic
-    *    corpus; `PrefixJoinSpec` pins the fixtures collision-free).
+    *    identities: the rank/count windows, the candidate join and the
+    *    verify arrays all move longs, not strings. The Jaccard on
+    *    hashed sets equals the string-set Jaccard unless two distinct
+    *    co-candidate shingles collide in 64 bits (expected events
+    *    < 1e-7 per run at any realistic corpus; `PrefixJoinSpec` pins
+    *    the fixtures collision-free).
     *  - PPJoin POSITIONAL + LENGTH filters prune candidates before
     *    the verify join, in exact integer arithmetic (threshold as
     *    ppm, cross-multiplied — no float boundary): a matched prefix
@@ -259,124 +273,23 @@ object Dedup {
     *    elements before the match coincide on both sides); the pair
     *    keeps only if the tightest bound still reaches
     *    ⌈t/(1+t)·(n_a+n_b)⌉.
-    *  - union = n_a + n_b − inter (no array_union), sizes ride the
-    *    candidate rows from the prefix windows.
+    *  - union = n_a + n_b − inter (no array_union).
     *
-    * `verifyBuckets` > 0 switches the verify stage to the BUCKETED
-    * plan ([[bucketedIntersections]], r11): candidate pairs route to
-    * a home bucket, each referenced doc's hashed-shingle array ships
-    * to each bucket AT MOST ONCE, and intersections compute inside
-    * the bucket — the pair×array row never crosses an exchange. At
-    * cluster scale this caps array bytes moved at
-    * Σ_doc |sh(doc)| · min(buckets, pairs(doc)) instead of
-    * 2 · pairs · |sh| — hot docs (the expensive ones) collapse to
-    * ≤ `verifyBuckets` copies. 0 keeps the r10 double shuffle-hash
-    * join (identical output; oracle-proven by the q161 gate).
-    *
-    * `diskGuard` (default on, r13): fail-fast single-box disk check
-    * BEFORE any expensive stage — see [[assertTransientDiskBudget]];
-    * one scan-only agg, then an immediate explanatory error where the
-    * r12 probes burned >70 GB and died mid-verify.
+    * A fail-fast single-box disk check runs BEFORE any expensive
+    * stage — see [[assertTransientDiskBudget]]; one scan-only agg,
+    * then an immediate explanatory error where the r12 probes burned
+    * >70 GB and died mid-verify.
     *
     * Output: (id_a, id_b, jaccard) for id_a < id_b, jaccard ≥ t. */
   def prefixFilterJoin(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, threshold: Double = 0.5,
-      verifyBuckets: Int = 0, collisionGuard: Boolean = false,
-      diskGuard: Boolean = true): DataFrame = {
+      collisionGuard: Boolean = false): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    if (diskGuard) assertTransientDiskBudget(docs, textCol, "prefixFilterJoin")
+    assertTransientDiskBudget(docs, textCol, "prefixFilterJoin")
     val T = math.floor(threshold * 1e6).toLong
-    val sh = shingleSets(docs, idCol, textCol, shingleK)
-    if (collisionGuard) assertHashesCollisionFree(
-      sh.select(col("id"), explode(col("sh")).as("t")))
-    // r17 optimization round: the tokenize→shingle→hash kernel used to
-    // re-execute once per plan consumer (the freq exchange, the
-    // ranked-join instance side, and the verify arrays — three
-    // independent lineages over the same text), and the freq/rank
-    // exchanges carried STRING shingles. Hashing FIRST and eagerly
-    // checkpointing the hashed sets runs the kernel exactly once;
-    // every downstream stage (candidates and verify) reads 64-bit
-    // identities from materialized blocks (guide §2.3 narrower types +
-    // §2.4 shared subtree). Answer-equivalent under the operator's
-    // standing 64-bit collision contract: freq counted per hash equals
-    // freq per string absent collisions (collisionGuard still checks
-    // the STRING identities when requested). The r8 adjudication
-    // rejected COLUMNAR CACHING of the string-array rows (12→21 s at
-    // sf0.1); the checkpoint materializes the post-kernel LONG arrays
-    // instead — re-adjudicated r17: all four family gates faster
-    // back-to-back (q132 6.83→4.77 s etc., OPTIMIZATION_r17.md).
-    val shh = graft.ops.Checkpoints.cut(hashedShingleSets(sh))
-    val candidates = prefixCandidatesFromHashed(shh, T)
-    val withInter =
-      if (verifyBuckets > 0) bucketedIntersections(shh, candidates, verifyBuckets)
-      else candidates
-        // shuffle_hash, not sort-merge: the second join's SMJ would SORT
-        // the pair×array intermediate (the spill that caused the 100×
-        // knee); hashing builds on the small per-doc side and STREAMS
-        // the wide rows unsorted
-        .join(shh.hint("shuffle_hash")
-          .select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(shh.hint("shuffle_hash")
-          .select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .withColumn("inter",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-    withInter
-      .withColumn("jaccard", col("inter") /
-        (col("n_a") + col("n_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
-  }
-
-  /** The candidate stage of [[prefixFilterJoin]], extracted (r12) so
-    * scale diagnostics can measure candidate volume counts-only
-    * without materializing the verify exchange (the stage that needs
-    * ~540 GiB of shuffle at 1000×, SCALE.md r12). Returns the
-    * grouped, fully PPJoin-filtered candidates (id_a, id_b, n_a, n_b)
-    * when `grouped` (the operator's input to verify); `grouped = false`
-    * returns the RAW prefix-join matches before the pair aggregation —
-    * the row volume the groupBy exchange actually moves, which is the
-    * byte driver the telemetry sees. Diagnostics-only view; the
-    * operator always consumes the grouped form. */
-  private[graft] def prefixJaccardCandidates(docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int, threshold: Double,
-      collisionGuard: Boolean = false, grouped: Boolean = true): DataFrame = {
-    require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    val T = math.floor(threshold * 1e6).toLong
-    val sh = shingleSets(docs, idCol, textCol, shingleK)
-    if (collisionGuard) assertHashesCollisionFree(
-      sh.select(col("id"), explode(col("sh")).as("t")))
-    prefixCandidatesFromHashed(hashedShingleSets(sh), T, grouped)
-  }
-
-  /** The candidate core over HASHED shingle sets (id, sh array<bigint>)
-    * — r17: both the frequency aggregation and the rank join move
-    * 64-bit identities end to end (the string→hash projection used to
-    * sit AFTER the freq join, so both of those exchanges carried the
-    * shingle strings). Frequency per hash equals frequency per string
-    * under the family's standing collision contract, and any
-    * consistent global order is complete for the prefix theorem, so
-    * the candidate set — and the verified answer — are unchanged.
-    *
-    * Set size RIDES THROUGH the explode as a column (r11): sh is a
-    * distinct set so size(sh) == the per-id instance count, and
-    * carrying it kills the second Window pass the r10 form paid. */
-  private def prefixCandidatesFromHashed(shh: DataFrame, T: Long,
-      grouped: Boolean = true): DataFrame = {
-    val inst = shh.select(col("id"), size(col("sh")).cast("long").as("n"),
-      explode(col("sh")).as("tid"))
-    val freq = inst.groupBy(col("tid")).agg(count(lit(1)).as("f"))
-    val wRank = Window.partitionBy(col("id")).orderBy(col("f"), col("tid"))
-    val ranked = inst.join(freq, Seq("tid"))
-      .select(col("id"), col("n"), col("tid"), col("f"))
-      .withColumn("rk", row_number().over(wRank).cast("long"))
-    val prefixes = ranked
-      // prefix length via the SAME integer T: ⌈T·n/1e6⌉ ≤ ⌈t·n⌉ exactly
-      // in longs, so the kept prefix is never shorter than the theorem
-      // requires (a double ceil(t·n) can land one element short when
-      // t·n rounds up across an integer boundary)
-      .filter(expr(s"rk <= n - (($T * n + 999999) DIV 1000000) + 1"))
-      .select(col("id"), col("tid"), col("rk"), col("n"))
-    val raw = prefixes.as("a")
+    val shh = hashedShingleSets(docs, idCol, textCol, shingleK, collisionGuard)
+    val (_, prefixes) = rarestFirst(shh, T)
+    val candidates = prefixes.as("a")
       .join(prefixes.as("b"),
         col("a.tid") === col("b.tid") && col("a.id") < col("b.id"))
       // LENGTH filter: J(x,y) ≤ min/max, so T·max(n_a,n_b) ≤ 1e6·min
@@ -386,26 +299,81 @@ object Dedup {
       .withColumn("ub",
         least(col("a.rk"), col("b.rk")) +
           least(col("a.n") - col("a.rk"), col("b.n") - col("b.rk")))
-    if (!grouped)
-      raw.select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.n").as("n_a"), col("b.n").as("n_b"), col("ub"))
-    else raw
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
         col("a.n").as("n_a"), col("b.n").as("n_b"))
       .agg(min(col("ub")).as("ub"))
       // o ≥ t/(1+t)·(n_a+n_b)  ⇔  o·(1e6+T) ≥ T·(n_a+n_b), exact longs
       .filter(col("ub") * (1000000L + T) >= lit(T) * (col("n_a") + col("n_b")))
-      .select(col("id_a"), col("id_b"), col("n_a"), col("n_b"))
+    intersections(shh, candidates)
+      .withColumn("jaccard", col("inter") /
+        (col("n_a") + col("n_b") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** (id, sh: array<bigint>) — each doc's shingle set as 64-bit
-    * hashed identities, the narrow verify-side representation the
-    * prefix/containment joins shuffle instead of string arrays. */
-  private def hashedShingleSets(sh: DataFrame): DataFrame =
+  /** Each doc's shingle set as 64-bit hashed identities (id, sh
+    * array<bigint>), the narrow representation both exact joins rank
+    * and verify on, materialized once. `collisionGuard` checks the
+    * STRING identities first (see [[assertHashesCollisionFree]]).
+    *
+    * r17 optimization round: the tokenize→shingle→hash kernel used to
+    * re-execute once per plan consumer (the freq exchange, the
+    * ranked-join instance side, and the verify arrays — three
+    * independent lineages over the same text), and the freq/rank
+    * exchanges carried STRING shingles. Hashing FIRST and eagerly
+    * checkpointing the hashed sets runs the kernel exactly once; every
+    * downstream stage (candidates and verify) reads 64-bit identities
+    * from materialized blocks (guide §2.3 narrower types + §2.4 shared
+    * subtree). Answer-equivalent under the family's standing 64-bit
+    * collision contract: freq counted per hash equals freq per string
+    * absent collisions. The r8 adjudication rejected COLUMNAR CACHING
+    * of the string-array rows (12→21 s at sf0.1); the checkpoint
+    * materializes the post-kernel LONG arrays instead — re-adjudicated
+    * r17: all four family gates faster back-to-back (q132 6.83→4.77 s
+    * etc., OPTIMIZATION_r17.md). */
+  private def hashedShingleSets(docs: DataFrame, idCol: String,
+      textCol: String, shingleK: Int, collisionGuard: Boolean): DataFrame = {
+    val sh = shingleSets(docs, idCol, textCol, shingleK)
+    if (collisionGuard) assertHashesCollisionFree(
+      sh.select(col("id"), explode(col("sh")).as("t")))
     // map-side: per-element xxhash64 via transform (no shuffle; the
     // interpreted higher-order cost is far below the exchange it
     // replaces — the array never leaves the map task as strings)
-    sh.select(col("id"), transform(col("sh"), t => xxhash64(t)).as("sh"))
+    graft.ops.Checkpoints.cut(
+      sh.select(col("id"), transform(col("sh"), t => xxhash64(t)).as("sh")))
+  }
+
+  /** The rarest-first prefix index both exact joins share, over hashed
+    * sets (id, sh array<bigint>). Returns (ranked, prefixes), both
+    * (id, tid, rk, n): `ranked` holds every shingle instance with its
+    * rank rk in the doc's ascending-global-frequency order (tid as
+    * tie-break — any consistent global order is complete for the
+    * prefix theorem); `prefixes` keeps each doc's first
+    * n − ⌈T·n/10⁶⌉ + 1 ranks.
+    *
+    * Frequency per hash equals frequency per string under the family's
+    * collision contract, so both the frequency aggregation and the
+    * rank join move 64-bit identities end to end (r17). Set size RIDES
+    * THROUGH the explode as a column (r11): sh is a distinct set so
+    * size(sh) == the per-id instance count, and carrying it kills the
+    * second Window pass the r10 form paid. */
+  private def rarestFirst(shh: DataFrame, T: Long): (DataFrame, DataFrame) = {
+    val inst = shh.select(col("id"), size(col("sh")).cast("long").as("n"),
+      explode(col("sh")).as("tid"))
+    val freq = inst.groupBy(col("tid")).agg(count(lit(1)).as("f"))
+    val wRank = Window.partitionBy(col("id")).orderBy(col("f"), col("tid"))
+    val ranked = inst.join(freq, Seq("tid"))
+      .select(col("id"), col("n"), col("tid"), col("f"))
+      .withColumn("rk", row_number().over(wRank).cast("long"))
+      .select(col("id"), col("tid"), col("rk"), col("n"))
+    // prefix length via the SAME integer T: ⌈T·n/1e6⌉ ≤ ⌈t·n⌉ exactly
+    // in longs, so the kept prefix is never shorter than the theorem
+    // requires (a double ceil(t·n) can land one element short when
+    // t·n rounds up across an integer boundary)
+    val prefixes =
+      ranked.filter(expr(s"rk <= n - (($T * n + 999999) DIV 1000000) + 1"))
+    (ranked, prefixes)
+  }
 
   /** Measured aggregate-transient-shuffle constant for the exact
     * similarity-join family (SCALE.md r12, attributed with two dead
@@ -413,7 +381,7 @@ object Dedup {
     * ends, and the family's multi-stage pipeline (freq join, rank
     * window, candidate self-join + group, verify) sums to ~100× the
     * raw text input in transient shuffle REGARDLESS of verify shape —
-    * the bucketed verify died on the same corpus as the join verify. */
+    * both verify plans r12 measured died on the same corpus. */
   private val TransientShuffleFactor = 100L
 
   /** Fail-fast single-box disk-budget guard for the exact similarity-
@@ -434,8 +402,7 @@ object Dedup {
     * and why this guard fires only in the single-box regime it
     * protects. Override via the session conf
     * `graft.exactJoin.diskBudgetBytes` (specs; deliberately-sized
-    * deployments), or disable with `diskGuard = false` at the call
-    * site.
+    * deployments; a budget above the estimate lets the join run).
     *
     * Deliberately INPUT-based, not candidate-based: the r12
     * attribution measured candidate volume exactly linear four decades
@@ -443,14 +410,13 @@ object Dedup {
     * accumulation across stages, so input volume is the honest
     * predictor, and a candidates-derived lower estimate would
     * green-light a job the box still cannot hold. For corpora whose
-    * candidate volume genuinely deviates, run the counts-only
-    * [[prefixJaccardCandidates]] diagnostic first and size the budget
-    * override deliberately.
+    * candidate volume genuinely deviates, size the budget override
+    * deliberately.
     *
     * The input-bytes scan is memoized per (session, canonicalized
     * input plan, resolved input files) — r14, VERDICT r13 #5: the
     * guard showed up as a +0.6–0.7 s re-scan on each of
-    * q132/q150/q161/q162, and the prefix/containment siblings over
+    * q132/q150, and the prefix/containment siblings over
     * the same corpus share one estimate. Only the BYTES are cached
     * (the budget and the verdict are re-evaluated every call, so conf
     * overrides keep working mid-session). r15 (ADVICE r14 #1/#2): the
@@ -492,8 +458,8 @@ object Dedup {
         "Alternatives on one box: minhashCandidatesPortable (the " +
         "approximate family member), a " +
         "champion-capped similarity (ContentRecommender.similarDocsPrefix), " +
-        "or a higher threshold. To proceed anyway: diskGuard = false, or " +
-        "set graft.exactJoin.diskBudgetBytes to the capacity you actually " +
+        "or a higher threshold. To proceed anyway, set " +
+        "graft.exactJoin.diskBudgetBytes to the capacity you actually " +
         "have (e.g. per-node free x executor count on a sized cluster).")
   }
 
@@ -514,112 +480,18 @@ object Dedup {
         "collision voids the exactness contract on this corpus")
   }
 
-  /** Bucketed candidate-pair verify (r11, the lever SCALE.md named
-    * after the r10 knee fix): |sh(a) ∩ sh(b)| per candidate pair with
-    * NO pair×array exchange. The r10 double shuffle-hash join still
-    * re-shuffles every pair row carrying one ~600-long array to reach
-    * the second join's key (the residual 1.18 local exponent at
-    * 10→100×); here the WIDE rows never move:
-    *
-    *  1. each pair homes at bucket xxhash64(id_a,id_b) mod nBuckets —
-    *     pair rows cross ONE exchange, narrow (5 longs);
-    *  2. distinct (bucket, doc) deliveries join the per-doc arrays and
-    *     shuffle them to the bucket — a doc's array ships to a bucket
-    *     AT MOST ONCE, so total array bytes moved is
-    *     Σ_doc |sh| · min(nBuckets, pairs(doc)) vs the join plan's
-    *     2 · pairs · |sh| (hot docs cap at nBuckets copies);
-    *  3. inside the bucket: build a LongMap doc→sorted array from the
-    *     deliveries (sortWithinPartitions(kind) puts them first),
-    *     stream pairs through a two-pointer merge intersection.
-    *
-    * Per-task memory (ADVICE r11 — BOTH terms, not just the arrays):
-    *   1. the bucket's delivered arrays: Σ_{docs in bucket} 8 B·|sh|;
-    *   2. the bucket's PENDING PAIRS: pairs stream in interleaved with
-    *      doc deliveries, so every pair of the partition buffers until
-    *      the input is exhausted — 32 B × pairs/nBuckets (4 packed
-    *      longs in a primitive builder; the boxed-tuple first cut was
-    *      ~80 B and dominated the arrays at the measured 1.45B-pair
-    *      regime with verifyBuckets=32).
-    * Both terms scale as 1/nBuckets — raise nBuckets to bound the task,
-    * exactly like a shuffle-hash join's build side (at 1.45B pairs,
-    * nBuckets=1024 holds the pending term at ~45 MB/task). A
-    * kind-ordered stream (docs strictly before pairs via secondary
-    * sort) would eliminate term 2 entirely, but the r11 A/B measured
-    * the partition-wide sort as pure overhead at every operating
-    * point — the packed buffer + nBuckets sizing is the cheaper
-    * contract. Used by [[prefixFilterJoin]] and [[containmentJoin]]
-    * when `verifyBuckets` > 0.
-    *
-    * In: shh (id, sh array<bigint>), candidates (id_a, id_b, n_a,
-    * n_b). Out: (id_a, id_b, n_a, n_b, inter). */
-  private def bucketedIntersections(shh: DataFrame, candidates: DataFrame,
-      nBuckets: Int): DataFrame = {
-    val spark = shh.sparkSession
-    import spark.implicits._
-    val withBkt = candidates.withColumn("bkt",
-      pmod(xxhash64(col("id_a"), col("id_b")), lit(nBuckets.toLong)).cast("int"))
-    val need = withBkt.select(col("bkt"), col("id_a").as("id"))
-      .unionByName(withBkt.select(col("bkt"), col("id_b").as("id")))
-      .distinct()
-    // arrays sort here (map-side, once per DELIVERY copy) so the
-    // per-pair intersection is a linear two-pointer merge
-    val docRows = need.join(shh, Seq("id"))
-      .select(col("bkt"), lit(0).as("kind"), col("id").as("a"),
-        lit(0L).as("b"), lit(0L).as("na"), lit(0L).as("nb"),
-        array_sort(col("sh")).as("sh"))
-    val pairRows = withBkt
-      .select(col("bkt"), lit(1).as("kind"), col("id_a").as("a"),
-        col("id_b").as("b"), col("n_a").as("na"), col("n_b").as("nb"),
-        lit(null).cast("array<bigint>").as("sh"))
-    docRows.unionByName(pairRows)
-      .repartition(nBuckets, col("bkt"))
-      .as[(Int, Int, Long, Long, Long, Long, Array[Long])]
-      .mapPartitions { it =>
-        // single unsorted pass: docs land in the map as they stream,
-        // pairs buffer packed 4-longs-per-pair in a primitive builder
-        // (32 B/pair — see the memory contract above; the r11 A/B
-        // attributed the first cut's partition-wide kind-sort as pure
-        // overhead, and the boxed-tuple buffer was the ADVICE r11
-        // OOM term) and verify once the partition is exhausted. Two
-        // colliding buckets in one partition just overwrite identical
-        // arrays.
-        val docs = new scala.collection.mutable.LongMap[Array[Long]]()
-        val pending = scala.collection.mutable.ArrayBuilder.make[Long]
-        var nPending = 0L
-        it.foreach {
-          case (_, 0, id, _, _, _, sh) => docs.update(id, sh)
-          case (_, _, a, b, na, nb, _) =>
-            pending += a; pending += b; pending += na; pending += nb
-            nPending += 1L
-        }
-        val packed = pending.result()
-        (0L until nPending).iterator.map { p =>
-          val o = (p * 4L).toInt
-          val a = packed(o); val b = packed(o + 1)
-          val sa = docs(a); val sb = docs(b)
-          var i = 0; var j = 0; var inter = 0L
-          while (i < sa.length && j < sb.length) {
-            if (sa(i) < sb(j)) i += 1
-            else if (sa(i) > sb(j)) j += 1
-            else { inter += 1L; i += 1; j += 1 }
-          }
-          (a, b, packed(o + 2), packed(o + 3), inter)
-        }
-      }
-      .toDF("id_a", "id_b", "n_a", "n_b", "inter")
-  }
-
   /** EXACT containment join (asymmetric near-dup, r9): ordered pairs
     * (a, b), a ≠ b, with |sh(a) ∩ sh(b)| / |sh(a)| ≥ `threshold` —
     * exact under the same 64-bit COLLISION CONTRACT as
     * [[prefixFilterJoin]] (P(any collision) ≈ V²/2⁶⁵ for V distinct
     * shingles; `collisionGuard = true` fail-fasts on untrusted
-    * corpora instead of silently answering). The admission rule that
-    * catches EXCERPTS. A short doc quoted
-    * inside a long one has Jaccard ≈ |A|/|B| (arbitrarily small) but
-    * containment 1.0, so the symmetric family (q35/q64/q132)
-    * structurally cannot flag it; dedup literature treats
-    * containment as its own operator for exactly this reason.
+    * corpora instead of silently answering), with the same prefix
+    * index ([[rarestFirst]]), verify ([[intersections]]) and disk
+    * guard. The admission rule that catches EXCERPTS. A short doc
+    * quoted inside a long one has Jaccard ≈ |A|/|B| (arbitrarily
+    * small) but containment 1.0, so the symmetric family
+    * (q35/q64/q132) structurally cannot flag it; dedup literature
+    * treats containment as its own operator for exactly this reason.
     *
     * Prefix filter, containment form: c(a→b) ≥ t means B covers
     * ≥ ⌈t·|A|⌉ of A's shingles, so at most |A| − ⌈t·|A|⌉ are missing
@@ -638,41 +510,22 @@ object Dedup {
     * containment_ppm). */
   def containmentJoin(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, threshold: Double = 0.8,
-      verifyBuckets: Int = 0, collisionGuard: Boolean = false,
-      diskGuard: Boolean = true): DataFrame = {
+      collisionGuard: Boolean = false): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold in (0, 1]")
-    if (diskGuard) assertTransientDiskBudget(docs, textCol, "containmentJoin")
+    assertTransientDiskBudget(docs, textCol, "containmentJoin")
     // FLOOR for filter/verify consistency (ADVICE r10): here T is also
     // the verify boundary (containment_ppm >= T), so floor keeps the
     // candidate filters and the verify on the SAME integer threshold.
     val T = math.floor(threshold * 1e6).toLong
-    val sh = shingleSets(docs, idCol, textCol, shingleK)
-    if (collisionGuard) assertHashesCollisionFree(
-      sh.select(col("id"), explode(col("sh")).as("t")))
-    // r17: hash first + one eager checkpoint of the hashed sets — the
-    // text kernel runs once and every exchange below moves longs (see
-    // prefixFilterJoin; same answer-equivalence argument). BOTH sides
-    // rank — the left to select its prefix, the right (full index) so
-    // the positional filter has rk_b; the right side still ships EVERY
-    // position (containment puts no floor on |B|, so the indexed side
-    // cannot prefix).
-    val shh = graft.ops.Checkpoints.cut(hashedShingleSets(sh))
-    val inst = shh.select(col("id"), size(col("sh")).cast("long").as("n"),
-      explode(col("sh")).as("tid"))
-    val freq = inst.groupBy(col("tid")).agg(count(lit(1)).as("f"))
-    val wRank = Window.partitionBy(col("id")).orderBy(col("f"), col("tid"))
-    val ranked = inst.join(freq, Seq("tid"))
-      .select(col("id"), col("n"), col("tid"), col("f"))
-      .withColumn("rk", row_number().over(wRank).cast("long"))
-    val prefixes = ranked
-      // prefix length via the SAME integer T: ⌈T·n/1e6⌉ ≤ ⌈t·n⌉ exactly
-      // in longs, so the kept prefix is never shorter than the theorem
-      // requires (a double ceil(t·n) can land one element short when
-      // t·n rounds up across an integer boundary)
-      .filter(expr(s"rk <= n - (($T * n + 999999) DIV 1000000) + 1"))
+    val shh = hashedShingleSets(docs, idCol, textCol, shingleK, collisionGuard)
+    // BOTH sides rank — the left to select its prefix, the right (full
+    // index) so the positional filter has rk_b; the right side still
+    // ships EVERY position (containment puts no floor on |B|, so the
+    // indexed side cannot prefix).
+    val (ranked, prefixes) = rarestFirst(shh, T)
+    val candidates = prefixes
       .select(col("id").as("id_a"), col("tid"),
         col("rk").as("rk_a"), col("n").as("n_a"))
-    val candidates = prefixes
       .join(ranked.select(col("id").as("id_b"), col("tid"),
         col("rk").as("rk_b"), col("n").as("n_b")), Seq("tid"))
       .filter(col("id_a") =!= col("id_b"))
@@ -687,25 +540,7 @@ object Dedup {
       .agg(min(col("ub")).as("ub"))
       // inter ≥ ⌈t·n_a⌉  ⇔  ub·1e6 ≥ T·n_a, exact longs
       .filter(col("ub") * 1000000L >= lit(T) * col("n_a"))
-      .select(col("id_a"), col("id_b"), col("n_a"))
-    val withInter =
-      if (verifyBuckets > 0)
-        // containment candidates don't carry n_b (the indexed side
-        // has no length floor); the bucketed kernel just rides a 0
-        bucketedIntersections(shh,
-          candidates.withColumn("n_b", lit(0L)), verifyBuckets)
-      else candidates
-        // shuffle_hash, not sort-merge: the second join's SMJ would SORT
-        // the pair×array intermediate (the spill that caused the 100×
-        // knee); hashing builds on the small per-doc side and STREAMS
-        // the wide rows unsorted
-        .join(shh.hint("shuffle_hash")
-          .select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-        .join(shh.hint("shuffle_hash")
-          .select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-        .withColumn("inter",
-          size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-    withInter
+    intersections(shh, candidates)
       .withColumn("containment_ppm", expr("inter * 1000000 DIV n_a"))
       .filter(col("containment_ppm") >= T)
       .select(col("id_a"), col("id_b"), col("n_a"), col("inter"),

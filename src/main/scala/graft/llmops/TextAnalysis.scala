@@ -62,9 +62,7 @@ object TextAnalysis {
   /** [[qualitySignals]] with the ratio columns as integer ppm via
     * floor division (late r17, the gate/oracle form): `round(p/q, 6)`
     * doubles can flip at a half-way shortest-repr boundary
-    * cross-engine (the q76 flake class); `(p·1e6) div q` cannot.
-    * [[qualityScore]] keeps consuming the double signals — its blend
-    * is engine-internal, never hash-compared. */
+    * cross-engine (the q76 flake class); `(p·1e6) div q` cannot. */
   def qualitySignalsPpm(text: Column, stopwords: Seq[String])
       : Seq[(String, Column)] = {
     val t = coalesce(text, lit(""))
@@ -92,16 +90,6 @@ object TextAnalysis {
       "mean_token_len_ppm" ->
         ppm(nChars - greatest(nTokens - 1L, lit(0L)), nTokens),
       "stopword_ppm" -> ppm(nStop, nTokens))
-  }
-
-  /** Aggregate 0..1 quality score from the signals (monotone blend of
-    * length-in-range, stopword presence, low symbol noise). */
-  def qualityScore(text: Column, stopwords: Seq[String] = englishStopwords): Column = {
-    val s = qualitySignals(text, stopwords).toMap
-    val lengthOk = when(s("n_tokens").between(5, 10000), 1.0).otherwise(0.3)
-    val stopOk = least(s("stopword_ratio") * 4.0, lit(1.0))
-    val punctOk = greatest(lit(0.0), lit(1.0) - s("punct_ratio") * 3.0)
-    round((lengthOk * 0.4 + stopOk * 0.3 + punctOk * 0.3), 6)
   }
 
   val englishStopwords: Seq[String] = Seq(

@@ -59,20 +59,6 @@ object exprs {
     when(squashed === "", "__empty").otherwise(squashed)
   }
 
-  /** Popularity score: round(log10(stars)*1000)/1000 + recency term.
-    * Ref: PopularityRecommender.calculateScoreUDF
-    * (recommenders/PopularityRecommender.scala:26-30) — pure columns,
-    * no UDF. */
-  def popularityScore(count: Column, updatedAt: Column): Column =
-    round(log10(count) * 1000) / 1000 +
-      unix_timestamp(updatedAt) / lit(1000000000.0)
-
-  /** Curation score: seconds-since-epoch scaled. Ref:
-    * CurationRecommender.calculateScoreUDF
-    * (recommenders/CurationRecommender.scala:34-36). */
-  def curationScore(starredAt: Column): Column =
-    unix_timestamp(starredAt) / lit(1000000000.0)
-
   /** 0-based index of `item` in `arr`, else size+50 — exact reference
     * semantics. Ref: repoLanguageIndexInUserRecentRepoLanguagesUDF
     * (closures/UDFs.scala:80-83); array_position is 1-based hence -1. */

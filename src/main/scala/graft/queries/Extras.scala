@@ -990,14 +990,6 @@ object Extras {
       .orderBy(col("cohort"), col("week_idx"))
   }
 
-  /** Multimodal feature extraction over a deterministic synthetic binary
-    * corpus — real PNG decode for image rows, stubs for audio/video.
-    * Fixed corpus size (the corpus is synthetic; sizing it off a driver
-    * count() of another table was pure overhead). */
-  def multimodalFeatures(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.extractFeatures(Multimodal.synthCorpus(spark, 900))
-      .toDF().orderBy(col("media_id"))
-
   /** q45b (r6): golden-vector oracle for the multimodal decode path —
     * the q42b pattern applied to PNG/WAV/GVID. The synthetic corpus is
     * seed-fixed per row (`seed ^ i`), so `synthCorpus(12)` is exactly
@@ -1006,7 +998,7 @@ object Extras {
     * bytes a VALUES relation replays hash-exactly. Turns the decode
     * correctness signal from spec-only into driver-checked: drift in
     * the generator, the decoders, or the aHash/RMS math fails the hash
-    * compare. q45/q46/q70 stay as the corpus-scale rows-only vehicles. */
+    * compare. */
   def multimodalGolden(spark: SparkSession, dir: String): DataFrame =
     Multimodal.extractFeatures(Multimodal.synthCorpus(spark, 12))
       .toDF().orderBy(col("media_id"))
@@ -1055,16 +1047,10 @@ object Extras {
       |) AS t(media_id, src_w, src_h, out_w, out_h, thumb_mean_gray, thumb_fnv)
       |ORDER BY media_id""".stripMargin
 
-  /** Video frame sampling (every 4th frame) over the synthetic corpus. */
-  def frameSamples(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.sampleFrames(Multimodal.synthCorpus(spark, 300))
-      .orderBy(col("media_id"), col("frame_idx"))
-
   /** q46b: golden-vector twin of q46 (VERDICT r6 #5 — the q45b pattern
     * on the frame-sample path): the 12-row corpus prefix is seed-fixed
     * per row, GVID decode is lossless, so every sampled frame's
-    * features are frozen bytes a VALUES relation replays hash-exactly.
-    * q46 stays the corpus-scale rows-only vehicle. */
+    * features are frozen bytes a VALUES relation replays hash-exactly. */
   def frameSamplesGolden(spark: SparkSession, dir: String): DataFrame =
     Multimodal.sampleFrames(Multimodal.synthCorpus(spark, 12))
       .orderBy(col("media_id"), col("frame_idx"))
@@ -1072,12 +1058,6 @@ object Extras {
   /** q70b: golden-vector twin of q70 (same freeze for the WAV path). */
   def audioFeaturesGolden(spark: SparkSession, dir: String): DataFrame =
     Multimodal.extractAudioFeatures(Multimodal.synthCorpus(spark, 12))
-      .toDF().orderBy(col("media_id"))
-
-  /** Rich audio features via REAL WAV decode (rows-only: the codec
-    * round-trip has no SQL equivalent). */
-  def audioFeatures(spark: SparkSession, dir: String): DataFrame =
-    Multimodal.extractAudioFeatures(Multimodal.synthCorpus(spark, 900))
       .toDF().orderBy(col("media_id"))
 
   /** Frozen golden rows for q46b — captured from the deterministic

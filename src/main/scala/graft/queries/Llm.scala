@@ -1406,26 +1406,6 @@ object Llm {
       |SELECT id_a, id_b, round(raw, 6) AS jaccard
       |FROM j WHERE raw >= 0.5 ORDER BY id_a, id_b""".stripMargin
 
-  /** q161 (r11): the SAME exact prefix-filter join through the
-    * BUCKETED verify ([[Dedup.bucketedIntersections]] via
-    * `verifyBuckets`) — pair rows stay narrow through every exchange;
-    * doc arrays ship to each pair-home bucket at most once. The
-    * oracle is the identical full brute-force pair join as q132, so
-    * the gate proves the two verify plans are answer-equivalent at
-    * data scale, not just on the spec corpus. */
-  def prefixJaccardJoinBucketed(spark: SparkSession, dir: String): DataFrame =
-    Dedup.prefixFilterJoin(Tables.documents(spark, dir), "doc_id", "text",
-        shingleK = 3, threshold = 0.5, verifyBuckets = 32)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** q162 (r11): containment join through the bucketed verify — the
-    * q161 construction on the asymmetric operator (oracle = q150's
-    * brute-force ordered-pair join). */
-  def containmentPairsBucketed(spark: SparkSession, dir: String): DataFrame =
-    Dedup.containmentJoin(Tables.documents(spark, dir), "doc_id", "text",
-        shingleK = 3, threshold = 0.8, verifyBuckets = 32)
-      .orderBy(col("id_a"), col("id_b"))
-
   /** q150 (r9): EXACT containment join
     * ([[Dedup.containmentJoin]]) — the asymmetric near-dup rule
     * (|A∩B|/|A| ≥ 0.8 over 3-shingles) that flags excerpts the
@@ -2389,10 +2369,6 @@ object Llm {
     QueryDef("q132_prefix_jaccard_join", prefixJaccardJoin,
       Some(prefixJaccardOracle)),
     QueryDef("q150_containment_join", containmentPairs,
-      Some(containmentOracle)),
-    QueryDef("q161_prefix_join_bucketed", prefixJaccardJoinBucketed,
-      Some(prefixJaccardOracle)),
-    QueryDef("q162_containment_bucketed", containmentPairsBucketed,
       Some(containmentOracle)),
     QueryDef("q137_budgeted_recipe", budgetedRecipe,
       Some(budgetedRecipeOracle)),

@@ -53,32 +53,14 @@ object Ml {
         col("rn").cast("long").as("rn"))
       .orderBy(col("id_a"), col("rn"))
 
-  /** Tokenize + stem the corpus with Porter2 (the algorithm behind the
-    * reference's Snowball EnglishStemmer — SnowballStemmer.scala:7,18;
-    * r1/r2's classic-Porter delta is closed); emits sorted distinct
-    * stems per doc. Its former rows-only gate (q42) was retired in r8
-    * (VERDICT r7 list #6, the q57 precedent): the q42b golden-vector
-    * oracle pins the stemmer hash-exactly, so the unverifiable
-    * corpus-scale twin added no driver-visible signal. Library API +
-    * spec coverage remain. */
-  def stemmedTokens(spark: SparkSession, dir: String): DataFrame = {
-    val stemUdf = udf((ts: Seq[String]) => ts.map(Porter2Stemmer.stem))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        array_join(array_sort(array_distinct(
-          stemUdf(Tokenize.removeStopwords(Tokenize.cjkAware(col("text")),
-            Tokenize.englishStopwords)))), " ").as("stems"))
-      .orderBy(col("doc_id"))
-  }
-
   /** Golden-vector oracle for the stemmer (VERDICT r3/r4 "What's
     * missing" #2): stems the embedded [[graft.text.PorterGolden]]
     * word list — exception lists and worked examples from the
     * PUBLISHED Porter2 spec — while the DuckDB oracle replays the
     * expected stems as a plain VALUES relation (no fts extension).
     * Any stemmer drift now fails the driver's hash compare, making
-    * the Porter2 port externally oracled; q42 stays as the
-    * corpus-scale rows-only vehicle. */
+    * the Porter2 port externally oracled. Its corpus-scale rows-only
+    * twin (q42) was retired in r8. */
   def porterGoldenStems(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val stemUdf = udf((w: String) => Porter2Stemmer.stem(w))

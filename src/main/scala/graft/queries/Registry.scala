@@ -21,8 +21,9 @@ import graft.QueryDef
   * rather than letting the bench decay from signal into ceremony.
   * STATUS r11 end: 187 gates / 197.9 s quiet — the budget is spent.
   * From r12 on, additions REQUIRE a retirement or an equal measured
-  * speedup; first candidates are q161/q162 (the bucketed-verify
-  * alternative, ~7 s, kept one round as the rejection's evidence). */
+  * speedup. q161/q162 (the bucketed-verify alternative to q132/q150,
+  * ~7 s, rejected by SCALE.md r11's A/B) are retired with that verify
+  * path. */
 object Registry {
   def all: Seq[QueryDef] =
     Relational.defs ++ Reco.defs ++ Llm.defs ++ Ml.defs ++ Extras.defs ++

@@ -18,7 +18,3 @@ trait Recommender {
   /** @param users single-column DataFrame of user_id */
   def recommendForUsers(users: DataFrame, topK: Int): DataFrame
 }
-
-object Recommender {
-  val outputColumns: Seq[String] = Seq("user_id", "item_id", "score", "source")
-}

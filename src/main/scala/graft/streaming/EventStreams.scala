@@ -59,18 +59,15 @@ object EventStreams {
     }
   }
 
-  /** Event-time hourly counts per event_type with a 10-minute watermark
-    * for late data. Works identically on a batch DataFrame (used by the
-    * oracle-checked batch query). */
+  /** Event-time hourly counts per event_type (1-hour tumbling
+    * windows); the oracle-checked q28 gate runs it on the batch
+    * events. */
   def hourlyTypeCounts(events: DataFrame): DataFrame =
     events
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .select(col("w.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
-
-  def hourlyTypeCountsStreaming(events: DataFrame): DataFrame =
-    hourlyTypeCounts(events.withWatermark("ts", "10 minutes"))
 
   /** Per-user session windows (30-min gap), watermarked. */
   def userSessions(events: DataFrame): DataFrame =

@@ -77,9 +77,9 @@ class PrefixJoinSpec extends SparkSpec {
         Dedup.containmentJoin(docs, "doc_id", "text", 3, 0.8)
       }
       assert(e2.getMessage.contains("containmentJoin"))
-      // the explicit opt-out still runs the join under the tiny budget
-      val out = Dedup.prefixFilterJoin(docs, "doc_id", "text", 3, 0.3,
-        diskGuard = false).count()
+      // a budget above the estimate (the deployment override) runs it
+      spark.conf.set("graft.exactJoin.diskBudgetBytes", Long.MaxValue.toString)
+      val out = Dedup.prefixFilterJoin(docs, "doc_id", "text", 3, 0.3).count()
       assert(out >= 1)
     } finally spark.conf.unset("graft.exactJoin.diskBudgetBytes")
     // with the real budget (this box), the gate-scale corpus passes
@@ -120,44 +120,6 @@ class PrefixJoinSpec extends SparkSpec {
       assert(counts.getLong(0) == counts.getLong(1),
         s"$dir: ${counts.getLong(0)} shingles, ${counts.getLong(1)} hashes")
     }
-  }
-
-  test("bucketed verify equals the join verify on the planted corpus") {
-    // r11 scale path: verifyBuckets > 0 swaps the pair×array double
-    // join for the bucket-delivery kernel; output must be IDENTICAL
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val docs = Seq(
-      (1L, base),
-      (2L, base + " lambda"),
-      (3L, base.replace("delta", "DELTA") + " mu nu"),
-      (4L, "totally different words about cooking bread and mountain gardens today"),
-      (5L, "totally different words about cooking bread and mountain gardens tomorrow"),
-      (6L, "unrelated singleton content nothing shared here at all whatsoever")
-    ).toDF("doc_id", "text")
-    for (t <- Seq(0.3, 0.5, 0.8); buckets <- Seq(1, 3, 16)) {
-      val got = Dedup.prefixFilterJoin(docs, "doc_id", "text", 3, t,
-          verifyBuckets = buckets)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(got == bruteForce(docs, t), s"mismatch at t=$t buckets=$buckets")
-    }
-  }
-
-  test("bucketed verify matches on the sf0.001 fixture, both operators") {
-    val docs = graft.sources.Tables.documents(spark, sf0001)
-    val prefDefault = Dedup.prefixFilterJoin(docs, "doc_id", "text", 3, 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    val prefBucketed = Dedup.prefixFilterJoin(docs, "doc_id", "text", 3, 0.5,
-        verifyBuckets = 8)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(prefBucketed == prefDefault)
-    val contDefault = Dedup.containmentJoin(docs, "doc_id", "text", 3, 0.8)
-      .select($"id_a", $"id_b", $"n_a", $"inter", $"containment_ppm")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val contBucketed = Dedup.containmentJoin(docs, "doc_id", "text", 3, 0.8,
-        verifyBuckets = 8)
-      .select($"id_a", $"id_b", $"n_a", $"inter", $"containment_ppm")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(contBucketed == contDefault)
   }
 
   test("collisionGuard mode passes the clean fixture with identical output") {

@@ -33,7 +33,7 @@ class MemoryBudgetSpec extends SparkSpec {
   // memory regression would hit first
   private val heavyGates = Set(
     "q41_tfidf_similar_docs", "q90_albedo_cg_quality",
-    "q96_llm_pipeline_e2e", "q104_pagerank", "q161_prefix_join_bucketed",
+    "q96_llm_pipeline_e2e", "q104_pagerank", "q132_prefix_jaccard_join",
     "q35_minhash_near_dups", "q117_ivf_pq_topk")
 
   test("heaviest gates run spill-free and under the per-task peak " +

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -262,5 +263,143 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"${violations.mkString(", ")} — delete the probe or name its caller")
     val dead = entryPointAllowlist.keySet -- hits
     assert(dead.isEmpty, s"allowlist rows with no remaining main: $dead")
+  }
+
+  /** Absolute paths a main-source string may not hold: this checkout's
+    * own root, and any absolute path into a build output (`target/`).
+    * Either pins the engine to one checkout, so a second checkout
+    * reads and writes the first one's files. Derive such paths from
+    * the working directory (`user.dir`) or take them as parameters. */
+  test("no absolute checkout or build-output path in main code") {
+    val checkout = Paths.get("").toAbsolutePath.toString + "/"
+    val buildOutput = "\"/[^\"\\s]*/target/".r
+    val offenders = scalaFiles(mainRoot).flatMap { p =>
+      val code = splitSource(new String(Files.readAllBytes(p), UTF_8))._1
+      code.linesIterator.zipWithIndex.collect {
+        case (l, i) if l.contains(checkout) ||
+            buildOutput.findFirstIn(l).nonEmpty =>
+          s"${mainRoot.relativize(p)}:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty, s"absolute checkout or target/ paths at " +
+      s"${offenders.mkString(", ")} — derive them from user.dir")
+  }
+
+  /** `Object.member` → who uses it although no searched source names
+    * it. Extend ONLY with a member that something outside `src/main`,
+    * `src/test` and `perfbench/src` calls; a definition nothing calls
+    * is deleted, not listed. Empty: every public member has a caller. */
+  private val unreferencedAllowlist: Map[String, String] = Map()
+
+  private val Ident = "[A-Za-z_][A-Za-z0-9_]*".r
+
+  /** `src` with comments blanked, and the same with string and char
+    * literals blanked too (newlines kept in both). The first keeps the
+    * references an interpolation makes; the second is what braces and
+    * keywords are read from. */
+  private def splitSource(src: String): (String, String) = {
+    val code, skel = new StringBuilder(src.length)
+    val n = src.length
+    var i = 0
+    def take(end: Int, inCode: Boolean, inSkel: Boolean): Unit = {
+      val s = src.substring(i, end)
+      val blank = s.map(c => if (c == '\n') c else ' ')
+      code ++= (if (inCode) s else blank)
+      skel ++= (if (inSkel) s else blank)
+      i = end
+    }
+    val charLit = """'(\\.|[^\\'\n])'""".r
+    while (i < n) {
+      if (src.startsWith("//", i)) {
+        val e = src.indexOf('\n', i)
+        take(if (e < 0) n else e, inCode = false, inSkel = false)
+      } else if (src.startsWith("/*", i)) {
+        var depth = 1
+        var j = i + 2
+        while (depth > 0 && j < n) {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        }
+        take(math.min(j, n), inCode = false, inSkel = false)
+      } else if (src.startsWith("\"\"\"", i)) {
+        val e = src.indexOf("\"\"\"", i + 3)
+        var j = if (e < 0) n else e + 3
+        while (j < n && src(j) == '"') j += 1
+        take(j, inCode = true, inSkel = false)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n')
+          j += (if (src(j) == '\\') 2 else 1)
+        take(math.min(j + 1, n), inCode = true, inSkel = false)
+      } else {
+        val lit = if (src(i) != '\'') None
+          else charLit.findPrefixOf(src.substring(i, math.min(i + 4, n)))
+        take(i + lit.fold(1)(_.length), inCode = true, inSkel = lit.isEmpty)
+      }
+    }
+    (code.toString, skel.toString)
+  }
+
+  /** (object, member) for every `def`/`val` declared directly in an
+    * object body of `skel` with no private, protected or override
+    * modifier on its line. */
+  private def objectMembers(skel: String): Seq[(String, String)] = {
+    val declared = ("""\s+(""" + Ident.regex + ")").r
+    val hidden = """\b(private|protected|override)\b""".r
+    val out = Seq.newBuilder[(String, String)]
+    // one entry per open brace: Some(name) for an object body
+    var scopes = List.empty[Option[String]]
+    var pending: Option[String] = None // object header awaiting its `{`
+    var prev = ""
+    for (m <- (Ident.regex + "|[{}]").r.findAllMatchIn(skel)) {
+      val t = m.matched
+      t match {
+        case "{" => scopes = pending :: scopes; pending = None
+        case "}" => scopes = scopes.drop(1); pending = None
+        case _ if prev == "object" => pending = Some(t)
+        case "class" | "trait" | "new" | "var" => pending = None
+        case "def" | "val" =>
+          pending = None
+          for (obj <- scopes.headOption.flatten) {
+            val lineHead = skel.substring(skel.lastIndexOf('\n', m.start) + 1,
+              m.start)
+            if (hidden.findFirstIn(lineHead).isEmpty)
+              declared.findPrefixMatchOf(skel.subSequence(m.end,
+                  math.min(m.end + 200, skel.length)))
+                .foreach(nm => out += ((obj, nm.group(1))))
+          }
+        case _ =>
+      }
+      prev = t
+    }
+    out.result()
+  }
+
+  test("every public def/val of a main-source object has a reference " +
+      "outside its own declaration") {
+    val sources = Seq("src/main/scala", "src/test/scala", "perfbench/src")
+      .flatMap(r => scalaFiles(Paths.get(r)))
+      .map(p => p -> splitSource(new String(Files.readAllBytes(p), UTF_8)))
+    // identifiers outside comments that are not themselves a
+    // declaration (`def x`, `val x`, `var x`) in any scope
+    val referenced = sources.flatMap { case (_, (code, _)) =>
+      val toks = Ident.findAllIn(code).toSeq
+      ("" +: toks).zip(toks).collect {
+        case (before, t) if !Set("def", "val", "var")(before) => t
+      }
+    }.toSet
+    val unreferenced = sources.collect {
+      case (p, (_, skel)) if p.startsWith(mainRoot) => objectMembers(skel)
+    }.flatten.collect {
+      case (obj, name) if !Set("main", "apply")(name) &&
+          !referenced(name) => s"$obj.$name"
+    }.toSet
+    val violations = unreferenced -- unreferencedAllowlist.keySet
+    assert(violations.isEmpty, "public definitions nothing references " +
+      s"outside their own declaration: ${violations.toSeq.sorted.mkString(", ")}" +
+      " — delete them or name their caller in the allowlist")
+    val dead = unreferencedAllowlist.keySet -- unreferenced
+    assert(dead.isEmpty, s"allowlist rows that are referenced or gone: $dead")
   }
 }
