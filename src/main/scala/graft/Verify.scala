@@ -1,47 +1,66 @@
 package graft
+
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+import scala.util.Using
+
+/** The gate sweep: runs registry gates against a fixture dir, writes
+  * each result as one parquet dir `<outDir>/<gate>` and the DuckDB
+  * oracles of the gates it ran to `<outDir>/oracle_sql.json`, for
+  * `tools/check.py`.
+  *
+  * Usage: `graft.Verify <sfDir> <outDir> [gatePrefix ...]`. With no
+  * prefix every gate runs; otherwise only the gates whose name starts
+  * with one of the prefixes. The session is [[Session]]'s profile at
+  * `SPARK_GRAFT_CPUS` cores (default 4). A gate that throws leaves no
+  * dump, and the main exits 1 naming every failed gate. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size-derived scan splits, same stance as Bench (r18): results
-      // are partitioning-independent (this sweep is the proof)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SCAN_PARTS", "1"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Keep the default INT96 timestamp output: it reads back tz-NAIVE
-      // (ns) in pandas, matching DuckDB's naive TIMESTAMP string-wise.
-      // TIMESTAMP_MICROS was tried and rejected — it flags the column
-      // isAdjustedToUTC, pandas reads it tz-AWARE, and the value compare
-      // then diverges ('...+0000' vs naive) on q28/q29.
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    require(args.length >= 2,
+      "usage: graft.Verify <sfDir> <outDir> [gatePrefix ...]")
+    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Dev-only filter: SPARK_GRAFT_ONLY=q77,q78 verifies a subset.
-    // The driver never sets it, so the gate always runs everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed =
+      try sweep(spark, args(0), args(1), args.drop(2).toSeq)
+      finally spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[verify] ${failed.size} gate(s) failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
+  }
+
+  /** Run the gates selected by `prefixes` (all when empty) and return
+    * the names of those that threw. Each gate's old dump is deleted
+    * before it runs, so a dump under `outDir` is always this sweep's.
+    * Dumps keep Spark's default INT96 timestamps: they read back
+    * tz-naive in pandas like DuckDB's TIMESTAMP, where TIMESTAMP_MICROS
+    * reads tz-aware and fails the q28/q29 compares. */
+  def sweep(spark: SparkSession, sfDir: String, outDir: String,
+      prefixes: Seq[String]): Seq[String] = {
+    val gates = SparkEntry.registry
+      .filter(q => prefixes.isEmpty || prefixes.exists(q.name.startsWith))
+    val failed = gates.flatMap { q =>
+      val dump = Paths.get(outDir, q.name)
+      deleteTree(dump)
+      try {
+        q.run(spark, sfDir).coalesce(1).write.parquet(dump.toString)
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+        deleteTree(dump)
+        Some(q.name)
       }
     }
-    def q(s: String): String = JsonUtil.quote(s)
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    tools.OracleDump.write(outDir, gates)
+    failed
   }
+
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Using.resource(Files.walk(p))(
+        _.sorted(Comparator.reverseOrder[Path]()).forEach(Files.delete(_)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Session-level memoization for fitted models (VERDICT r3 list #4).
   *
-  * A long-lived driver (Verify, Bench, a notebook session) invokes
+  * A long-lived driver (Verify, a notebook session) invokes
   * several gates that each need the same expensive seeded fit — the
   * ALS candidate generator, the LR re-ranker, the 26-stage fixture
   * pipeline. The fits are deterministic (pinned seeds), so refitting

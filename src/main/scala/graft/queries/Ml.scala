@@ -15,8 +15,8 @@ object Ml {
     * q41/q61/q86 — previously each gate rebuilt the weights AND ran its
     * own docs.count() for the idf term (VERDICT r2 "What's wrong" #3).
     * The frame is .cache()d: Verify reuses the materialized weights
-    * across the three gates; Bench's per-gate clearCache() evicts the
-    * blocks so each measurement stays self-contained (the plan then
+    * across the three gates; a per-gate clearCache() evicts the
+    * blocks so each gate stays self-contained (the plan then
     * lazily recomputes — correctness never depends on cache state).
     * r6: moved onto [[graft.ml.ModelMemo]] — the private
     * identityHashCode-keyed map here had the exact session-aliasing
@@ -30,7 +30,7 @@ object Ml {
       // the TF-IDF weights are a FITTED MODEL (df/idf statistics of the
       // corpus), and the session memo already exists to share the fit
       // like the ALS/LR/W2V ModelMemo entries; but `.cache()` blocks
-      // were evicted by Bench's per-gate clearCache(), so every
+      // were evicted by a per-gate clearCache(), so every
       // consumer gate silently re-ran the whole fit chain (tokenize →
       // tf → df → norms, with its internal subtree duplication). The
       // eager checkpoint materializes the fit ONCE per session into

@@ -660,8 +660,7 @@ object Relational {
       |ORDER BY gid, o_orderpriority, o_orderstatus""".stripMargin
 
   /** Levenshtein edit distance over the bounded doc-pair set (the q53
-    * family's fuzzy-match sibling; both engines implement the standard
-    * character-level DP). Prefix-bounded: edit distance is O(n·m) per
+    * family's fuzzy-match sibling). Prefix-bounded: edit distance is O(n·m) per
     * pair — at scale you run it only on candidate pairs (LSH output),
     * never all-pairs, and cap the compared span. */
   def editDistancePairs(spark: SparkSession, dir: String): DataFrame = {
@@ -675,11 +674,32 @@ object Relational {
       .orderBy(col("id_a"), col("id_b"))
   }
 
+  /** Spark's `levenshtein` counts characters; DuckDB's counts UTF-8
+    * bytes (`levenshtein('日本語', '日本人')` is 3 there, not 1), so the
+    * oracle runs the character-level DP itself: one recursion step per
+    * character of the left prefix, carrying the DP row `d` as a list.
+    * `t` is the row before insertions (deletion or substitution); an
+    * insertion chain then makes cell j the minimum of t[k] + (j - k)
+    * over k <= j. */
   private def editDistanceOracle: String =
-    """SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-      |       CAST(levenshtein(substr(a.text, 1, 40), substr(b.text, 1, 40)) AS BIGINT) AS edit_dist
-      |FROM documents a CROSS JOIN documents b
-      |WHERE a.doc_id < 30 AND b.doc_id < 30 AND a.doc_id < b.doc_id
+    """WITH RECURSIVE p AS (
+      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+      |         string_split(substr(a.text, 1, 40), '') AS ca,
+      |         string_split(substr(b.text, 1, 40), '') AS cb
+      |  FROM documents a CROSS JOIN documents b
+      |  WHERE a.doc_id < 30 AND b.doc_id < 30 AND a.doc_id < b.doc_id),
+      |dp AS (
+      |  SELECT id_a, id_b, ca, cb, 0 AS i, range(0, len(cb) + 1) AS d FROM p
+      |  UNION ALL
+      |  SELECT id_a, id_b, ca, cb, i + 1,
+      |         list_transform(t, (x, j) -> list_min(list_transform(
+      |           list_slice(t, 1, j), (y, k) -> y + j - k)))
+      |  FROM (SELECT *, list_transform(d, (x, k) -> CASE WHEN k = 1 THEN i + 1
+      |          ELSE least(x + 1, d[k - 1] + CASE WHEN ca[i + 1] = cb[k - 1]
+      |            THEN 0 ELSE 1 END) END) AS t
+      |        FROM dp WHERE i < len(ca)) s)
+      |SELECT id_a, id_b, CAST(d[len(cb) + 1] AS BIGINT) AS edit_dist
+      |FROM dp WHERE i = len(ca)
       |ORDER BY id_a, id_b""".stripMargin
 
   /** Salted equi-join as a driver-checked gate: the skew guard

@@ -110,12 +110,7 @@ object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSet else Set.empty[String]
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val r = auditGates(spark, dir, names, verbose = true)
     println(s"\n[audit] explain_failures=${r.failures} " +

@@ -1,23 +1,47 @@
 package graft.tools
 
-/** Dev utility: write oracle_sql.json for selected gates (all when no
-  * names given) so tools/check.py can compare a DumpOne output dir
-  * without running the full Verify sweep.
+import graft.QueryDef
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+/** Writes `oracle_sql.json`, the gate → DuckDB SQL map `tools/check.py`
+  * compares dumps against. `graft.Verify` writes it through [[write]]
+  * for the gates it ran; the main writes it without running any gate.
   * Usage: runMain graft.tools.OracleDump <outDir> [<name>...]
+  * (all gates when no names are given).
   */
 object OracleDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val names = args.drop(1).toSet
-    val entries = graft.SparkEntry.oracleSql
-      .filter { case (n, _) => names.isEmpty || names.contains(n) }
-    val json = entries.toSeq.sortBy(_._1).map { case (n, sql) =>
-      s"${graft.JsonUtil.quote(n)}: ${graft.JsonUtil.quote(sql)}"
-    }.mkString("{", ",\n", "}")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(outDir, "oracle_sql.json"),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[oracle] wrote ${entries.size} entries to $outDir/oracle_sql.json")
+    val n = write(outDir,
+      graft.SparkEntry.registry.filter(q => names.isEmpty || names(q.name)))
+    println(s"[oracle] wrote $n entries to $outDir/oracle_sql.json")
   }
+
+  /** Write the oracles of `gates` (rows-only gates have none) to
+    * `<outDir>/oracle_sql.json`, sorted by gate name; returns the
+    * number of entries written. */
+  def write(outDir: String, gates: Seq[QueryDef]): Int = {
+    val entries = gates.flatMap(q => q.oracle.map(q.name -> _)).sortBy(_._1)
+    val json = entries.map { case (n, sql) => s"${quote(n)}: ${quote(sql)}" }
+      .mkString("{", ",\n", "}")
+    Files.createDirectories(Paths.get(outDir))
+    Files.write(Paths.get(outDir, "oracle_sql.json"), json.getBytes(UTF_8))
+    entries.size
+  }
+
+  /** JSON string: backslash, quote and every control char (< 0x20)
+    * escaped — a tab or CR in an oracle SQL string would otherwise make
+    * `json.load` fail and zero the whole compare. */
+  private def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -10,18 +10,12 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  /** The engine's session profile at 4 cores, with a temporary
+    * warehouse dir that keeps bucketed tables out of the checkout. */
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      // size-derived scan splits (the Bench/Verify r18 stance): fixture
-      // files are tiny, so the core-count floor only adds task overhead
-      .config("spark.sql.files.minPartitionNum", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", wh) // keep bucketed tables out of the repo
-      .config("spark.ui.enabled", "false")
+    val s = Session.builder(4)
+      .config("spark.sql.warehouse.dir", wh)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -2,20 +2,18 @@ package graft.tools
 
 import graft.SparkSpec
 
-/** CI memory gate (r16, VERDICT r15 #8): BENCH records per-gate spill
-  * and per-task peak execution memory, and since r16 flags budget
-  * violations in the artifact — but an artifact flag is only read at
-  * judging time. This spec makes a memory regression RED AT BUILD
-  * TIME: the suite's heaviest gates (the r15 bench's top spill/peak
-  * candidates) run end-to-end at sf0.01 under a task-metrics listener
-  * and must stay spill-free and under the per-task peak budget.
+/** The engine's one memory budget: a memory regression is a red build.
+  * The heaviest gates (the top spill/peak gates of the r15 per-gate
+  * sweep) run end-to-end at sf0.01 under a task-metrics listener and
+  * must stay spill-free and under the per-task peak budget. No other
+  * absolute budget exists: `perfbench` bounds `heap_peak_mb` against
+  * the parent commit and reports spill per layer.
   *
   * Budgets (documented): spill 0.5 MB (zero observed across all 193
   * gates at sf0.1 in r15 — any real spill indicates a wide
-  * intermediate that will knee at scale); per-task peak 768 MB — the
-  * SAME budget the bench artifact enforces since r17, because the
-  * statistic is width/load-sensitive BY MECHANISM, not by plan:
-  * peakExecutionMemory of a pool-greedy consumer reads as min(need,
+  * intermediate that will knee at scale); per-task peak 768 MB,
+  * because the statistic is width/load-sensitive BY MECHANISM, not by
+  * plan: peakExecutionMemory of a pool-greedy consumer reads as min(need,
   * pool/(2·activeTasks)), Spark's guaranteed-share grant. Measured
   * (NOTES_r17.md, VERDICT r16 #1): q90's max stage peak is 518.7 MB at
   * local[4] = exactly pool/8 (the 4-active share of the ~4.15 GB

@@ -35,7 +35,6 @@ class SourceHygieneSpec extends AnyFunSuite {
     * with a documented bound — "it is small on the fixture" is not a
     * bound; "≤ 64 probe rows by construction" is. */
   private val collectAllowlist: Map[String, (Int, String)] = Map(
-    "Bench.scala" -> (1, "JVM warm-up over spark.range — fixed 1 row"),
     "ops/Materialize.scala" -> (1,
       "bounded-rows contract materialization — callers declare ≤ maxRows"),
     "ops/BloomJoin.scala" -> (1,
@@ -187,12 +186,9 @@ class SourceHygieneSpec extends AnyFunSuite {
     * an entry point or a read of a deployment setting Spark itself
     * defines. */
   private val envAllowlist: Map[String, (Int, String)] = Map(
-    "Bench.scala" -> (6,
-      "benchmark main — fixture dir, cores, passes, scan split floor, " +
-        "output dir and commit flag come from its launcher"),
-    "Verify.scala" -> (3,
-      "verify main — cores, scan split floor and the gate filter come " +
-        "from its launcher"),
+    "Verify.scala" -> (1,
+      "verify main — its core count (SPARK_GRAFT_CPUS) comes from its " +
+        "launcher"),
     "llmops/Dedup.scala" -> (1,
       "transient-disk guard falls back to SPARK_LOCAL_DIRS, the " +
         "deployment setting Spark itself reads for shuffle space, when " +
@@ -244,14 +240,11 @@ class SourceHygieneSpec extends AnyFunSuite {
     * runs belongs in a scratch checkout, not in every build. Extend
     * ONLY with a main that code, a spec or a script invokes. */
   private val entryPointAllowlist: Map[String, String] = Map(
-    "Verify.scala" -> ("the gate sweep: dumps every registry query for " +
+    "Verify.scala" -> ("the gate sweep: dumps registry queries for " +
       "tools/check.py"),
-    "Bench.scala" -> "the per-gate timing sweep, `sbt runMain graft.Bench`",
     "tools/ExplainAudit.scala" -> ("PlanAuditSpec runs its auditGates " +
       "core; the main is the same audit from the command line"),
-    "tools/OracleDump.scala" -> "perfbench/tests/test_reference.py",
-    "tools/DumpOne.scala" -> ("single-gate companion of OracleDump for " +
-      "tools/check.py"))
+    "tools/OracleDump.scala" -> "perfbench/tests/test_reference.py")
 
   test("main entry points confined to the allowlist of called mains") {
     val needle = "def main("
@@ -263,6 +256,34 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"${violations.mkString(", ")} — delete the probe or name its caller")
     val dead = entryPointAllowlist.keySet -- hits
     assert(dead.isEmpty, s"allowlist rows with no remaining main: $dead")
+  }
+
+  /** file → (max session builders, why it builds a session). Every
+    * main runs the engine's one session profile, `graft.Session`, as
+    * does the specs' `SparkSpec`; a main that builds its own session
+    * drifts from it (partitions, scan splits, time zone) and its output
+    * no longer reproduces a Verify dump. Extend ONLY with a session the
+    * profile cannot express. */
+  private val sessionBuilderAllowlist: Map[String, (Int, String)] = Map(
+    "Session.scala" -> (1, "the engine's one session profile"))
+
+  test("SparkSession.builder confined to the engine's session profile") {
+    val needle = "SparkSession.builder"
+    val hits = scalaFiles(mainRoot).flatMap { p =>
+      val code = splitSource(new String(Files.readAllBytes(p), UTF_8))._1
+      val n = code.sliding(needle.length).count(_ == needle)
+      if (n > 0) Some(mainRoot.relativize(p).toString -> n) else None
+    }.toMap
+    val violations = hits.collect {
+      case (f, n) if !sessionBuilderAllowlist.contains(f) =>
+        s"$f builds $n session(s) of its own — use graft.Session.builder"
+      case (f, n) if n > sessionBuilderAllowlist(f)._1 =>
+        s"$f builds $n sessions, allowlist caps it at " +
+          s"${sessionBuilderAllowlist(f)._1}"
+    }
+    assert(violations.isEmpty, violations.toSeq.sorted.mkString("; "))
+    val dead = sessionBuilderAllowlist.keySet -- hits.keySet
+    assert(dead.isEmpty, s"allowlist rows with no remaining builder: $dead")
   }
 
   /** Absolute paths a main-source string may not hold: this checkout's

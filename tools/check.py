@@ -6,7 +6,8 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs
 the matching oracle SQL from oracle_sql.json in DuckDB over the sfDir
 tables, sorts both results by all columns, and compares exactly.
-Reports per-query PASS/FAIL with first diffs.
+Reports per-query PASS/FAIL with first diffs. An oracle entry with no
+dump (the gate threw, so Verify wrote none) is a FAIL.
 """
 import json
 import math
@@ -45,11 +46,14 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     n_pass = n_fail = n_noracle = 0
-    for name in sorted(os.listdir(out_dir)):
-        path = os.path.join(out_dir, name)
-        if not os.path.isdir(path):
+    dumps = {n for n in os.listdir(out_dir)
+             if os.path.isdir(os.path.join(out_dir, n))}
+    for name in sorted(dumps | set(oracle)):
+        if name not in dumps:
+            n_fail += 1
+            print(f"  ✗ {name}: missing dump")
             continue
-        got = pd.read_parquet(path)
+        got = pd.read_parquet(os.path.join(out_dir, name))
         if name not in oracle:
             n_noracle += 1
             print(f"  ~ {name}: rows-only ({len(got)} rows)")

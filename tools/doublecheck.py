@@ -6,7 +6,9 @@ Usage:
   sbt "runMain graft.Verify <sfDir> /tmp/v2"
   python3 tools/doublecheck.py /tmp/v1 /tmp/v2
 
-A gate that differs between runs would eventually flake the driver's
+Reports every gate whose dumps differ between the runs, and every gate
+with a dump in only one of the two dirs (it threw in the other run). A
+gate that differs between runs would eventually flake the driver's
 hash compare (this caught q47's CV AUC drifting ~1e-5 from float-sum
 order inside the distributed fit — fixed by rounding to run-stable
 digits).
@@ -27,9 +29,13 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main():
     d1, d2 = sys.argv[1], sys.argv[2]
     bad = []
-    for name in sorted(os.listdir(d1)):
+    dumps = [{n for n in os.listdir(d) if os.path.isdir(os.path.join(d, n))}
+             for d in (d1, d2)]
+    for name in sorted(dumps[0] | dumps[1]):
         p1, p2 = os.path.join(d1, name), os.path.join(d2, name)
-        if not os.path.isdir(p1) or not os.path.isdir(p2):
+        if name not in dumps[0] or name not in dumps[1]:
+            bad.append(name)
+            print(f"  ✗ {name}: only in {d1 if name in dumps[0] else d2}")
             continue
         a, b = canon(pd.read_parquet(p1)), canon(pd.read_parquet(p2))
         try:
@@ -39,7 +45,7 @@ def main():
         if not eq:
             bad.append(name)
             print(f"  ✗ {name}: runs differ")
-    print("NONDETERMINISTIC:" if bad else "STABLE:",
+    print("DIFFER:" if bad else "STABLE:",
           bad if bad else "all gates byte-identical across runs")
     sys.exit(1 if bad else 0)
 
