@@ -34,18 +34,19 @@ object Verify {
   }
 
   /** Run the gates selected by `prefixes` (all when empty) and return
-    * the names of those that threw. Each gate's old dump is deleted
-    * before it runs, so a dump under `outDir` is always this sweep's.
+    * the names of those that threw. Every registry gate's old dump is
+    * deleted before the sweep, selected or not, so a dump under
+    * `outDir` is always this sweep's.
     * Dumps keep Spark's default INT96 timestamps: they read back
     * tz-naive in pandas like DuckDB's TIMESTAMP, where TIMESTAMP_MICROS
     * reads tz-aware and fails the q28/q29 compares. */
   def sweep(spark: SparkSession, sfDir: String, outDir: String,
       prefixes: Seq[String]): Seq[String] = {
+    SparkEntry.registry.foreach(q => deleteTree(Paths.get(outDir, q.name)))
     val gates = SparkEntry.registry
       .filter(q => prefixes.isEmpty || prefixes.exists(q.name.startsWith))
     val failed = gates.flatMap { q =>
       val dump = Paths.get(outDir, q.name)
-      deleteTree(dump)
       try {
         q.run(spark, sfDir).coalesce(1).write.parquet(dump.toString)
         None

@@ -1,6 +1,6 @@
 package graft.llmops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * The contract every caller relies on:
   *  - Candidates are (tbl, key) EQUI-JOIN collisions of the rows with
-  *    themselves — never a cross join — and a pair colliding in several
-  *    tables is reported once.
+  *    themselves, or of a probe frame with an index frame ([[across]])
+  *    — never a cross join — and a pair colliding in several tables is
+  *    reported once.
   *  - Pair order: `ascending` keeps id_a < id_b (symmetric products
   *    report each unordered pair once); otherwise id_a ≠ id_b (per-query
   *    products need both directions).
@@ -52,17 +53,29 @@ private[llmops] object BucketPairs {
           .filter(col("__rk") <= c)
       case None => rows
     }
-    val probe = capped.select(col("tbl"), col("key"), col("id").as("id_a"))
+    across(capped, capped,
+      if (ascending) col("id_a") < col("id_b") else col("id_a") =!= col("id_b"),
+      masks)
+  }
+
+  /** The probe-frame/index-frame form: distinct pairs (id_a, id_b) of a
+    * `probe` row colliding with an `index` row (both (id, tbl, key)),
+    * kept where `keep` (over id_a, id_b) holds. With probe = index it
+    * is the self form; an incremental batch probes a stored index
+    * ([[Dedup.incrementalAdmit]]). The flood cap belongs to the self
+    * form; this form joins every row it is given. */
+  def across(probe: DataFrame, index: DataFrame, keep: Column,
+      masks: Seq[Long] = Seq(0L)): DataFrame = {
+    val p = probe.select(col("tbl"), col("key"), col("id").as("id_a"))
     val a =
-      if (masks == Seq(0L)) probe
-      else probe.select(col("tbl"), col("key"), col("id_a"),
+      if (masks == Seq(0L)) p
+      else p.select(col("tbl"), col("key"), col("id_a"),
           explode(array(masks.map(lit): _*)).as("mask"))
         .select(col("tbl"), col("key").bitwiseXOR(col("mask")).as("key"),
           col("id_a"))
-    val b = capped.select(col("tbl"), col("key"), col("id").as("id_b"))
+    val b = index.select(col("tbl"), col("key"), col("id").as("id_b"))
     a.join(b, Seq("tbl", "key"))
-      .filter(if (ascending) col("id_a") < col("id_b")
-        else col("id_a") =!= col("id_b"))
+      .filter(keep)
       .select(col("id_a"), col("id_b"))
       .distinct()
   }

@@ -132,21 +132,10 @@ object Dedup {
 
   // ---- shingling + MinHash ----------------------------------------
 
-  /** k-word shingles of normalized text, distinct. */
-  def shingles(text: Column, k: Int): Column = {
-    val toks = TextAnalysis.tokens(TextAnalysis.normalize(text))
-    val n = size(toks)
-    when(n < k, array(array_join(toks, " ")))
-      .otherwise(array_distinct(transform(
-        sequence(lit(0), n - k),
-        i => array_join(slice(toks, i + 1, lit(k)), " "))))
-  }
-
   /** Distinct k-word shingles of one text: lowercased whitespace
     * tokens, each run of k joined by a space; a text of fewer than k
     * tokens is one shingle. The typed kernel behind [[shingleSets]] and
-    * [[portableSignatures]] (the HOF `shingles` expression is
-    * interpreted — fine per-row, slow in bulk). */
+    * [[portableSignatures]]. */
   private def shingleSet(text: String,
       k: Int): scala.collection.mutable.HashSet[String] = {
     val toks = Option(text).getOrElse("").toLowerCase
@@ -885,13 +874,13 @@ object Dedup {
     * per-doc ordering dependency.
     *
     * Scale shape: the exact check is one hash equi-join on content
-    * hash; the near check joins the batch's band rows (|B|·bands)
-    * against the band index — HERE computed inline from the corpus
-    * half, in production read from the stored (band, band_key →
-    * doc_id) bucketed table the previous runs wrote, so per-delivery
-    * cost is ∝ |batch| + colliding buckets and the corpus is never
-    * rescanned. NULL-text docs are dropped (they carry no content to
-    * match on). */
+    * hash; the near check probes the band index with the batch's band
+    * rows (|B|·bands) through [[BucketPairs.across]] — the index HERE
+    * computed inline from the corpus half, in production read from the
+    * stored (band, band_key → doc_id) bucketed table the previous runs
+    * wrote, so per-delivery cost is ∝ |batch| + colliding buckets and
+    * the corpus is never rescanned. NULL-text docs are dropped (they
+    * carry no content to match on). */
   def incrementalAdmit(corpus: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, shingleK: Int = 2, numHashes: Int = 32,
       bands: Int = 8, threshold: Double = 0.3): DataFrame = {
@@ -916,22 +905,20 @@ object Dedup {
       .withColumn("exact_match", when(col("em") < far, col("em")))
       .select(col("doc_id"), col("text"), col("exact_match"))
 
-    // near: batch survivors' band rows vs the corpus+survivor index
+    // near: batch survivors' band rows probe the corpus index (any id)
+    // and the smaller-id survivors
     val surv = ex.filter(col("exact_match").isNull)
       .select(col("doc_id"), col("text"))
     val sigC = portableSignatures(c, "doc_id", "text", shingleK, numHashes)
     val sigB = portableSignatures(surv, "doc_id", "text", shingleK, numHashes)
       .cache()
-    val bandB = portableBandRows(sigB, bands, rowsPerBand)
-    val index = portableBandRows(sigC, bands, rowsPerBand)
-      .select(col("band"), col("band_key"), col("id").as("tid"),
-        lit(true).as("t_corpus"))
-      .unionByName(bandB.select(col("band"), col("band_key"),
-        col("id").as("tid"), lit(false).as("t_corpus")))
-    val cand = bandB.select(col("band"), col("band_key"), col("id").as("qid"))
-      .join(index, Seq("band", "band_key"))
-      .filter(col("t_corpus") || col("tid") < col("qid"))
-      .select(col("qid"), col("tid")).distinct()
+    def bandsOf(sig: DataFrame) = portableBandRows(sig, bands, rowsPerBand)
+      .select(col("id"), col("band").as("tbl"), col("band_key").as("key"))
+    val bandB = bandsOf(sigB)
+    val cand = BucketPairs.across(bandB, bandsOf(sigC), lit(true))
+      .unionByName(BucketPairs.across(bandB, bandB, col("id_b") < col("id_a")))
+      .distinct()
+      .select(col("id_a").as("qid"), col("id_b").as("tid"))
     val sigT = sigC.select(col("id").as("tid"), col("sig").as("sig_t"))
       .unionByName(sigB.select(col("id").as("tid"), col("sig").as("sig_t")))
     val nearm = cand

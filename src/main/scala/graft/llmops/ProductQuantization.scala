@@ -87,7 +87,7 @@ object ProductQuantization {
     *
     * Scale note: Lloyd's on the full corpus is an oracle-fixture
     * choice; a 100 TB run trains the same codebook on a hash-sample
-    * (`Splits.byRowHash`) — the k·D-long artifact and every stage
+    * (`Splits.hashBucketPortable`) — the k·D-long artifact and every stage
     * below it are unchanged. */
   def train(vectors: DataFrame, m: Int, dim: Int, k: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Centroid] = {

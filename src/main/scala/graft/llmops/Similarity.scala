@@ -220,37 +220,6 @@ object Similarity {
       .intValue()
   }
 
-  /** Exact cosine top-k with the QUERIES broadcast — the mirror of
-    * [[bruteForceTopK]] (which broadcasts the CORPUS) for the case
-    * where the query set is the bounded side: the corpus stays
-    * partitioned and is scanned once, per-query top-k via the
-    * k-bounded partial aggregator (shuffle carries ≤ k rows per query
-    * per map partition, no single-task sort — `TopK.viaAggregator`).
-    * Right shape for probe/truth jobs (tens of queries, any corpus
-    * size); output schema (query_id, neighbor_id, cos, rn) matches
-    * [[bruteForceTopK]] with cos unrounded.
-    *
-    * PRECONDITION (ADVICE r14 #3): queries and corpus share ONE id
-    * space — self-matches are excluded purely by id equality
-    * (`query_id != neighbor_id`), so a query frame drawn from a
-    * DIFFERENT id space whose ids coincide with unrelated corpus rows
-    * would silently drop true neighbors from the "exact" truth.
-    * Callers with disjoint id spaces must disambiguate ids first
-    * (e.g. offset one side). Every in-repo caller passes a corpus
-    * subset, satisfying the precondition by construction. */
-  def bruteForceTopKQueriesBroadcast(queries: DataFrame, corpus: DataFrame,
-      k: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val q = queries
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-    val c = corpus
-      .select(col(idCol).cast("long").as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        graft.functions.VectorFunctions.cosineNative(col("qv"), col("cv")))
-    graft.ops.TopK.viaAggregator(scored, "query_id", "neighbor_id", "cos", k)
-  }
-
   private def topKDesignCosUncached(vectors: DataFrame, k: Int,
       idCol: String, vecCol: String): Int = {
     val n = vectors.count()
@@ -319,28 +288,6 @@ object Similarity {
       math.min(TopKDesignProbeQueries.toLong, n))
   }
 
-  /** Shared probe core: median kth-neighbor QUANTIZED cosine (integer
-    * thousandths, exact floor) of the bounded query probe (the
-    * [[TopKDesignProbeQueries]] smallest ids of `vectors`) against
-    * `pool` (the full corpus for the exact probe, a hash sample for
-    * [[topKDesignCosSampledMilli]]). `nQueries` is the probe's
-    * realized size (min(probe limit, corpus)) — known to both callers
-    * without a job. A probe query with FEWER than k pool candidates
-    * has no rn = k row; it is padded with the −990 floor rather than
-    * silently dropped (r15 review): dropping would take the sampled
-    * median over a different query set than the exact median, which
-    * can break the sampled ≤ exact safe-direction inequality when the
-    * realized pool is barely above k. The floor pad is trivially ≤ any
-    * exact kth value, so the inequality is unconditional (floors are
-    * monotone, so the r15 proof carries over to the quantized values
-    * unchanged).
-    *
-    * The exact floor: v = 1000·dot/√(|q|²·|c|²) over the quantized
-    * integer vectors; a double ESTIMATE of floor(v) (absolute error
-    * ≪ 1 at |v| ≤ 1000) is corrected against the defining inequality
-    * c ≤ v ⟺ sign-aware square compare in decimal(38,0) — so the
-    * result is the true floor regardless of float rounding, and the
-    * DuckDB oracle's HUGEINT replay lands on the same integer. */
   /** The exact floor(1000·dot/√(qn2·cn2)) as column math over integer
     * (dot, qn2, cn2) columns: a double ESTIMATE (absolute error ≪ 1 at
     * |value| ≤ 1000) corrected against the defining inequality
@@ -374,6 +321,28 @@ object Similarity {
       .otherwise(f0)
   }
 
+  /** Shared probe core: median kth-neighbor QUANTIZED cosine (integer
+    * thousandths, exact floor) of the bounded query probe (the
+    * [[TopKDesignProbeQueries]] smallest ids of `vectors`) against
+    * `pool` (the full corpus for the exact probe, a hash sample for
+    * [[topKDesignCosSampledMilli]]). `nQueries` is the probe's
+    * realized size (min(probe limit, corpus)) — known to both callers
+    * without a job. A probe query with FEWER than k pool candidates
+    * has no rn = k row; it is padded with the −990 floor rather than
+    * silently dropped (r15 review): dropping would take the sampled
+    * median over a different query set than the exact median, which
+    * can break the sampled ≤ exact safe-direction inequality when the
+    * realized pool is barely above k. The floor pad is trivially ≤ any
+    * exact kth value, so the inequality is unconditional (floors are
+    * monotone, so the r15 proof carries over to the quantized values
+    * unchanged).
+    *
+    * The exact floor: v = 1000·dot/√(|q|²·|c|²) over the quantized
+    * integer vectors; a double ESTIMATE of floor(v) (absolute error
+    * ≪ 1 at |v| ≤ 1000) is corrected against the defining inequality
+    * c ≤ v ⟺ sign-aware square compare in decimal(38,0) — so the
+    * result is the true floor regardless of float rounding, and the
+    * DuckDB oracle's HUGEINT replay lands on the same integer. */
   private def designCosMilliAgainstPool(vectors: DataFrame, pool: DataFrame,
       k: Int, idCol: String, vecCol: String, nQueries: Long): Int = {
     def quantized(df: DataFrame, id: String, vq: String, n2: String) =
@@ -437,52 +406,6 @@ object Similarity {
   def autoPlanes(vectors: DataFrame, targetOccupancy: Long): Int =
     lshPlanesFor(vectors.count(), targetOccupancy)
 
-  /** The IVF twin of [[lshPlanesFor]] (r12): cells for THIS corpus at
-    * a per-cell occupancy target. Fixed nCells is the same
-    * fixed-bucket-space mistake as fixed nPlanes — candidate volume
-    * per self-top-k is n·nProbe·(n/nCells), quadratic by arithmetic
-    * once cells stop scaling — while occupancy-held cells keep it
-    * n·nProbe·occ, linear. Recall under cell scaling: SCALE.md "r12
-    * IVF recall at scale" (nProbe is the recovery knob; unlike
-    * sign-LSH's table count it multiplies a BOUNDED per-query cost,
-    * so holding recall at scale is cheap here). */
-  def ivfCellsFor(corpusSize: Long, targetOccupancy: Long = 256): Int = {
-    require(corpusSize > 0 && targetOccupancy > 0)
-    // overflow-safe ceil: (n-1)/occ + 1 never exceeds Long range
-    ((corpusSize - 1) / targetOccupancy + 1).min(1000000L).toInt
-  }
-
-  /** The RECALL side of the occupancy discipline (r12): [[lshPlanesFor]]
-    * holds candidate volume linear by raising nPlanes with the corpus —
-    * which silently shrinks per-table collision probability p^nPlanes
-    * (p = 1 − θ/π for a pair at angle θ), so recall at FIXED nTables
-    * decays as the corpus grows (SCALE.md "r12 recall at scale", the
-    * planted-cluster fixture: dup-grade cos≥0.9 recall 0.998 at 500
-    * vectors → 0.855 at 50k with 8 tables; the derived count — 12 —
-    * restores 0.943).
-    * This returns the table count that holds overall recall
-    * 1 − (1 − p^nPlanes)^nTables ≥ `targetRecall` for pairs at the
-    * DESIGN similarity `designCos` — the similarity you must not miss
-    * (dup-grade, typically 0.9), NOT the admission threshold: boundary
-    * pairs (cos ≈ threshold) are don't-cares, and sizing tables for
-    * them costs ~p^-nPlanes tables (hundreds) for no product value.
-    *
-    * The honest scaling law this makes explicit: under occupancy
-    * scaling, 2^nPlanes ∝ n, so required tables grow
-    * ∝ (n/occ)^log₂(1/p) — e.g. p(0.9) = 0.856 ⇒ tables ∝ n^0.22,
-    * and total verify cost n·tables ∝ n^1.22: sub-quadratic but
-    * super-linear. Sign-LSH near-dup with recall held is NOT free at
-    * scale; cheaper routes when tables get expensive are a higher
-    * design point (p → 1), multi-probe, or a PQ/SemDeDup prefilter.
-    *
-    * REGIME LIMIT (measured): BOUNDARY-grade pairs (cos ≈ the
-    * admission threshold) are unrecoverable at scale by table count —
-    * on the amplified sf fixture (all truth under cos 0.9) recall at
-    * 100× was 0.024 with 8 tables and 0.051 with 17 (R=0.9 at
-    * cos 0.4 would need ~920 tables at 13 planes). Near-dup MINING at
-    * a low threshold on a large corpus belongs to semanticDedup
-    * (q105) or a PQ prefilter, not sign-LSH — this guard exists to
-    * say so instead of silently under-recalling. */
   /** Per-table candidate-collision probability for a pair at
     * bit-agreement probability `p` when each query probes its own
     * bucket plus every bucket within Hamming distance `radius`
@@ -852,18 +775,6 @@ object Similarity {
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
       .withColumn("keep", col("vec_id") === col("cluster_id"))
   }
-
-  /** Per-label centroid (mean vector) — array-wise avg via posexplode +
-    * re-assemble; one shuffle on (label, pos), then one on label. */
-  def centroids(vectors: DataFrame, labelCol: String,
-      vecCol: String = "embedding"): DataFrame =
-    vectors
-      .select(col(labelCol).as("label"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .groupBy(col("label"), col("pos"))
-      .agg(avg(col("x")).as("m"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("label"), transform(col("pm"), _.getField("m")).as("centroid"))
 
   /** IVF search: assign corpus to nearest of `nCells` KMeans centroids
     * (one-time shuffle by cell); route each query to its `nProbe`

@@ -38,31 +38,12 @@ object TextAnalysis {
   }
 
   /** Quality-signal battery: character/token counts, punctuation and
-    * non-alpha ratios, mean token length, stopword ratio. Null-safe.
+    * non-alpha shares, mean token length, stopword share. Null-safe.
     * Signals follow published web-corpus filters (C4/Gopher-style
-    * length + symbol-ratio rules). */
-  def qualitySignals(text: Column, stopwords: Seq[String]): Seq[(String, Column)] = {
-    val t = coalesce(text, lit(""))
-    val toks = tokens(t)
-    val nChars = length(t)
-    val nTokens = size(toks)
-    val nPunct = nChars - length(regexp_replace(t, "[\\p{Punct}]", ""))
-    val nAlpha = length(regexp_replace(t, "[^A-Za-z]", ""))
-    val nStop = size(filter(toks, w => array_contains(lit(stopwords.toArray), lower(w))))
-    Seq(
-      "n_chars" -> nChars.cast("long"),
-      "n_tokens" -> nTokens.cast("long"),
-      "punct_ratio" -> round(nPunct / greatest(nChars, lit(1)).cast("double"), 6),
-      "alpha_ratio" -> round(nAlpha / greatest(nChars, lit(1)).cast("double"), 6),
-      "mean_token_len" -> round((nChars - greatest(nTokens - 1, lit(0))) /
-        greatest(nTokens, lit(1)).cast("double"), 6),
-      "stopword_ratio" -> round(nStop / greatest(nTokens, lit(1)).cast("double"), 6))
-  }
-
-  /** [[qualitySignals]] with the ratio columns as integer ppm via
-    * floor division (late r17, the gate/oracle form): `round(p/q, 6)`
-    * doubles can flip at a half-way shortest-repr boundary
-    * cross-engine (the q76 flake class); `(p·1e6) div q` cannot. */
+    * length + symbol-ratio rules). The shares are integer ppm via floor
+    * division (late r17): `round(p/q, 6)` doubles can flip at a
+    * half-way shortest-repr boundary cross-engine (the q76 flake
+    * class); `(p·1e6) div q` cannot. */
   def qualitySignalsPpm(text: Column, stopwords: Seq[String])
       : Seq[(String, Column)] = {
     val t = coalesce(text, lit(""))
@@ -106,12 +87,9 @@ object TextAnalysis {
     val toks = tokens(lower(t))
     def hits(words: Seq[String]): Column =
       size(filter(toks, w => array_contains(lit(words.toArray), w)))
-    val scores = map(
-      lit("en"), hits(Seq("the", "and", "of", "to", "is", "with", "that", "for")),
-      lit("es"), hits(Seq("el", "la", "de", "que", "y", "los", "las", "una", "por")),
-      lit("de"), hits(Seq("der", "die", "das", "und", "ist", "nicht", "mit", "ein")),
-      lit("fr"), hits(Seq("le", "la", "les", "des", "est", "une", "dans", "pour", "et")))
-    val best = array(lit("en"), lit("es"), lit("de"), lit("fr"))
+    val scores = map(markerSets.flatMap { case (lang, words) =>
+      Seq(lit(lang), hits(words.toSeq.sorted)) }: _*)
+    val best = array(markerSets.map { case (lang, _) => lit(lang) }: _*)
       .cast("array<string>")
     val argmax = aggregate(
       best,
@@ -139,13 +117,13 @@ object TextAnalysis {
   def fingerprintMd5(text: Column): Column = md5(normalize(text))
 
   // ---- bulk typed kernels -------------------------------------------
-  // The column-expression forms above are the operators (composable,
-  // single-expression use); these kernels are their bulk twins for
-  // whole-corpus gates: Spark array HOFs (filter/aggregate/transform)
-  // are CodegenFallback — interpreted per row — so a typed Dataset.map
-  // wins an order of magnitude on full scans (NOTES_r1 lesson 1).
-  // Semantics are expression-identical (spec-enforced, and q34 is
-  // oracle-gated against the same DuckDB mirror).
+  // Language ID and the subword estimate run in bulk as typed scalar
+  // kernels: Spark array HOFs (filter/aggregate/transform) are
+  // CodegenFallback — interpreted per row — so a typed Dataset.map wins
+  // an order of magnitude on full scans (NOTES_r1 lesson 1). The
+  // column forms `langId`/`subwordCountEstimate` above stay as the
+  // reference the kernels are spec-pinned against, and q34 oracle-gates
+  // the kernels against the DuckDB mirror.
 
   private val markerSets: Seq[(String, Set[String])] = Seq(
     "en" -> Set("the", "and", "of", "to", "is", "with", "that", "for"),
@@ -190,24 +168,6 @@ object TextAnalysis {
     n
   }
 
-  /** Per-row scalar twin of [[fingerprintRolling]] — the exact Spark
-    * xxhash64 chain (catalyst XXH64, seed 42 per step), so values match
-    * the expression form bit-for-bit. */
-  private[llmops] def rollingScalar(text: String): Long = {
-    import org.apache.spark.sql.catalyst.expressions.XXH64
-    import org.apache.spark.unsafe.types.UTF8String
-    val norm = Option(text).getOrElse("").toLowerCase(java.util.Locale.ROOT)
-      .replaceAll("\\s+", " ").trim
-    val toks = if (norm.isEmpty) Array.empty[String] else norm.split("\\s+")
-    var acc = 0L
-    toks.foreach { w =>
-      val u = UTF8String.fromString(w)
-      acc = XXH64.hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes,
-        XXH64.hashLong(acc, 42L))
-    }
-    acc
-  }
-
   /** Bulk language-ID + subword stats: (id, label, pred_lang,
     * n_subwords) via one typed map over the corpus. */
   def langIdStatsBulk(docs: DataFrame, idCol: String, labelCol: String,
@@ -243,15 +203,6 @@ object TextAnalysis {
     val idx = docs.schema.fieldIndex(textCol)
     docs.filter((r: org.apache.spark.sql.Row) =>
       langIdScalar(r.getString(idx)) == lang)
-  }
-
-  /** Bulk rolling fingerprints: (id, fp_rolling). */
-  def rollingBulk(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol)).as[(Long, String)]
-      .map { case (id, text) => (id, rollingScalar(text)) }
-      .toDF("doc_id", "fp_rolling")
   }
 
   /** Character-trigram commonness score — the perplexity-filter shape
@@ -427,8 +378,8 @@ object TextAnalysis {
 
   /** Portable polynomial rolling fingerprint: token hash = first 8 md5
     * hex chars (32-bit), chained h = (h*B + t) mod p in token order —
-    * order-SENSITIVE like [[fingerprintRolling]], but every step is
-    * exact signed-64 arithmetic that DuckDB reproduces with
+    * order-SENSITIVE, and every step is exact signed-64 arithmetic
+    * that DuckDB reproduces with
     * `list_reduce` (init = first element, like foldLeft1; empty → 0).
     * B=1000003, p=2^31-1: h<2^32, h*B+t < 2^52 — no overflow on either
     * engine. */
@@ -458,11 +409,4 @@ object TextAnalysis {
         }
       }.toDF("doc_id", "fp_poly")
   }
-
-  /** 64-bit rolling fingerprint over normalized tokens: chained
-    * xxhash64(acc, token) — order-sensitive like a rolling polynomial
-    * hash but overflow-free under ANSI arithmetic. */
-  def fingerprintRolling(text: Column): Column =
-    aggregate(tokens(normalize(text)), lit(0L),
-      (acc, w) => xxhash64(acc, w))
 }

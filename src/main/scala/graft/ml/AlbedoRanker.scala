@@ -210,25 +210,6 @@ object AlbedoRanker {
     * integer discount table). */
   val metricsDir: String = AlbedoFixtures.persistDir + "/ranker_metrics"
 
-  /** Ranker metric replay (gate q60b; VERDICT r7 "Next round" #5) —
-    * the q44b trick applied to the RANKING METRICS of the full 26-stage
-    * pipeline: a fitted model's scores are data, and every ranking
-    * metric is integer arithmetic over the ranked order. Score the
-    * seeded test split with the memoized pipeline model, dump
-    * (user_id, repo_id, label, margin) AND an integer-quantized DCG
-    * discount table (rank → floor(1e9/log2(rank+1)), with prefix sums
-    * for IDCG) to parquet, then recompute per-user NDCG@30 numerator/
-    * denominator and the Mann-Whitney U statistic from those files in
-    * each engine. Both engines read the same double margins (IEEE sort
-    * order is engine-independent; repo_id breaks ties) and the same
-    * discount integers, so no transcendental function is evaluated in
-    * the replay — log2 appears only Spark-side when MATERIALIZING the
-    * table. All outputs are exact Longs → hash-exact oracle.
-    *
-    * Reference for the metric semantics:
-    * evaluators/RankingEvaluator.scala:14-108 (NDCG@k) and the
-    * BinaryClassificationEvaluator AUC of LogisticRegressionRanker
-    * .scala:330-337 (U/(n_pos·n_neg) is exactly areaUnderROC). */
   /** Shared deterministic layout + seeded split + memoized 26-stage fit
     * behind BOTH q60 (trainAndEvaluate) and q60b (metricReplay). One
     * definition, because both feed the ModelMemo key "albedo-ranker-lr":
@@ -267,6 +248,25 @@ object AlbedoRanker {
     (model, train, test, data)
   }
 
+  /** Ranker metric replay (gate q60b; VERDICT r7 "Next round" #5) —
+    * the q44b trick applied to the RANKING METRICS of the full 26-stage
+    * pipeline: a fitted model's scores are data, and every ranking
+    * metric is integer arithmetic over the ranked order. Score the
+    * seeded test split with the memoized pipeline model, dump
+    * (user_id, repo_id, label, margin) AND an integer-quantized DCG
+    * discount table (rank → floor(1e9/log2(rank+1)), with prefix sums
+    * for IDCG) to parquet, then recompute per-user NDCG@30 numerator/
+    * denominator and the Mann-Whitney U statistic from those files in
+    * each engine. Both engines read the same double margins (IEEE sort
+    * order is engine-independent; repo_id breaks ties) and the same
+    * discount integers, so no transcendental function is evaluated in
+    * the replay — log2 appears only Spark-side when MATERIALIZING the
+    * table. All outputs are exact Longs → hash-exact oracle.
+    *
+    * Reference for the metric semantics:
+    * evaluators/RankingEvaluator.scala:14-108 (NDCG@k) and the
+    * BinaryClassificationEvaluator AUC of LogisticRegressionRanker
+    * .scala:330-337 (U/(n_pos·n_neg) is exactly areaUnderROC). */
   def metricReplay(spark: SparkSession): DataFrame = {
     import spark.implicits._
     import org.apache.spark.ml.functions.vector_to_array

@@ -131,10 +131,9 @@ object RankerPipeline {
   /** Hyperparameter search via CrossValidator + ParamGridBuilder
     * (reference: ALSRecommenderCV.scala:67-90, LogisticRegressionRankerCV
     * .scala:326-350 — seeded, parallel fits). Returns one row per grid
-    * point with the fold-averaged AUC. */
-  /** Raw variant: UNROUNDED fold-averaged AUC per grid point — the
-    * dump surface for the q47b grid-replay oracle (VERDICT r8 "Next
-    * round" #2; see AlsRecommender.crossValidateRaw). */
+    * point with the UNROUNDED fold-averaged AUC — the dump surface for
+    * the q47b grid-replay oracle (VERDICT r8 "Next round" #2; see
+    * AlsRecommender.crossValidateRaw). */
   def crossValidateRaw(spark: SparkSession, interactions: DataFrame,
       folds: Int = 2, memoKey: Option[String] = None): DataFrame = {
     import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}

@@ -19,7 +19,7 @@ object Llm {
         length(col("text")).cast("long").as("n_chars_calc"))
       .orderBy(col("doc_id"))
 
-  def qualitySignals(spark: SparkSession, dir: String): DataFrame = {
+  def qualitySignalsGate(spark: SparkSession, dir: String): DataFrame = {
     val sig = TA.qualitySignalsPpm(col("text"), stop)
     Tables.documents(spark, dir)
       .select(col("doc_id") +: sig.map { case (n, c) => c.as(n) }: _*)
@@ -47,8 +47,11 @@ object Llm {
         w = 8)
       .orderBy(col("doc_id"))
 
-  private def substringDupScanOracle: String =
-    """WITH t AS (
+  /** md5-hashed 8-token windows `w` (doc_id, h) of every document —
+    * [[Dedup.substringDupScan]]'s windows at w = 8, which q98, q99 and
+    * q110 replay. */
+  private val windowCtes: String =
+    """t AS (
       |  SELECT doc_id,
       |         list_filter(string_split_regex(lower(text), '\s+'),
       |                     x -> x <> '') AS toks
@@ -56,7 +59,10 @@ object Llm {
       |e AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
       |u AS (SELECT doc_id, toks, unnest(range(n - 7)) AS i FROM e),
       |w AS (SELECT doc_id,
-      |             md5(array_to_string(toks[i+1:i+8], ' ')) AS h FROM u),
+      |             md5(array_to_string(toks[i+1:i+8], ' ')) AS h FROM u)""".stripMargin
+
+  private def substringDupScanOracle: String =
+    s"""WITH $windowCtes,
       |d AS (SELECT h FROM w GROUP BY h HAVING count(*) >= 2),
       |per AS (SELECT doc_id, count(*) AS n_windows,
       |               sum(CASE WHEN h IN (SELECT h FROM d)
@@ -81,15 +87,7 @@ object Llm {
   }
 
   private def decontaminateOracle: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |         list_filter(string_split_regex(lower(text), '\s+'),
-      |                     x -> x <> '') AS toks
-      |  FROM documents),
-      |e AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-      |u AS (SELECT doc_id, toks, unnest(range(n - 7)) AS i FROM e),
-      |w AS (SELECT doc_id,
-      |             md5(array_to_string(toks[i+1:i+8], ' ')) AS h FROM u),
+    s"""WITH $windowCtes,
       |ev AS (SELECT DISTINCT h FROM w WHERE doc_id % 31 = 0),
       |hits AS (SELECT doc_id, count(*) AS n_hits FROM w
       |         WHERE doc_id % 31 <> 0 AND h IN (SELECT h FROM ev)
@@ -119,15 +117,7 @@ object Llm {
   }
 
   private def decontaminateBloomOracle: String =
-    """WITH t AS (
-      |  SELECT doc_id,
-      |         list_filter(string_split_regex(lower(text), '\s+'),
-      |                     x -> x <> '') AS toks
-      |  FROM documents),
-      |e AS (SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 8),
-      |u AS (SELECT doc_id, toks, unnest(range(n - 7)) AS i FROM e),
-      |w AS (SELECT doc_id,
-      |             md5(array_to_string(toks[i+1:i+8], ' ')) AS h FROM u),
+    s"""WITH $windowCtes,
       |ev AS (SELECT DISTINCT h FROM w WHERE doc_id % 31 = 0),
       |ks AS (SELECT unnest([0, 1, 2]) AS k),
       |bits AS (SELECT DISTINCT
@@ -249,12 +239,9 @@ object Llm {
 
   /** Portable polynomial rolling fingerprint: order-sensitive fold
     * DuckDB replays via list_reduce over the identical md5 token
-    * hashes. The engine-specific xxhash64-chain variant
-    * ([[graft.llmops.TextAnalysis.rollingBulk]]) remains a library
-    * API, spec-pinned bit-exact against its expression form — its
-    * former rows-only gate (q57) was retired in r6 (VERDICT r5 list
-    * #6): this oracled fold checks the same rolling-fold math, so the
-    * unverifiable twin gate added no driver-visible signal. */
+    * hashes — the engine's one rolling fingerprint. The xxhash64-chain
+    * variant and its rows-only gate (q57) are gone: no oracle can
+    * replay an engine-specific hash. */
   def rollingPortable(spark: SparkSession, dir: String): DataFrame =
     TA.rollingPortableBulk(Tables.documents(spark, dir), "doc_id", "text")
       .orderBy(col("doc_id"))
@@ -368,19 +355,26 @@ object Llm {
   private def dupClustersOracle: String =
     s"""WITH RECURSIVE ${minhashCteChain()},
        |pairs AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.3),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION SELECT id_b, id_a FROM pairs),
-       |reach(id, comp) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-       |lab AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1),
+       |${minLabelCtes("pairs")},
        |o AS (SELECT d.doc_id, coalesce(l.comp, d.doc_id) AS cluster_id
        |      FROM documents d LEFT JOIN lab l ON l.id = d.doc_id)
        |SELECT doc_id, cluster_id,
        |       count(*) OVER (PARTITION BY cluster_id) AS cluster_size,
        |       doc_id = cluster_id AS is_canonical
        |FROM o ORDER BY doc_id""".stripMargin
+
+  /** Min-label closure of the undirected pair set `pairs` (id_a,
+    * id_b): `lab` (id, comp) maps every id in a pair to the smallest id
+    * it reaches — the fixpoint [[graft.ops.ConnectedComponents.hashMin]]
+    * computes, as true transitive closure. Needs `WITH RECURSIVE`. */
+  private def minLabelCtes(pairs: String): String =
+    s"""edges AS (SELECT id_a AS src, id_b AS dst FROM $pairs
+       |          UNION SELECT id_b, id_a FROM $pairs),
+       |reach(id, comp) AS (
+       |  SELECT src, src FROM edges
+       |  UNION
+       |  SELECT g.dst, r.comp FROM reach r JOIN edges g ON g.src = r.id),
+       |lab AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1)""".stripMargin
 
   /** Oracle SQL fragments shared by q64/q65/q79/q96: tokenization
     * identical to q30/q31/q53 (trim+lower+split on \s+).
@@ -515,35 +509,71 @@ object Llm {
     s"CASE (SELECT np FROM np) $entries END"
   }
 
-  /** Shared CTE chain recomputing the portable sign-LSH near-dup
-    * PAIR pipeline (quantize → buckets → candidate pairs → round-6
-    * cosine) — q97b selects from `cs` directly; the q105 semantic-dedup
-    * oracle builds the cluster graph on top of it. Both the plane
-    * count (np) and the table count (nt, r13) are derived inside the
-    * SQL, replaying the engine's autoPlanes + lshTablesFor defaults. */
-  private def lshPairCtes: String =
-    s"""e AS (SELECT vec_id, embedding FROM embeddings),
-      |np AS (SELECT min(j) AS np FROM (SELECT unnest(range(1, 62)) AS j)
-      |       WHERE ((SELECT count(*) FROM e) - 1) / (1::BIGINT << j)
-      |               < ${Similarity.NearDupOccupancy}),
-      |nt AS (SELECT ($lshTablesCaseSql) AS nt),
+  /** The embedding fixture quantized to the portable bucket math's
+    * fixed point: `e` (vec_id, embedding) and `qd` (vec_id, d,
+    * xq = floor(x·1000)), the input every sign-LSH oracle reads. */
+  private val quantizedCtes: String =
+    """e AS (SELECT vec_id, embedding FROM embeddings),
       |q AS (SELECT vec_id, unnest(embedding) AS x,
       |        unnest(range(len(embedding))) AS d FROM e),
-      |qd AS (SELECT vec_id, d, floor(x::DOUBLE * 1000)::BIGINT AS xq FROM q),
-      |grid AS (SELECT t, j, d,
-      |    CASE WHEN substr(md5(t || '_' || j || '_' || d), 1, 1)
-      |           IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END AS s
-      |  FROM (SELECT unnest(range((SELECT nt FROM nt))) AS t),
-      |       (SELECT unnest(range((SELECT np FROM np))) AS j),
-      |       (SELECT unnest(range(64)) AS d)),
-      |dots AS (SELECT vec_id, t, j, sum(xq * s) AS dot
-      |         FROM qd JOIN grid USING (d) GROUP BY 1, 2, 3),
-      |buck AS (SELECT vec_id, t,
-      |           sum(CASE WHEN dot > 0 THEN (1::BIGINT << j) ELSE 0 END) AS bucket
-      |         FROM dots GROUP BY 1, 2),
-      |pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      |          FROM buck a JOIN buck b
-      |            ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+      |qd AS (SELECT vec_id, d, floor(x::DOUBLE * 1000)::BIGINT AS xq FROM q)""".stripMargin
+
+  /** The portable sign-LSH replay every LSH oracle splices in:
+    * [[graft.llmops.Similarity.portableBuckets]] and
+    * [[graft.llmops.BucketPairs]] in SQL. It derives the plane count
+    * `np` ([[graft.llmops.Similarity.lshPlanesFor]]'s integer rule),
+    * builds the md5 ±1 plane grid, the quantized dots and each
+    * vector's per-table bucket code, and emits the distinct candidate
+    * pairs `pairs` (id_a, id_b). It reads `e` and `qd`
+    * ([[quantizedCtes]]) from the calling oracle.
+    *
+    * @param occupancy   the family's occupancy target
+    * @param tables      SQL for the table count; may read `np` and `ntCtes`
+    * @param probeRadius Hamming radius of the probe masks (0 or 1)
+    * @param ascending   pair order: id_a < id_b, else id_a ≠ id_b
+    * @param ntCtes      CTEs deriving the table count, placed after `np` */
+  private def lshBucketCtes(occupancy: Long, tables: String,
+      probeRadius: Int, ascending: Boolean, ntCtes: String = ""): String = {
+    require(probeRadius == 0 || probeRadius == 1,
+      "oracle replay generated for probe radius 0/1 only")
+    val (probes, probeSide) =
+      if (probeRadius == 0) ("", "buck")
+      else ("""masks AS (SELECT 0::BIGINT AS mask
+         |          UNION ALL
+         |          SELECT (1::BIGINT << j) AS mask
+         |          FROM (SELECT unnest(range((SELECT np FROM np))) AS j)),
+         |probes AS (SELECT vec_id, t, xor(bucket, mask) AS bucket
+         |           FROM buck, masks),
+         |""".stripMargin, "probes")
+    s"""np AS (SELECT min(j) AS np FROM (SELECT unnest(range(1, 62)) AS j)
+       |       WHERE ((SELECT count(*) FROM e) - 1) / (1::BIGINT << j)
+       |               < $occupancy),
+       |${if (ntCtes.isEmpty) "" else ntCtes + ","}
+       |grid AS (SELECT t, j, d,
+       |    CASE WHEN substr(md5(t || '_' || j || '_' || d), 1, 1)
+       |           IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END AS s
+       |  FROM (SELECT unnest(range($tables)) AS t),
+       |       (SELECT unnest(range((SELECT np FROM np))) AS j),
+       |       (SELECT unnest(range(64)) AS d)),
+       |dots AS (SELECT vec_id, t, j, sum(xq * s) AS dot
+       |         FROM qd JOIN grid USING (d) GROUP BY 1, 2, 3),
+       |buck AS (SELECT vec_id, t,
+       |           sum(CASE WHEN dot > 0 THEN (1::BIGINT << j) ELSE 0 END) AS bucket
+       |         FROM dots GROUP BY 1, 2),
+       |${probes}pairs AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+       |          FROM $probeSide a JOIN buck b
+       |            ON a.t = b.t AND a.bucket = b.bucket
+       |            AND a.vec_id ${if (ascending) "<" else "!="} b.vec_id)""".stripMargin
+  }
+
+  /** The near-dup PAIR pipeline (quantize → buckets → candidate pairs
+    * → round-6 cosine `cs`) at `tables` tables — q97b selects from
+    * `cs` directly, q97c measures its recall, and the q105
+    * semantic-dedup oracle builds the cluster graph on top of it. */
+  private def lshPairCtes(tables: String, ntCtes: String = ""): String =
+    s"""$quantizedCtes,
+      |${lshBucketCtes(Similarity.NearDupOccupancy, tables, probeRadius = 0,
+          ascending = true, ntCtes)},
       |cs AS (SELECT p.id_a, p.id_b,
       |         round(list_cosine_similarity(ea.embedding::DOUBLE[],
       |                                      eb.embedding::DOUBLE[]), 6) AS cos
@@ -551,8 +581,14 @@ object Llm {
       |       JOIN e ea ON ea.vec_id = p.id_a
       |       JOIN e eb ON eb.vec_id = p.id_b)""".stripMargin
 
+  /** [[lshPairCtes]] at the operator's derived table count: the
+    * `nt` CTE replays [[lshTablesCaseSql]] over the derived planes. */
+  private def nearDupPairCtes: String =
+    lshPairCtes("(SELECT nt FROM nt)",
+      s"nt AS (SELECT ($lshTablesCaseSql) AS nt)")
+
   private def embeddingNearDupsLshOracle: String =
-    s"""WITH $lshPairCtes
+    s"""WITH $nearDupPairCtes
        |SELECT id_a, id_b, cos FROM cs WHERE cos >= 0.4
        |ORDER BY id_a, id_b""".stripMargin
 
@@ -575,15 +611,9 @@ object Llm {
   }
 
   private def semanticDedupOracle: String =
-    s"""WITH RECURSIVE $lshPairCtes,
+    s"""WITH RECURSIVE $nearDupPairCtes,
        |sem AS (SELECT id_a, id_b FROM cs WHERE cos >= 0.4),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM sem
-       |          UNION SELECT id_b, id_a FROM sem),
-       |reach(id, comp) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT g.dst, r.comp FROM reach r JOIN edges g ON g.src = r.id),
-       |lab AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1),
+       |${minLabelCtes("sem")},
        |o AS (SELECT v.vec_id, coalesce(l.comp, v.vec_id) AS cluster_id
        |      FROM e v LEFT JOIN lab l ON l.id = v.vec_id)
        |SELECT vec_id, cluster_id,
@@ -629,32 +659,8 @@ object Llm {
   }
 
   private def embeddingNearDupRecallOracle: String =
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-      |np AS (SELECT min(j) AS np FROM (SELECT unnest(range(1, 62)) AS j)
-      |       WHERE ((SELECT count(*) FROM e) - 1) / (1::BIGINT << j)
-      |               < ${Similarity.NearDupOccupancy}),
-      |q AS (SELECT vec_id, unnest(embedding) AS x,
-      |        unnest(range(len(embedding))) AS d FROM e),
-      |qd AS (SELECT vec_id, d, floor(x::DOUBLE * 1000)::BIGINT AS xq FROM q),
-      |grid AS (SELECT t, j, d,
-      |    CASE WHEN substr(md5(t || '_' || j || '_' || d), 1, 1)
-      |           IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END AS s
-      |  FROM (SELECT unnest(range(8)) AS t),
-      |       (SELECT unnest(range((SELECT np FROM np))) AS j),
-      |       (SELECT unnest(range(64)) AS d)),
-      |dots AS (SELECT vec_id, t, j, sum(xq * s) AS dot
-      |         FROM qd JOIN grid USING (d) GROUP BY 1, 2, 3),
-      |buck AS (SELECT vec_id, t,
-      |           sum(CASE WHEN dot > 0 THEN (1::BIGINT << j) ELSE 0 END) AS bucket
-      |         FROM dots GROUP BY 1, 2),
-      |cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-      |         FROM buck a JOIN buck b
-      |           ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-      |lsh AS (SELECT p.id_a, p.id_b FROM cand p
-      |        JOIN e ea ON ea.vec_id = p.id_a
-      |        JOIN e eb ON eb.vec_id = p.id_b
-      |        WHERE round(list_cosine_similarity(ea.embedding::DOUBLE[],
-      |                                           eb.embedding::DOUBLE[]), 6) >= 0.4),
+    s"""WITH ${lshPairCtes("8")},
+      |lsh AS (SELECT id_a, id_b FROM cs WHERE cos >= 0.4),
       |truth AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
       |          FROM e a CROSS JOIN e b
       |          WHERE a.vec_id < b.vec_id
@@ -830,7 +836,7 @@ object Llm {
        |       QUALIFY row_number() OVER (PARTITION BY id, sub
        |                                  ORDER BY dd, c) = 1),
        |cand2 AS (SELECT p.query_id, a.vec_id AS neighbor_id
-       |       FROM probes p JOIN assigned a
+       |       FROM cell_probes p JOIN assigned a
        |         ON a.cell = p.cell AND a.vec_id != p.query_id
        |       WHERE p.query_id < 8),
        |adc2 AS (SELECT c.query_id, c.neighbor_id,
@@ -897,22 +903,30 @@ object Llm {
       .orderBy(col("doc_id"), col("chunk_idx"))
   }
 
+  /** Language-ID inputs as the CTE `name` over `src`, which holds
+    * `txt` (the text, null as '') and `toks` (its lowercased whitespace
+    * tokens): every column of `src` plus the CJK character count, the
+    * length floor and each language's marker-word hits —
+    * [[TA.langId]]'s inputs, which q34 and q96 replay. */
+  private def langHitsCte(name: String, src: String): String =
+    s"""$name AS (SELECT *,
+       |  length(regexp_replace(txt, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) AS cjk,
+       |  greatest(length(txt),1) AS nchars,
+       |  len(list_filter(toks, w -> list_contains(['the','and','of','to','is','with','that','for'], w))) AS h_en,
+       |  len(list_filter(toks, w -> list_contains(['el','la','de','que','y','los','las','una','por'], w))) AS h_es,
+       |  len(list_filter(toks, w -> list_contains(['der','die','das','und','ist','nicht','mit','ein'], w))) AS h_de,
+       |  len(list_filter(toks, w -> list_contains(['le','la','les','des','est','une','dans','pour','et'], w))) AS h_fr
+       |  FROM $src)""".stripMargin
+
   private def llmPipelineOracle: String =
     s"""WITH RECURSIVE
        |adm AS (SELECT doc_id, text FROM documents
        |        WHERE text IS NOT NULL AND length(trim(text)) >= 20),
        |lt AS (SELECT doc_id, text, coalesce(text,'') AS txt,
        |         CASE WHEN trim(coalesce(text,''))='' THEN []::VARCHAR[]
-       |              ELSE string_split_regex(trim(lower(coalesce(text,''))), '\\s+') END AS ltoks
+       |              ELSE string_split_regex(trim(lower(coalesce(text,''))), '\\s+') END AS toks
        |       FROM adm),
-       |lh AS (SELECT doc_id, text,
-       |         length(regexp_replace(txt, '[^\\x{4e00}-\\x{9fff}]', '', 'g')) AS cjk,
-       |         greatest(length(txt),1) AS nchars,
-       |         len(list_filter(ltoks, w -> list_contains(['the','and','of','to','is','with','that','for'], w))) AS h_en,
-       |         len(list_filter(ltoks, w -> list_contains(['el','la','de','que','y','los','las','una','por'], w))) AS h_es,
-       |         len(list_filter(ltoks, w -> list_contains(['der','die','das','und','ist','nicht','mit','ein'], w))) AS h_de,
-       |         len(list_filter(ltoks, w -> list_contains(['le','la','les','des','est','une','dans','pour','et'], w))) AS h_fr
-       |       FROM lt),
+       |${langHitsCte("lh", "lt")},
        |enl AS (SELECT doc_id, text FROM lh
        |        WHERE NOT (cjk/nchars::DOUBLE > 0.2)
        |          AND greatest(h_en,h_es,h_de,h_fr) > 0
@@ -923,13 +937,7 @@ object Llm {
        |base AS (SELECT doc_id, text FROM exd WHERE doc_id = canon),
        |${minhashCteChain("base")},
        |pairs AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.3),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-       |          UNION SELECT id_b, id_a FROM pairs),
-       |reach(id, comp) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-       |lab AS (SELECT id, min(comp) AS comp FROM reach GROUP BY 1),
+       |${minLabelCtes("pairs")},
        |surv AS (SELECT b.doc_id, b.text FROM base b
        |         LEFT JOIN lab l ON l.id = b.doc_id
        |         WHERE l.comp IS NULL OR l.comp = b.doc_id),
@@ -1477,20 +1485,27 @@ object Llm {
     * pipeline hash-exact across engines. */
   def bm25Search(spark: SparkSession, dir: String): DataFrame =
     graft.text.Bm25.search(Tables.documents(spark, dir), "doc_id", "text",
-        queryTerms = Seq("spark", "window", "merge"), topK = 20)
+        queryTerms = bm25Terms, topK = 20)
       .select(col("doc_id"), col("score_u"), col("score"), col("rank"))
       .orderBy(col("rank"))
 
-  private def bm25Oracle: String =
-    """WITH base AS (SELECT doc_id,
+  /** The fixed query every BM25 gate ranks for. */
+  private val bm25Terms = Seq("spark", "window", "merge")
+
+  /** [[graft.text.Bm25.search]]'s scoring replayed for [[bm25Terms]]:
+    * per-(doc, term) integer micro-contributions `contrib`, and the
+    * top-20 `bmtop` (doc_id, score_u, rank) — shared by q84, q113 and
+    * q147. */
+  private val bm25Ctes: String =
+    s"""base AS (SELECT doc_id,
       |    CASE WHEN trim(coalesce(text,'')) = '' THEN []::VARCHAR[]
-      |         ELSE string_split_regex(trim(lower(coalesce(text,''))), '\s+')
+      |         ELSE string_split_regex(trim(lower(coalesce(text,''))), '\\s+')
       |    END AS toks FROM documents),
       |dl AS (SELECT doc_id, len(toks)::BIGINT AS dl FROM base),
       |stats AS (SELECT count(*)::BIGINT AS n_docs, sum(dl)::BIGINT AS sum_dl FROM dl),
       |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf
       |       FROM (SELECT doc_id, unnest(toks) AS term FROM base)
-      |       WHERE term IN ('spark', 'window', 'merge') GROUP BY 1, 2),
+      |       WHERE term IN (${bm25Terms.map("'" + _ + "'").mkString(", ")}) GROUP BY 1, 2),
       |df AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
       |contrib AS (SELECT t.doc_id,
       |    round(ln((s.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
@@ -1499,12 +1514,16 @@ object Llm {
       |      * 1000000)::BIGINT AS s_u
       |  FROM tf t JOIN df d USING (term) JOIN dl l USING (doc_id)
       |  CROSS JOIN stats s),
-      |scored AS (SELECT doc_id, sum(s_u)::BIGINT AS score_u FROM contrib GROUP BY 1),
-      |ranked AS (SELECT doc_id, score_u, score_u / 1000000.0 AS score,
-      |    row_number() OVER (ORDER BY score_u DESC, doc_id) AS rank
-      |  FROM scored)
-      |SELECT doc_id, score_u, score, rank FROM ranked WHERE rank <= 20
-      |ORDER BY rank""".stripMargin
+      |bmsc AS (SELECT doc_id, sum(s_u)::BIGINT AS score_u FROM contrib GROUP BY 1),
+      |bmr AS (SELECT doc_id, score_u,
+      |          row_number() OVER (ORDER BY score_u DESC, doc_id) AS rank
+      |        FROM bmsc),
+      |bmtop AS (SELECT doc_id, score_u, rank FROM bmr WHERE rank <= 20)""".stripMargin
+
+  private def bm25Oracle: String =
+    s"""WITH $bm25Ctes
+      |SELECT doc_id, score_u, score_u / 1000000.0 AS score, rank
+      |FROM bmtop ORDER BY rank""".stripMargin
 
   /** Hybrid retrieval ([[graft.text.HybridSearch]]): the same query
     * through two model-distinct rankers — BM25 (q84) and Dirichlet
@@ -1515,36 +1534,16 @@ object Llm {
     * fused order replay in SQL. */
   def hybridRrf(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val terms = Seq("spark", "window", "merge")
-    val bm = graft.text.Bm25.search(docs, "doc_id", "text", terms, topK = 20)
+    val bm = graft.text.Bm25.search(docs, "doc_id", "text", bm25Terms,
+      topK = 20)
     val ql = graft.text.HybridSearch.queryLikelihood(docs, "doc_id", "text",
-      terms, mu = 300.0, topK = 20)
+      bm25Terms, mu = 300.0, topK = 20)
     graft.text.HybridSearch.rrfFuse(bm, ql, k = 60, topK = 10)
       .orderBy(col("rank"))
   }
 
   private def hybridRrfOracle: String =
-    """WITH base AS (SELECT doc_id,
-      |    CASE WHEN trim(coalesce(text,'')) = '' THEN []::VARCHAR[]
-      |         ELSE string_split_regex(trim(lower(coalesce(text,''))), '\s+')
-      |    END AS toks FROM documents),
-      |dl AS (SELECT doc_id, len(toks)::BIGINT AS dl FROM base),
-      |stats AS (SELECT count(*)::BIGINT AS n_docs, sum(dl)::BIGINT AS sum_dl FROM dl),
-      |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-      |       FROM (SELECT doc_id, unnest(toks) AS term FROM base)
-      |       WHERE term IN ('spark', 'window', 'merge') GROUP BY 1, 2),
-      |df AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-      |contrib AS (SELECT t.doc_id,
-      |    round(ln((s.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
-      |      * t.tf * 2.2
-      |      / (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * l.dl * s.n_docs / s.sum_dl))
-      |      * 1000000)::BIGINT AS s_u
-      |  FROM tf t JOIN df d USING (term) JOIN dl l USING (doc_id)
-      |  CROSS JOIN stats s),
-      |bmsc AS (SELECT doc_id, sum(s_u)::BIGINT AS score_u FROM contrib GROUP BY 1),
-      |bmr AS (SELECT doc_id, row_number() OVER (ORDER BY score_u DESC, doc_id)
-      |          AS rank FROM bmsc),
-      |bmtop AS (SELECT doc_id, rank FROM bmr WHERE rank <= 20),
+    s"""WITH $bm25Ctes,
       |tot AS (SELECT sum(dl)::BIGINT AS total FROM dl),
       |cf AS (SELECT term, sum(tf)::BIGINT AS cf FROM tf GROUP BY 1),
       |qls AS (SELECT l.doc_id,
@@ -1584,8 +1583,8 @@ object Llm {
   def hybridTextVector(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val emb = Tables.embeddings(spark, dir)
-    val bm = graft.text.Bm25.search(docs, "doc_id", "text",
-      Seq("spark", "window", "merge"), topK = 20)
+    val bm = graft.text.Bm25.search(docs, "doc_id", "text", bm25Terms,
+      topK = 20)
     val ann = graft.llmops.Similarity
       .bruteForceTopK(emb.filter(col("vec_id") === 0), emb, k = 20)
       .select(col("neighbor_id").cast("long").as("doc_id"),
@@ -1595,27 +1594,7 @@ object Llm {
   }
 
   private def hybridTextVectorOracle: String =
-    """WITH base AS (SELECT doc_id,
-      |    CASE WHEN trim(coalesce(text,'')) = '' THEN []::VARCHAR[]
-      |         ELSE string_split_regex(trim(lower(coalesce(text,''))), '\s+')
-      |    END AS toks FROM documents),
-      |dl AS (SELECT doc_id, len(toks)::BIGINT AS dl FROM base),
-      |stats AS (SELECT count(*)::BIGINT AS n_docs, sum(dl)::BIGINT AS sum_dl FROM dl),
-      |tf AS (SELECT doc_id, term, count(*)::BIGINT AS tf
-      |       FROM (SELECT doc_id, unnest(toks) AS term FROM base)
-      |       WHERE term IN ('spark', 'window', 'merge') GROUP BY 1, 2),
-      |df AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1),
-      |contrib AS (SELECT t.doc_id,
-      |    round(ln((s.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)
-      |      * t.tf * 2.2
-      |      / (t.tf + 1.2 * (1.0 - 0.75 + 0.75 * l.dl * s.n_docs / s.sum_dl))
-      |      * 1000000)::BIGINT AS s_u
-      |  FROM tf t JOIN df d USING (term) JOIN dl l USING (doc_id)
-      |  CROSS JOIN stats s),
-      |bmsc AS (SELECT doc_id, sum(s_u)::BIGINT AS score_u FROM contrib GROUP BY 1),
-      |bmr AS (SELECT doc_id, row_number() OVER (ORDER BY score_u DESC, doc_id)
-      |          AS rank FROM bmsc),
-      |bmtop AS (SELECT doc_id, rank FROM bmr WHERE rank <= 20),
+    s"""WITH $bm25Ctes,
       |annq AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
       |anns AS (SELECT vec_id::BIGINT AS doc_id,
       |           list_cosine_similarity(qv, embedding::DOUBLE[]) AS cos
@@ -1732,15 +1711,28 @@ object Llm {
     if (Similarity.TopKProbeRadius >= 1) s"$t0 + $t1" else t0
   }
 
+  /** The top-k oracles' shared replay: [[lshBucketCtes]] at the
+    * top-k occupancy, exact cosine re-rank, top 5 per query. */
+  private def lshTopKOracle(tables: String, probeRadius: Int,
+      ntCtes: String = ""): String =
+    s"""WITH RECURSIVE $quantizedCtes,
+      |${lshBucketCtes(Similarity.TopKOccupancy, tables, probeRadius,
+          ascending = false, ntCtes)},
+      |cs AS (SELECT p.id_a AS query_id, p.id_b AS neighbor_id,
+      |         list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) AS c
+      |       FROM pairs p
+      |       JOIN e ea ON ea.vec_id = p.id_a
+      |       JOIN e eb ON eb.vec_id = p.id_b),
+      |r AS (SELECT query_id, neighbor_id, round(c, 6) AS cos,
+      |        row_number() OVER (PARTITION BY query_id
+      |                           ORDER BY c DESC, neighbor_id) AS rn
+      |      FROM cs)
+      |SELECT query_id, neighbor_id, cos, rn FROM r WHERE rn <= 5
+      |ORDER BY query_id, rn""".stripMargin
+
   private def annLshPortableOracle: String =
-    s"""WITH RECURSIVE e AS (SELECT vec_id, embedding FROM embeddings),
-      |np AS (SELECT min(j) AS np FROM (SELECT unnest(range(1, 62)) AS j)
-      |       WHERE ((SELECT count(*) FROM e) - 1) / (1::BIGINT << j)
-      |               < ${Similarity.TopKOccupancy}),
-      |q AS (SELECT vec_id, unnest(embedding) AS x,
-      |        unnest(range(len(embedding))) AS d FROM e),
-      |qd AS (SELECT vec_id, d, floor(x::DOUBLE * 1000)::BIGINT AS xq FROM q),
-      |nrm AS (SELECT vec_id, sum(xq * xq) AS n2 FROM qd GROUP BY 1),
+    lshTopKOracle("(SELECT nt FROM nt)", Similarity.TopKProbeRadius,
+      s"""nrm AS (SELECT vec_id, sum(xq * xq) AS n2 FROM qd GROUP BY 1),
       |pid AS (SELECT vec_id FROM e ORDER BY vec_id
       |        LIMIT ${Similarity.TopKDesignProbeQueries}),
       |pd AS (SELECT qd.vec_id, qd.d, qd.xq FROM qd JOIN pid USING (vec_id)),
@@ -1795,39 +1787,7 @@ object Llm {
       |  SELECT t + 1, r * (1000000 - (SELECT pt FROM pt)) // 1000000
       |  FROM tt WHERE r > ${1000000L - Similarity.TopKTargetRecallPpm}
       |            AND t < 4096),
-      |nt AS (SELECT max(t) AS nt FROM tt),
-      |grid AS (SELECT t, j, d,
-      |    CASE WHEN substr(md5(t || '_' || j || '_' || d), 1, 1)
-      |           IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END AS s
-      |  FROM (SELECT unnest(range((SELECT nt FROM nt))) AS t),
-      |       (SELECT unnest(range((SELECT np FROM np))) AS j),
-      |       (SELECT unnest(range(64)) AS d)),
-      |dots AS (SELECT vec_id, t, j, sum(xq * s) AS dot
-      |         FROM qd JOIN grid USING (d) GROUP BY 1, 2, 3),
-      |buck AS (SELECT vec_id, t,
-      |           sum(CASE WHEN dot > 0 THEN (1::BIGINT << j) ELSE 0 END) AS bucket
-      |         FROM dots GROUP BY 1, 2),
-      |masks AS (SELECT 0::BIGINT AS mask
-      |          UNION ALL
-      |          SELECT (1::BIGINT << j) AS mask
-      |          FROM (SELECT unnest(range((SELECT np FROM np))) AS j)
-      |          WHERE ${Similarity.TopKProbeRadius} >= 1),
-      |probes AS (SELECT vec_id, t, xor(bucket, mask) AS bucket
-      |           FROM buck, masks),
-      |pairs AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-      |          FROM probes a JOIN buck b
-      |            ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id != b.vec_id),
-      |cs AS (SELECT p.query_id, p.neighbor_id,
-      |         list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) AS c
-      |       FROM pairs p
-      |       JOIN e ea ON ea.vec_id = p.query_id
-      |       JOIN e eb ON eb.vec_id = p.neighbor_id),
-      |r AS (SELECT query_id, neighbor_id, round(c, 6) AS cos,
-      |        row_number() OVER (PARTITION BY query_id
-      |                           ORDER BY c DESC, neighbor_id) AS rn
-      |      FROM cs)
-      |SELECT query_id, neighbor_id, cos, rn FROM r WHERE rn <= 5
-      |ORDER BY query_id, rn""".stripMargin
+      |nt AS (SELECT max(t) AS nt FROM tt)""".stripMargin)
 
   /** Multi-probe portable sign-LSH ANN (r14 — the q66 pattern at
     * Hamming probe radius 1): each query probes its own bucket plus
@@ -1847,44 +1807,7 @@ object Llm {
   }
 
   private def annLshMultiProbeOracle: String =
-    s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-      |np AS (SELECT min(j) AS np FROM (SELECT unnest(range(1, 62)) AS j)
-      |       WHERE ((SELECT count(*) FROM e) - 1) / (1::BIGINT << j)
-      |               < ${Similarity.TopKOccupancy}),
-      |q AS (SELECT vec_id, unnest(embedding) AS x,
-      |        unnest(range(len(embedding))) AS d FROM e),
-      |qd AS (SELECT vec_id, d, floor(x::DOUBLE * 1000)::BIGINT AS xq FROM q),
-      |grid AS (SELECT t, j, d,
-      |    CASE WHEN substr(md5(t || '_' || j || '_' || d), 1, 1)
-      |           IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END AS s
-      |  FROM (SELECT unnest(range(4)) AS t),
-      |       (SELECT unnest(range((SELECT np FROM np))) AS j),
-      |       (SELECT unnest(range(64)) AS d)),
-      |dots AS (SELECT vec_id, t, j, sum(xq * s) AS dot
-      |         FROM qd JOIN grid USING (d) GROUP BY 1, 2, 3),
-      |buck AS (SELECT vec_id, t,
-      |           sum(CASE WHEN dot > 0 THEN (1::BIGINT << j) ELSE 0 END) AS bucket
-      |         FROM dots GROUP BY 1, 2),
-      |masks AS (SELECT 0::BIGINT AS mask
-      |          UNION ALL
-      |          SELECT (1::BIGINT << j) AS mask
-      |          FROM (SELECT unnest(range((SELECT np FROM np))) AS j)),
-      |probes AS (SELECT vec_id, t, xor(bucket, mask) AS bucket
-      |           FROM buck, masks),
-      |pairs AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-      |          FROM probes a JOIN buck b
-      |            ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id != b.vec_id),
-      |cs AS (SELECT p.query_id, p.neighbor_id,
-      |         list_cosine_similarity(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) AS c
-      |       FROM pairs p
-      |       JOIN e ea ON ea.vec_id = p.query_id
-      |       JOIN e eb ON eb.vec_id = p.neighbor_id),
-      |r AS (SELECT query_id, neighbor_id, round(c, 6) AS cos,
-      |        row_number() OVER (PARTITION BY query_id
-      |                           ORDER BY c DESC, neighbor_id) AS rn
-      |      FROM cs)
-      |SELECT query_id, neighbor_id, cos, rn FROM r WHERE rn <= 5
-      |ORDER BY query_id, rn""".stripMargin
+    lshTopKOracle("4", probeRadius = 1)
 
   /** IVF (KMeans-cell) approximate ANN (rows-only — ML clustering). */
   def annIvf(spark: SparkSession, dir: String): DataFrame =
@@ -1913,22 +1836,22 @@ object Llm {
       |cent AS (SELECT label AS cell, d, sum(xq) AS m FROM qd GROUP BY 1, 2),
       |cnorm AS (SELECT cell, sum(m * m) AS cn FROM cent GROUP BY 1),
       |qn AS (SELECT vec_id, sum(xq * xq) AS nq FROM qd GROUP BY 1),
-      |dots AS (SELECT q.vec_id, c.cell, sum(q.xq * c.m) AS dot
+      |cell_dots AS (SELECT q.vec_id, c.cell, sum(q.xq * c.m) AS dot
       |         FROM qd q JOIN cent c USING (d) GROUP BY 1, 2),
       |route AS (SELECT d.vec_id, d.cell,
       |    CASE WHEN n.nq = 0 OR cn.cn = 0 THEN 0.0
       |         ELSE d.dot::DOUBLE / (sqrt(n.nq::DOUBLE) * sqrt(cn.cn::DOUBLE))
       |    END AS ccos
-      |  FROM dots d JOIN qn n ON n.vec_id = d.vec_id
+      |  FROM cell_dots d JOIN qn n ON n.vec_id = d.vec_id
       |  JOIN cnorm cn ON cn.cell = d.cell),
       |rr AS (SELECT vec_id, cell,
       |         row_number() OVER (PARTITION BY vec_id
       |                            ORDER BY ccos DESC, cell) AS ar
       |       FROM route),
       |assigned AS (SELECT vec_id, cell FROM rr WHERE ar = 1),
-      |probes AS (SELECT vec_id AS query_id, cell FROM rr WHERE ar <= 2),
+      |cell_probes AS (SELECT vec_id AS query_id, cell FROM rr WHERE ar <= 2),
       |cand AS (SELECT p.query_id, a.vec_id AS neighbor_id
-      |         FROM probes p JOIN assigned a
+      |         FROM cell_probes p JOIN assigned a
       |           ON a.cell = p.cell AND a.vec_id != p.query_id),
       |ivf_cs AS (SELECT c.query_id, c.neighbor_id,
       |        list_cosine_similarity(ea.embedding::DOUBLE[],
@@ -2122,29 +2045,14 @@ object Llm {
 
   private def annRecallOracle: String =
     s"""WITH $ivfPortableCtes,
-       |lnp AS (SELECT min(j) AS np FROM (SELECT unnest(range(1, 62)) AS j)
-       |        WHERE ((SELECT count(*) FROM e) - 1) / (1::BIGINT << j)
-       |                < ${Similarity.TopKOccupancy}),
-       |lgrid AS (SELECT t, j, d,
-       |    CASE WHEN substr(md5(t || '_' || j || '_' || d), 1, 1)
-       |           IN ('8','9','a','b','c','d','e','f') THEN 1 ELSE -1 END AS s
-       |  FROM (SELECT unnest(range(8)) AS t),
-       |       (SELECT unnest(range((SELECT np FROM lnp))) AS j),
-       |       (SELECT unnest(range(64)) AS d)),
-       |ldots AS (SELECT vec_id, t, j, sum(xq * s) AS dot
-       |         FROM qd JOIN lgrid USING (d) GROUP BY 1, 2, 3),
-       |lbuck AS (SELECT vec_id, t,
-       |           sum(CASE WHEN dot > 0 THEN (1::BIGINT << j) ELSE 0 END) AS bucket
-       |         FROM ldots GROUP BY 1, 2),
-       |lpairs AS (SELECT DISTINCT a.vec_id AS query_id, b.vec_id AS neighbor_id
-       |          FROM lbuck a JOIN lbuck b
-       |            ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id != b.vec_id),
-       |lcs AS (SELECT p.query_id, p.neighbor_id,
+       |${lshBucketCtes(Similarity.TopKOccupancy, "8", probeRadius = 0,
+           ascending = false)},
+       |lcs AS (SELECT p.id_a AS query_id, p.id_b AS neighbor_id,
        |         list_cosine_similarity(ea.embedding::DOUBLE[],
        |                                eb.embedding::DOUBLE[]) AS c
-       |       FROM lpairs p
-       |       JOIN e ea ON ea.vec_id = p.query_id
-       |       JOIN e eb ON eb.vec_id = p.neighbor_id),
+       |       FROM pairs p
+       |       JOIN e ea ON ea.vec_id = p.id_a
+       |       JOIN e eb ON eb.vec_id = p.id_b),
        |lr AS (SELECT query_id, neighbor_id,
        |        row_number() OVER (PARTITION BY query_id
        |                           ORDER BY c DESC, neighbor_id) AS rn
@@ -2289,7 +2197,7 @@ object Llm {
         | length(text) AS n_chars_calc
         |FROM documents
         |ORDER BY doc_id""".stripMargin)),
-    QueryDef("q31_quality_signals", qualitySignals, Some(
+    QueryDef("q31_quality_signals", qualitySignalsGate, Some(
       s"""WITH t AS (
          |  SELECT doc_id, coalesce(text, '') AS txt,
          |    CASE WHEN trim(coalesce(text, '')) = '' THEN []::VARCHAR[]
@@ -2324,18 +2232,11 @@ object Llm {
         |FROM h
         |ORDER BY doc_id""".stripMargin)),
     QueryDef("q34_langid_fingerprint", langIdStats, Some(
-      """WITH t AS (SELECT doc_id, lang AS labeled_lang, coalesce(text,'') AS txt,
+      s"""WITH t AS (SELECT doc_id, lang AS labeled_lang, coalesce(text,'') AS txt,
         |  CASE WHEN trim(coalesce(text,''))='' THEN []::VARCHAR[]
-        |       ELSE string_split_regex(trim(lower(coalesce(text,''))), '\s+') END AS toks
+        |       ELSE string_split_regex(trim(lower(coalesce(text,''))), '\\s+') END AS toks
         |  FROM documents),
-        |h AS (SELECT doc_id, labeled_lang, txt, toks,
-        |  length(regexp_replace(txt, '[^\x{4e00}-\x{9fff}]', '', 'g')) AS cjk,
-        |  greatest(length(txt),1) AS nchars,
-        |  len(list_filter(toks, w -> list_contains(['the','and','of','to','is','with','that','for'], w))) AS h_en,
-        |  len(list_filter(toks, w -> list_contains(['el','la','de','que','y','los','las','una','por'], w))) AS h_es,
-        |  len(list_filter(toks, w -> list_contains(['der','die','das','und','ist','nicht','mit','ein'], w))) AS h_de,
-        |  len(list_filter(toks, w -> list_contains(['le','la','les','des','est','une','dans','pour','et'], w))) AS h_fr
-        |  FROM t)
+        |${langHitsCte("h", "t")}
         |SELECT doc_id, labeled_lang,
         |  CASE WHEN cjk/nchars::DOUBLE > 0.2 THEN 'zh'
         |       WHEN greatest(h_en,h_es,h_de,h_fr) = 0 THEN 'und'
@@ -2344,7 +2245,7 @@ object Llm {
         |       WHEN h_de >= h_fr THEN 'de'
         |       ELSE 'fr' END AS pred_lang,
         |  CAST(coalesce(list_sum(list_transform(
-        |    regexp_extract_all(lower(txt), '[a-z\x{00c0}-\x{024f}\x{4e00}-\x{9fff}]+|[0-9]+|[^\sa-z0-9\x{00c0}-\x{024f}\x{4e00}-\x{9fff}]'),
+        |    regexp_extract_all(lower(txt), '[a-z\\x{00c0}-\\x{024f}\\x{4e00}-\\x{9fff}]+|[0-9]+|[^\\sa-z0-9\\x{00c0}-\\x{024f}\\x{4e00}-\\x{9fff}]'),
         |    p -> greatest(CAST(ceil(length(p)/4.0) AS BIGINT), 1))), 0) AS BIGINT) AS n_subwords
         |FROM h ORDER BY doc_id""".stripMargin)),
     QueryDef("q35_minhash_near_dups", minhashNearDups, Some(minhashNearDupsOracle)),

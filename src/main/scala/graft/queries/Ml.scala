@@ -393,6 +393,37 @@ object Ml {
   private val stopList =
     Tokenize.englishStopwords.map("'" + _ + "'").mkString(",")
 
+  /** The TF-IDF weights of [[docTfidfWeights]] replayed in SQL: `wn`
+    * (doc_id, term, wt), each document's L2-normalized smoothed-idf
+    * weights — shared by q86, q41 and q61. */
+  private val tfidfCtes: String =
+    s"""toks AS (
+       |  SELECT doc_id, unnest(list_filter(
+       |    regexp_extract_all(lower(text), '([a-z0-9]+(?:\\+\\+|#)?)', 1),
+       |    w -> (len(w) > 1 OR w IN ('c','r')) AND NOT list_contains([$stopList], w)
+       |  )) AS term
+       |  FROM documents),
+       |n AS (SELECT count(*) AS n FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
+       |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |fdf AS (SELECT term, df FROM df, n WHERE df <= CAST(floor(n.n * 0.8) AS BIGINT)),
+       |w AS (SELECT tf.doc_id, tf.term,
+       |        tf.tf * (ln((n.n + 1.0) / (fdf.df + 1.0)) + 1.0) AS w_raw
+       |      FROM tf JOIN fdf USING (term) CROSS JOIN n),
+       |norms AS (SELECT doc_id, sqrt(sum(w_raw * w_raw)) AS norm
+       |          FROM w GROUP BY 1),
+       |wn AS (SELECT w.doc_id, w.term, w.w_raw / norms.norm AS wt
+       |       FROM w JOIN norms USING (doc_id))""".stripMargin
+
+  /** Each document's 4 heaviest [[tfidfCtes]] terms, `prefix` (doc_id,
+    * term, wt) — the similarity join's input in q41 and q61. */
+  private val tfidfPrefixCte: String =
+    """prefix AS (SELECT doc_id, term, wt FROM (
+      |    SELECT doc_id, term, wt,
+      |      row_number() OVER (PARTITION BY doc_id
+      |                         ORDER BY wt DESC, term) AS pr
+      |    FROM wn) WHERE pr <= 4)""".stripMargin
+
   /** L2-normalized TF-IDF document vectors, top-5 terms per doc — the
     * vectorization surface itself (q41 gates the similarity JOIN built
     * on these weights; this gates the weights). Rank on the rounded
@@ -410,56 +441,19 @@ object Ml {
   }
 
   private def tfidfVectorsOracle: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_filter(
-       |    regexp_extract_all(lower(text), '([a-z0-9]+(?:\\+\\+|#)?)', 1),
-       |    w -> (len(w) > 1 OR w IN ('c','r')) AND NOT list_contains([$stopList], w)
-       |  )) AS term
-       |  FROM documents),
-       |n AS (SELECT count(*) AS n FROM documents),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-       |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-       |fdf AS (SELECT term, df FROM df, n WHERE df <= CAST(floor(n.n * 0.8) AS BIGINT)),
-       |w AS (SELECT tf.doc_id, tf.term,
-       |        tf.tf * (ln((n.n + 1.0) / (fdf.df + 1.0)) + 1.0) AS w_raw
-       |      FROM tf JOIN fdf USING (term) CROSS JOIN n),
-       |norms AS (SELECT doc_id, sqrt(sum(w_raw * w_raw)) AS norm
-       |          FROM w GROUP BY 1),
-       |wn AS (SELECT w.doc_id, w.term,
-       |         round(w.w_raw / norms.norm, 6) AS w6
-       |       FROM w JOIN norms USING (doc_id)),
+    s"""WITH $tfidfCtes,
        |r AS (SELECT doc_id, term, w6,
        |        row_number() OVER (PARTITION BY doc_id
        |                           ORDER BY w6 DESC, term) AS pr
-       |      FROM wn)
+       |      FROM (SELECT doc_id, term, round(wt, 6) AS w6 FROM wn))
        |SELECT doc_id, term, w6 AS w, pr FROM r WHERE pr <= 5
        |ORDER BY doc_id, pr""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
     QueryDef("q86_tfidf_vectors", tfidfVectors, Some(tfidfVectorsOracle)),
     QueryDef("q41_tfidf_similar_docs", tfidfSimilarDocs, Some(
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(
-         |    regexp_extract_all(lower(text), '([a-z0-9]+(?:\\+\\+|#)?)', 1),
-         |    w -> (len(w) > 1 OR w IN ('c','r')) AND NOT list_contains([$stopList], w)
-         |  )) AS term
-         |  FROM documents),
-         |n AS (SELECT count(*) AS n FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |fdf AS (SELECT term, df FROM df, n WHERE df <= CAST(floor(n.n * 0.8) AS BIGINT)),
-         |w AS (SELECT tf.doc_id, tf.term,
-         |        tf.tf * (ln((n.n + 1.0) / (fdf.df + 1.0)) + 1.0) AS w_raw
-         |      FROM tf JOIN fdf USING (term) CROSS JOIN n),
-         |norms AS (SELECT doc_id, sqrt(sum(w_raw * w_raw)) AS norm
-         |          FROM w GROUP BY 1),
-         |wn AS (SELECT w.doc_id, w.term, w.w_raw / norms.norm AS wt
-         |       FROM w JOIN norms USING (doc_id)),
-         |prefix AS (SELECT doc_id, term, wt FROM (
-         |    SELECT doc_id, term, wt,
-         |      row_number() OVER (PARTITION BY doc_id
-         |                         ORDER BY wt DESC, term) AS pr
-         |    FROM wn) WHERE pr <= 4),
+      s"""WITH $tfidfCtes,
+         |$tfidfPrefixCte,
          |sims AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |           sum(a.wt * b.wt) AS score
          |         FROM prefix a JOIN prefix b
@@ -603,28 +597,8 @@ object Ml {
       (s: SparkSession, _: String) => graft.ml.FmRanker.scoreReplay(s),
       Some(graft.ml.FmRanker.scoreReplayOracle)),
     QueryDef("q61_content_recommend", contentRecommend, Some(
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(
-         |    regexp_extract_all(lower(text), '([a-z0-9]+(?:\\+\\+|#)?)', 1),
-         |    w -> (len(w) > 1 OR w IN ('c','r')) AND NOT list_contains([$stopList], w)
-         |  )) AS term
-         |  FROM documents),
-         |n AS (SELECT count(*) AS n FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |df AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |fdf AS (SELECT term, df FROM df, n WHERE df <= CAST(floor(n.n * 0.8) AS BIGINT)),
-         |w AS (SELECT tf.doc_id, tf.term,
-         |        tf.tf * (ln((n.n + 1.0) / (fdf.df + 1.0)) + 1.0) AS w_raw
-         |      FROM tf JOIN fdf USING (term) CROSS JOIN n),
-         |norms AS (SELECT doc_id, sqrt(sum(w_raw * w_raw)) AS norm
-         |          FROM w GROUP BY 1),
-         |wn AS (SELECT w.doc_id, w.term, w.w_raw / norms.norm AS wt
-         |       FROM w JOIN norms USING (doc_id)),
-         |prefix AS (SELECT doc_id, term, wt FROM (
-         |    SELECT doc_id, term, wt,
-         |      row_number() OVER (PARTITION BY doc_id
-         |                         ORDER BY wt DESC, term) AS pr
-         |    FROM wn) WHERE pr <= 4),
+      s"""WITH $tfidfCtes,
+         |$tfidfPrefixCte,
          |raw AS (SELECT user_id, CAST(props->>'k' AS INT) AS item_id,
          |          epoch_ns(ts) AS ts_ns FROM events),
          |lastper AS (SELECT user_id, item_id, max(ts_ns) AS last_ns

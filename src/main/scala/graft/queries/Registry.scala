@@ -14,16 +14,15 @@ import graft.QueryDef
   * math itself is oracled hash-exactly by q26/q60b. Keep it banded;
   * do not re-litigate it into a replay gate (VERDICT r9 #6).
   *
-  * Growth budget (VERDICT r9 #8): the quiet 3-pass bench total stays
-  * ≤ 200 s (~1 s/gate at the r9 registry size of 167). New gates net
-  * against retirements — when a rows-only vehicle is fully pinned by
-  * a golden/replay twin, retire it (the q42/q45/q46/q70 precedent)
-  * rather than letting the bench decay from signal into ceremony.
-  * STATUS r11 end: 187 gates / 197.9 s quiet — the budget is spent.
-  * From r12 on, additions REQUIRE a retirement or an equal measured
-  * speedup. q161/q162 (the bucketed-verify alternative to q132/q150,
-  * ~7 s, rejected by SCALE.md r11's A/B) are retired with that verify
-  * path. */
+  * Growth budget (VERDICT r9 #8): every gate adds to the cost of a
+  * full `graft.Verify` sweep — about 5 min at sf0.01 for the 192 gates
+  * on a 4-core host. New gates net against retirements: when a
+  * rows-only vehicle is fully pinned by a golden/replay twin, retire it
+  * (the q42/q45/q46/q70 precedent) rather than letting the sweep decay
+  * from signal into ceremony, and an addition needs a retirement or an
+  * equal measured speedup. q161/q162 (the bucketed-verify alternative
+  * to q132/q150, rejected by SCALE.md r11's A/B) are retired with that
+  * verify path. */
 object Registry {
   def all: Seq[QueryDef] =
     Relational.defs ++ Reco.defs ++ Llm.defs ++ Ml.defs ++ Extras.defs ++

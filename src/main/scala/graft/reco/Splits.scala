@@ -23,20 +23,6 @@ object Splits {
     (train, test)
   }
 
-  /** Scale-safe variant: no driver-side key list — deterministic
-    * content-hash split over the given row-identity columns, stratified
-    * in expectation per user. Partitioning-independent (hashes row
-    * content, not physical position). Use this at 10^9 users; `byUser`
-    * mirrors the reference exactly. */
-  def byRowHash(interactions: DataFrame, identityCols: Seq[String],
-      trainFrac: Double, seed: Long = 42): (DataFrame, DataFrame) = {
-    val h = pmod(xxhash64(lit(seed) +: identityCols.map(col): _*), lit(1000000L))
-    val cut = (trainFrac * 1000000).toLong
-    val train = interactions.filter(h < cut)
-    val test = interactions.filter(h >= cut)
-    (train, test)
-  }
-
   /** Portable twin of [[byUser]] (VERDICT r9 "Next round" #5 — the
     * oracle/scale path for the reference's randomSplitByUser): the
     * split assignment is the q75 md5 bucket of the row id against an
@@ -53,11 +39,11 @@ object Splits {
     (df.filter(b < cut), df.filter(b >= cut))
   }
 
-  /** Oracle-portable twin of [[byRowHash]]: bucket from the first 8 md5
-    * hex chars of "seed:id" — any engine reproduces the assignment, so
-    * the split itself is hash-exactly verifiable (q75). Same
-    * partitioning-independence; md5 costs ~3×/byte over xxhash64, so
-    * [[byRowHash]] stays the bulk path. */
+  /** Deterministic content-hash bucket: the first 8 md5 hex chars of
+    * "seed:id" — any engine reproduces the assignment, so the split
+    * itself is hash-exactly verifiable (q75). Partitioning-independent
+    * (hashes row content, not physical position), map-only, and no
+    * driver-side key list: the scale path for every split here. */
   def hashBucketPortable(idCol: Column, seed: String,
       buckets: Long = 1000000L): Column =
     conv(substring(md5(concat(lit(seed), lit(":"), idCol.cast("string"))), 1, 8),

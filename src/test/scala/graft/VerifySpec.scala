@@ -9,7 +9,8 @@ import scala.util.Using
 /** `Verify.sweep`: gate prefixes select what runs and what
   * `oracle_sql.json` holds, and a gate that throws is reported and
   * leaves no dump — neither its own partial output nor a stale one from
-  * an earlier run, which `tools/check.py` would otherwise compare. */
+  * an earlier run, which `tools/check.py` would otherwise compare (or,
+  * for a gate the prefixes did not select, count as rows-only). */
 class VerifySpec extends SparkSpec {
 
   private def dumps(out: Path): Set[String] =
@@ -30,6 +31,16 @@ class VerifySpec extends SparkSpec {
     assert(dumps(out) == selected.map(_.name).toSet)
     assert(oracleKeys(out) ==
       selected.filter(_.oracle.isDefined).map(_.name).toSet)
+  }
+
+  test("a prefix run leaves no other gate's stale dump") {
+    val out = Files.createTempDirectory("verify-stale")
+    val other = "q94_salted_join"
+    assert(SparkEntry.registry.exists(_.name == other))
+    val stale = Files.createDirectories(out.resolve(other))
+    Files.write(stale.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
+    assert(Verify.sweep(spark, sf0001, out.toString, Seq("q93")).isEmpty)
+    assert(dumps(out) == Set("q93_edit_distance"))
   }
 
   test("a gate that throws is returned as failed and leaves no dump, " +

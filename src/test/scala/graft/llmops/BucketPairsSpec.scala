@@ -6,8 +6,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The bucketed candidate core every near-dup and ANN family shares:
-  * pair order, probe-side masks and the flood cap, on hand-built
-  * (id, tbl, key) fixtures. */
+  * pair order, probe-side masks, the probe/index form and the flood
+  * cap, on hand-built (id, tbl, key) fixtures. */
 class BucketPairsSpec extends SparkSpec {
 
   import spark.implicits._
@@ -46,6 +46,60 @@ class BucketPairsSpec extends SparkSpec {
     } yield (a, b)
     assert(got.toSet == hamming1.toSet)
     assert(!got.contains((1L, 3L)) && !got.contains((3L, 4L)))
+  }
+
+  test("the probe/index form with probe = index is the self form") {
+    val rows = Seq((1L, 0, 0L), (2L, 0, 1L), (3L, 0, 3L), (4L, 0, 0L),
+        (1L, 1, 2L), (3L, 1, 2L), (2L, 1, 2L), (5L, 1, 7L))
+      .toDF("id", "tbl", "key")
+    val masks = BucketPairs.probeMasks(2, 1)
+    for (m <- Seq(Seq(0L), masks)) {
+      val asc = pairs(BucketPairs.across(rows, rows,
+        col("id_a") < col("id_b"), m))
+      val ne = pairs(BucketPairs.across(rows, rows,
+        col("id_a") =!= col("id_b"), m))
+      assert(asc.size == asc.distinct.size && ne.size == ne.distinct.size)
+      assert(asc.toSet == pairs(BucketPairs(rows, ascending = true, m)).toSet,
+        s"ascending, masks $m")
+      assert(ne.toSet == pairs(BucketPairs(rows, ascending = false, m)).toSet,
+        s"id_a != id_b, masks $m")
+    }
+  }
+
+  test("the probe/index form pairs probe rows with index rows only, " +
+      "masking the probe side") {
+    // probe 1..3 and index 11..14 share no id; 1 and 2 collide with
+    // each other in table 0, which the form must not report
+    val p = Seq((1L, 0, 0L), (2L, 0, 0L), (3L, 0, 3L), (1L, 1, 2L))
+    val i = Seq((11L, 0, 0L), (12L, 0, 1L), (13L, 0, 3L), (14L, 1, 2L),
+      (14L, 0, 2L))
+    val probe = p.toDF("id", "tbl", "key")
+    val index = i.toDF("id", "tbl", "key")
+    val masks = BucketPairs.probeMasks(2, 1)
+    def brute(radius: Int) = (for {
+      (a, ta, ka) <- p; (b, tb, kb) <- i
+      if ta == tb && java.lang.Long.bitCount(ka ^ kb) <= radius
+    } yield (a, b)).toSet
+    for ((m, radius) <- Seq(Seq(0L) -> 0, masks -> 1)) {
+      val got = pairs(BucketPairs.across(probe, index, lit(true), m))
+      assert(got.size == got.distinct.size, s"duplicate pairs: $got")
+      assert(got.forall { case (a, b) => a < 10 && b > 10 },
+        s"id_a must be a probe id and id_b an index id: $got")
+      assert(got.toSet == brute(radius), s"masks $m")
+    }
+    // 1 collides with 11 in table 0 and with 14 in table 1: one pair each
+    assert(brute(0) == Set((1L, 11L), (2L, 11L), (3L, 13L), (1L, 14L)))
+  }
+
+  test("the probe/index form applies keep over (probe id, index id)") {
+    // incremental admission probes a batch against itself keeping
+    // id_b < id_a: each doc sees only the smaller-id docs it collides with
+    val rows = Seq((1L, 0, 5L), (2L, 0, 5L), (3L, 0, 5L), (4L, 0, 6L))
+      .toDF("id", "tbl", "key")
+    val older = pairs(BucketPairs.across(rows, rows, col("id_b") < col("id_a")))
+    assert(older.toSet == Set((2L, 1L), (3L, 1L), (3L, 2L)))
+    val none = pairs(BucketPairs.across(rows, rows, lit(false)))
+    assert(none.isEmpty)
   }
 
   test("the flood cap keeps at most cap members per bucket, the members " +

@@ -201,13 +201,12 @@ class DedupSpec extends SparkSpec {
       s"doc $id: blocked=$n brute=${brute(id)}") }
   }
 
-  test("shingles: distinct k-word shingles; short text falls back whole") {
-    val sh = Seq((1L, "a b c d")).toDF("id", "t")
-      .select(Dedup.shingles($"t", 3).as("s")).as[Seq[String]].collect()(0)
-    assert(sh == Seq("a b c", "b c d"))
-    val short = Seq((1L, "a b")).toDF("id", "t")
-      .select(Dedup.shingles($"t", 3).as("s")).as[Seq[String]].collect()(0)
-    assert(short == Seq("a b"))
+  test("shingleSets: distinct k-word shingles; short text falls back whole") {
+    val sh = Dedup.shingleSets(
+        Seq((1L, "a b c d a b c"), (2L, "a b")).toDF("id", "t"), "id", "t", 3)
+      .as[(Long, Seq[String])].collect().toMap
+    assert(sh(1L) == Seq("a b c", "b c d", "c d a", "d a b"))
+    assert(sh(2L) == Seq("a b"))
   }
 
   test("substringDupScan: cross-doc copied span flagged, unique doc " +

@@ -170,20 +170,6 @@ class SimilaritySpec extends SparkSpec {
       }
   }
 
-  test("bruteForceTopKQueriesBroadcast == bruteForceTopK (mirror shapes)") {
-    val emb = graft.sources.Tables.embeddings(spark, sf0001).cache()
-    val queries = emb.filter($"vec_id" < 20)
-    val a = Similarity.bruteForceTopK(queries, emb, 5)
-      .select($"query_id", $"neighbor_id", round($"cos", 9).as("c"),
-        $"rn".cast("long").as("rn"))
-      .as[(Long, Long, Double, Long)].collect().toSet
-    val b = Similarity.bruteForceTopKQueriesBroadcast(queries, emb, 5)
-      .select($"query_id", $"neighbor_id", round($"cos", 9).as("c"),
-        $"rn".cast("long").as("rn"))
-      .as[(Long, Long, Double, Long)].collect().toSet
-    assert(a == b, "corpus-broadcast and queries-broadcast top-k diverge")
-  }
-
   test("multiProbeCollisionProb matches exhaustive Hamming-ball enumeration") {
     // ground truth: P(pair's codes differ in <= radius of nPlanes bits)
     // when each bit independently agrees w.p. p — enumerate all 2^n
@@ -318,15 +304,6 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.portableSign(3, 2, 1) == Similarity.portableSign(3, 2, 1))
   }
 
-  test("centroids: mean per label on toy data") {
-    val vecs = Seq((0, Array(1.0f, 3.0f)), (0, Array(3.0f, 5.0f)),
-      (1, Array(2.0f, 2.0f))).toDF("label", "embedding")
-    val c = Similarity.centroids(vecs, "label")
-      .select("label", "centroid").as[(Int, Seq[Double])].collect().toMap
-    assert(c(0) == Seq(2.0, 4.0))
-    assert(c(1) == Seq(2.0, 2.0))
-  }
-
   test("semanticDedup: planted near-dup cluster collapses to its min-id " +
       "keeper; singletons keep themselves") {
     val base = Array(0.9f, 0.1f, 0.3f, 0.7f, 0.2f, 0.8f, 0.4f, 0.6f)
@@ -422,16 +399,5 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double)].collect().toSet
     assert(viaDefault == viaExplicit)
     assert(viaDefault.nonEmpty)
-  }
-
-  test("ivfCellsFor: occupancy-held cell count (IVF twin of lshPlanesFor)") {
-    // the q39 gate point IS the derived value at its corpus size
-    assert(Similarity.ivfCellsFor(2000) == 8)
-    assert(Similarity.ivfCellsFor(200000) == 782)
-    // ceil semantics and bounds
-    assert(Similarity.ivfCellsFor(1) == 1)
-    assert(Similarity.ivfCellsFor(256) == 1)
-    assert(Similarity.ivfCellsFor(257) == 2)
-    assert(Similarity.ivfCellsFor(Long.MaxValue) == 1000000)
   }
 }

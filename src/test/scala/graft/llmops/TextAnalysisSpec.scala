@@ -23,13 +23,6 @@ class TextAnalysisSpec extends SparkSpec {
     val viaKernel = TextAnalysis.langIdStatsBulk(docs, "doc_id", "lang", "text")
       .orderBy($"doc_id").collect().toSeq
     assert(viaExpr == viaKernel)
-    // rolling fingerprint: kernel matches the xxhash64 chain bit-exact
-    val fpExpr = docs.select($"doc_id".cast("long").as("doc_id"),
-        TextAnalysis.fingerprintRolling($"text").as("fp_rolling"))
-      .orderBy($"doc_id").collect().toSeq
-    val fpKernel = TextAnalysis.rollingBulk(docs, "doc_id", "text")
-      .orderBy($"doc_id").collect().toSeq
-    assert(fpExpr == fpKernel)
   }
 
   test("langFilterBulk rejects a non-string or missing text column at " +
@@ -60,21 +53,19 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got == Seq("en", "es", "de", "fr", "zh"))
   }
 
-  test("quality signals: punct/alpha ratios on known string") {
+  test("quality signals: punct/alpha shares on known string") {
     // "ab!!" → 4 chars, 2 punct, 2 alpha
     val row = Seq("ab!!").toDF("t")
-      .select(TextAnalysis.qualitySignals($"t", TextAnalysis.englishStopwords)
+      .select(TextAnalysis.qualitySignalsPpm($"t", TextAnalysis.englishStopwords)
         .map { case (n, c) => c.as(n) }: _*).collect()(0)
-    assert(row.getAs[Double]("punct_ratio") == 0.5)
-    assert(row.getAs[Double]("alpha_ratio") == 0.5)
+    assert(row.getAs[Long]("punct_ppm") == 500000L)
+    assert(row.getAs[Long]("alpha_ppm") == 500000L)
   }
 
   test("fingerprints stable under whitespace/case noise") {
     val df = Seq("Hello  World", "hello world", "hello  WORLD ").toDF("t")
-      .select(TextAnalysis.fingerprintMd5($"t").as("m"),
-        TextAnalysis.fingerprintRolling($"t").as("r"))
-    assert(df.select("m").distinct().count() == 1)
-    assert(df.select("r").distinct().count() == 1)
+      .select(TextAnalysis.fingerprintMd5($"t").as("m"))
+    assert(df.distinct().count() == 1)
   }
 
   test("subword estimate >= word count for normal text") {

@@ -93,19 +93,6 @@ class SnapshotsSplitsSpec extends SparkSpec {
       "Spark assignment must equal the independent md5 replay")
   }
 
-  test("hash split: deterministic and partitioning-independent") {
-    val inter = graft.reco.Interactions.fromEvents(spark, sf0001)
-    val (t1, _) = Splits.byRowHash(inter, Seq("user_id", "item_id", "ts_ns"), 0.8)
-    val (t2, _) = Splits.byRowHash(inter.repartition(13),
-      Seq("user_id", "item_id", "ts_ns"), 0.8)
-    assert(t1.count() == t2.count())
-    val s1 = t1.select("user_id", "item_id", "ts_ns").as[(Int, Int, Long)]
-      .collect().toSet
-    val s2 = t2.select("user_id", "item_id", "ts_ns").as[(Int, Int, Long)]
-      .collect().toSet
-    assert(s1 == s2)
-  }
-
   test("mergeUpsert: highest version wins, update side wins ties") {
     val base = Seq((1, 1, "a"), (2, 1, "b"), (3, 2, "c"))
       .toDF("k", "version", "v")

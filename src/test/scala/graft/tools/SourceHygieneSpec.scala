@@ -112,11 +112,10 @@ class SourceHygieneSpec extends AnyFunSuite {
   private val pairFilterAllowlist: Map[String, (Int, String)] = Map(
     "llmops/BucketPairs.scala" -> (2,
       "the candidate core itself — id_a < id_b and id_a != id_b modes"),
-    "llmops/Similarity.scala" -> (5,
-      "brute-force top-k (corpus broadcast), the queries-broadcast exact " +
-        "top-k, the design-cosine probe scan, the IVF within-cell join " +
-        "and the IVF-PQ cell join — broadcast or cell-routed scans, not " +
-        "bucket self-joins"),
+    "llmops/Similarity.scala" -> (4,
+      "brute-force top-k (corpus broadcast), the design-cosine probe " +
+        "scan, the IVF within-cell join and the IVF-PQ cell join — " +
+        "broadcast or cell-routed scans, not bucket self-joins"),
     "llmops/ProductQuantization.scala" -> (1,
       "ADC scan of codes against the broadcast query distance tables"),
     "llmops/Dedup.scala" -> (1,
@@ -144,6 +143,39 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(violations.isEmpty, violations.mkString("; "))
     val dead = pairFilterAllowlist.keySet -- hits.keySet
     assert(dead.isEmpty, s"allowlist rows with no remaining pair filter: $dead")
+  }
+
+  /** kernel → the SQL text that defines its DuckDB replay. An oracle
+    * that replays an engine kernel splices in that kernel's one
+    * fragment (`lshBucketCtes`, `tfidfCtes`, `bm25Ctes`, `windowCtes`,
+    * `langHitsCte`, `minLabelCtes`); a pasted copy has to be edited in
+    * lockstep with the fragment by hand, and the one that is missed
+    * checks an older kernel than the engine runs. */
+  private val kernelReplays: Seq[(String, String)] = Seq(
+    "sign-LSH md5 plane sign" ->
+      "substr(md5(t || '_' || j || '_' || d), 1, 1)",
+    "sign-LSH plane count" ->
+      "((SELECT count(*) FROM e) - 1) / (1::BIGINT << j)",
+    "TF-IDF idf" -> "ln((n.n + 1.0) / (fdf.df + 1.0))",
+    "BM25 idf" -> "ln((s.n_docs - d.df + 0.5) / (d.df + 0.5) + 1.0)",
+    "md5 8-token window" -> "md5(array_to_string(toks[i+1:i+8], ' '))",
+    "English language-ID markers" ->
+      "'the','and','of','to','is','with','that','for'",
+    "min-label closure" -> "reach(id, comp) AS (")
+
+  test("each kernel's oracle replay is defined once in main source") {
+    val texts = scalaFiles(Paths.get("src/main/scala"))
+      .map(p => new String(Files.readAllBytes(p), UTF_8))
+    def copies(needle: String): Int = texts.map { t =>
+      Iterator.iterate(t.indexOf(needle))(i => t.indexOf(needle, i + 1))
+        .takeWhile(_ >= 0).size
+    }.sum
+    val wrong = kernelReplays.collect {
+      case (kernel, needle) if copies(needle) != 1 =>
+        s"$kernel: ${copies(needle)} copies of `$needle`"
+    }
+    assert(wrong.isEmpty, wrong.mkString("; ") + " — splice the kernel's " +
+      "one oracle fragment in (or update its needle here)")
   }
 
   /** llmops file → (max non-md5 hash calls, why that file may hash
