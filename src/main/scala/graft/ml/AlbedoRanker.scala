@@ -68,17 +68,11 @@ object AlbedoRanker {
     val repos = ProfileBuilders.buildRepoProfile(
       AlbedoFixtures.reposP(spark), snapshotDate)
 
-    val labeled = NegativeBalancer.balance(
-      starrings.select(col("user_id"), col("repo_id").as("item_id")),
-      maxCandidates = 1000, ratio = 1.0)
-      .withColumnRenamed("item_id", "repo_id")
-
     // per-pair last star time for the recency weight (negatives → null)
-    val pairLast = starrings.groupBy(col("user_id"), col("repo_id"))
-      .agg(max(col("starred_at")).as("pair_starred_at"))
-
-    labeled
-      .join(pairLast, Seq("user_id", "repo_id"), "left")
+    NegativeBalancer.balance(
+        starrings.select(col("user_id"), col("repo_id").as("item_id"), col("starred_at")),
+        maxCandidates = 1000, ratio = 1.0, max(col("starred_at")).as("pair_starred_at"))
+      .withColumnRenamed("item_id", "repo_id")
       .join(users, Seq("user_id"))
       .join(broadcast(repos), Seq("repo_id"))
       .withColumn("recent_languages",

@@ -55,20 +55,14 @@ object RankerPipeline {
   val weightNowNs: Long = 1706054400000000000L
   private val yearNs: Long = 365L * 86400L * 1000000000L
 
-  /** Assemble the labeled training frame: NegativeBalancer labels joined
-    * with per-pair last-interaction time (for recency weights) and
-    * user/item features. */
-  def trainingFrame(interactions: DataFrame): DataFrame = {
-    val labeled = NegativeBalancer.balance(
-      interactions.select(col("user_id"), col("item_id")), 1000, 1.0)
-    val pairLast = interactions
-      .groupBy(col("user_id"), col("item_id"))
-      .agg(max(col("ts_ns")).as("pair_last_ns"))
-    labeled
-      .join(pairLast, Seq("user_id", "item_id"), "left") // negatives → null
+  /** Assemble the labeled training frame: NegativeBalancer labels with
+    * per-pair last-interaction time (for recency weights; negatives →
+    * null) joined with user/item features. */
+  def trainingFrame(interactions: DataFrame): DataFrame =
+    NegativeBalancer.balance(interactions, 1000, 1.0,
+        max(col("ts_ns")).as("pair_last_ns"))
       .join(userFeatures(interactions), Seq("user_id"))
       .join(broadcast(itemFeatures(interactions)), Seq("item_id"))
-  }
 
   /** Instance-weight stage emitting the two weight SCHEMES the CV grid
     * searches over (the reference's weightSQL emits four and grids
@@ -83,7 +77,25 @@ object RankerPipeline {
       "0.9D, 0.1D) AS instance_weight, " +
       "IF(label > 0.5, 0.9D, 0.1D) AS positive_weight FROM __THIS__")
 
-  private def featurePipeline(): Pipeline = {
+  /** LR iterations and L2 strength of the ranker fit: the reference's
+    * config scaled down (LogisticRegressionRanker.scala:330-337). */
+  private val MaxIter = 20
+  private val RegParam = 0.1
+
+  /** The weighted training frame, right-sized and cached for iterative
+    * fits: ~10^5 rows across 32 shuffle partitions is pure
+    * task-scheduling overhead per iteration. Hash + in-partition sort on
+    * the unique (user, item) key = deterministic row order, so the seeded
+    * randomSplit and CrossValidator kFold are bit-stable (see
+    * AlbedoRanker). Callers unpersist it once their fits are eager. */
+  private def rankerFrame(interactions: DataFrame): DataFrame =
+    weigher.transform(trainingFrame(interactions))
+      .repartition(8, col("user_id"))
+      .sortWithinPartitions("user_id", "item_id")
+      .cache()
+
+  /** Feature stages (StringIndexer + OHE + assembler) followed by `lr`. */
+  private def rankerPipeline(lr: LogisticRegression): Pipeline = {
     val indexer = new StringIndexer()
       .setInputCol("fav_event_type").setOutputCol("fav_idx")
       .setHandleInvalid("keep") // reference: handleInvalid=keep (LogisticRegressionRanker.scala:176-188)
@@ -93,28 +105,22 @@ object RankerPipeline {
       .setInputCols(Array("u_n_events", "u_n_items", "u_avg_value",
         "i_n_events", "i_n_users", "i_avg_value", "fav_ohe"))
       .setOutputCol("features")
-    new Pipeline().setStages(Array(indexer, ohe, assembler))
+    new Pipeline().setStages(Array(indexer, ohe, assembler, lr))
   }
 
-  /** Train LR ranker; returns (model pipeline, AUC on held-out split).
-    * LR config mirrors the reference scaled down
-    * (LogisticRegressionRanker.scala:330-337). */
-  def trainAndEvaluate(spark: SparkSession, interactions: DataFrame,
-      maxIter: Int = 20, regParam: Double = 0.1): (org.apache.spark.ml.PipelineModel, Double, DataFrame) = {
-    // right-size partitions for the iterative fit: ~10^5 rows across 32
-    // shuffle partitions is pure task-scheduling overhead per iteration.
-    // hash + in-partition sort on the unique key = deterministic row
-    // order, so the seeded randomSplit is bit-stable (see AlbedoRanker)
-    val data = weigher.transform(trainingFrame(interactions))
-      .repartition(8, col("user_id"))
-      .sortWithinPartitions("user_id", "item_id")
-      .cache()
-    val lr = new LogisticRegression()
-      .setMaxIter(maxIter).setRegParam(regParam).setElasticNetParam(0.0)
-      .setStandardization(true)
+  private def logisticRegression(): LogisticRegression =
+    new LogisticRegression()
+      .setElasticNetParam(0.0).setStandardization(true)
       .setFeaturesCol("features").setLabelCol("label")
       .setWeightCol("instance_weight")
-    val pipeline = new Pipeline().setStages(featurePipeline().getStages :+ lr)
+
+  /** Train LR ranker; returns (model pipeline, AUC on held-out split,
+    * the unpersisted ranker frame). */
+  def trainAndEvaluate(spark: SparkSession, interactions: DataFrame)
+      : (org.apache.spark.ml.PipelineModel, Double, DataFrame) = {
+    val data = rankerFrame(interactions)
+    val pipeline = rankerPipeline(
+      logisticRegression().setMaxIter(MaxIter).setRegParam(RegParam))
     val Array(train, test) = data.randomSplit(Array(0.9, 0.1), seed = 42)
     val model = pipeline.fit(train)
     val scored = model.transform(test)
@@ -137,19 +143,9 @@ object RankerPipeline {
   def crossValidateRaw(spark: SparkSession, interactions: DataFrame,
       folds: Int = 2, memoKey: Option[String] = None): DataFrame = {
     import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-    // cached + right-sized: the grid×folds fits would otherwise re-derive
-    // the feature joins per fit and schedule 32-way waves per iteration.
-    // hash + in-partition sort: CrossValidator's seeded kFold is order-
-    // sensitive exactly like randomSplit (see AlbedoRanker)
-    val data = weigher.transform(trainingFrame(interactions))
-      .repartition(8, col("user_id"))
-      .sortWithinPartitions("user_id", "item_id")
-      .cache()
-    val lr = new LogisticRegression()
-      .setElasticNetParam(0.0).setStandardization(true)
-      .setFeaturesCol("features").setLabelCol("label")
-      .setWeightCol("instance_weight")
-    val pipeline = new Pipeline().setStages(featurePipeline().getStages :+ lr)
+    val data = rankerFrame(interactions)
+    val lr = logisticRegression()
+    val pipeline = rankerPipeline(lr)
     // the reference grid's SHAPE: search weight SCHEMES (its dominant
     // dimension, 4 weightCol values at :331) × regularization — here
     // 2 schemes × 2 regParams = 4 points, maxIter pinned small

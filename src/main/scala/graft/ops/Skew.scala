@@ -31,18 +31,4 @@ object Skew {
       explode(sequence(lit(0L), lit(nSalts.toLong - 1))))
     saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Two-phase (partial → final) aggregation with explicit salting for
-    * high-cardinality-value aggs (e.g. collect_set on a hot key):
-    * groupBy(key, salt) bounds per-task state, then a final merge.
-    * For algebraic aggs Spark's map-side partial agg already does this;
-    * use this form when the agg buffer itself is the skew (sets/lists). */
-  def saltedCollectSet(df: DataFrame, key: String, valueCol: String,
-      nSalts: Int): DataFrame =
-    df.withColumn("__salt",
-        pmod(xxhash64(col(valueCol)), lit(nSalts.toLong)))
-      .groupBy(col(key), col("__salt"))
-      .agg(collect_set(col(valueCol)).as("__partial"))
-      .groupBy(col(key))
-      .agg(array_distinct(flatten(collect_list(col("__partial")))).as(s"${valueCol}_set"))
 }

@@ -36,8 +36,7 @@ object Ml {
       // eager checkpoint materializes the fit ONCE per session into
       // RDD blocks that clearCache does not touch — exactly the
       // semantics the seeded model fits already have.
-      ContentRecommender.tfidfWeights(docs, "doc_id", "text",
-        minDf = 1, maxDfFrac = 0.8, nDocs = Some(docs.count()))
+      ContentRecommender.tfidfWeights(docs, "doc_id", "text")
         .transform(graft.ops.Checkpoints.cut(_))
     }
 

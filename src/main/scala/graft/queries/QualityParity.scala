@@ -114,9 +114,7 @@ object QualityParity {
           // r17: eager checkpoint instead of cache+count — same fit,
           // materialized once per session into blocks clearCache does
           // not evict (the docTfidfWeights rationale)
-          graft.reco.ContentRecommender.tfidfWeights(docs,
-            "repo_id", "text", minDf = 1, maxDfFrac = 0.8,
-            nDocs = Some(docs.count()))
+          graft.reco.ContentRecommender.tfidfWeights(docs, "repo_id", "text")
             .transform(graft.ops.Checkpoints.cut(_))
         }
         new ContentUserRecommender(train, docs,

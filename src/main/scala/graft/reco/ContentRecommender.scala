@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
 object ContentRecommender {
 
   /** ABSOLUTE document-frequency stop cap (r16, VERDICT r15 #7 — the
-    * raw-index hot-token residual): `maxDfFrac` alone is a RELATIVE
+    * raw-index hot-token residual): the 0.8·n cap alone is a RELATIVE
     * bound, so a term in 79% of a 10⁹-doc corpus still carries a
     * ~8·10⁸-row posting into any raw inverted-index join (the prefix
     * family is separately champion-capped; this protects the raw
@@ -38,20 +38,11 @@ object ContentRecommender {
     * measures it binding at the amplified scale. */
   val TfidfStopDf: Long = 1000000L
 
-  /** L2-normalized tf·idf term weights: (id, term, w).
-    *
-    * @param nDocs corpus size for the idf term; pass it when the caller
-    *              already knows it — otherwise every invocation runs a
-    *              count() job (VERDICT r2 "What's wrong" #3)
-    * @param maxDfAbs absolute per-term document-frequency cap
-    *                 ([[TfidfStopDf]] by default); 0 disables */
-  def tfidfWeights(docs: DataFrame, idCol: String, textCol: String,
-      minDf: Int = 1, maxDfFrac: Double = 0.8,
-      nDocs: Option[Long] = None,
-      maxDfAbs: Long = TfidfStopDf): DataFrame = {
-    val n = nDocs.getOrElse(docs.count())
-    val dfCap = math.min((n * maxDfFrac).toLong,
-      if (maxDfAbs > 0) maxDfAbs else Long.MaxValue)
+  /** L2-normalized tf·idf term weights: (id, term, w). A term is kept
+    * when its document frequency is at most min(0.8·n, [[TfidfStopDf]]);
+    * the corpus size n is a broadcast one-row count inside the plan, so
+    * building the weights runs no job of its own. */
+  def tfidfWeights(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // r18: tokenize + stopword-filter + explode is per-row CPU work —
     // spread the single-split fixture scan so the fit chain
     // parallelizes (identity at production split counts). The r18 sf1
@@ -64,10 +55,14 @@ object ContentRecommender {
           Tokenize.cjkAware(col(textCol)), Tokenize.englishStopwords)).as("term"))
     val tf = terms.groupBy(col("id"), col("term"))
       .agg(count(lit(1)).as("tf"))
+    val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+    val dfCap = least((col("n_docs") * 0.8).cast("long"), lit(TfidfStopDf))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .filter(col("df") >= minDf && col("df") <= dfCap)
+      .crossJoin(broadcast(nDocs))
+      .filter(col("df") <= dfCap)
     val w = tf.join(df, Seq("term"))
-      .withColumn("w_raw", col("tf") * (log((lit(n) + 1.0) / (col("df") + 1.0)) + 1.0))
+      .withColumn("w_raw",
+        col("tf") * (log((col("n_docs") + 1.0) / (col("df") + 1.0)) + 1.0))
     val norms = w.groupBy(col("id"))
       .agg(sqrt(sum(col("w_raw") * col("w_raw"))).as("norm"))
     w.join(norms, Seq("id"))

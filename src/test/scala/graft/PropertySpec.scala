@@ -1,6 +1,5 @@
 package graft
 
-import graft.text.PorterStemmer
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.apache.spark.sql.functions._
@@ -16,13 +15,6 @@ class PropertySpec extends SparkSpec {
     (1 to n).flatMap(i => g.apply(Gen.Parameters.default, Seed(i.toLong)))
 
   private val word = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
-
-  test("porter stemmer is total and never grows words") {
-    samples(word, 500).foreach { w =>
-      val s = PorterStemmer.stem(w)
-      assert(s != null && s.length <= w.length, s"stem($w) = $s")
-    }
-  }
 
   test("porter2 stemmer is total, never grows words, and never leaks " +
       "the internal Y marker") {

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.SparkSpec
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.functions._
 
 class RankerPipelineSpec extends SparkSpec {
@@ -32,6 +33,33 @@ class RankerPipelineSpec extends SparkSpec {
     assert(negs.nonEmpty && negs.forall(_._2 == 0.1))
     // the weight column is non-constant — the weighted-LR path is live
     assert(weighted.values.map(_._2).toSet == Set(0.9, 0.1))
+  }
+
+  // 40 users with 3 distinct items each (plus one repeat event) over
+  // 12 items: enough rows that the 10% held-out split scores both labels
+  private def fortyUsers = (for {
+    u <- 1 to 40
+    k <- 0 to 3
+  } yield (u, (u * 5 + k % 3) % 12, cut - (u * 10 + k).toLong,
+    if (k % 2 == 0) "click" else "star", 1.0 + k))
+    .toDF("user_id", "item_id", "ts_ns", "event_type", "value")
+
+  private def cacheManager =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+
+  test("a ranker fit leaves nothing cached") {
+    spark.catalog.clearCache()
+    val (_, auc, _) = RankerPipeline.trainAndEvaluate(spark, fortyUsers)
+    assert(auc >= 0.0 && auc <= 1.0)
+    assert(cacheManager.isEmpty, "the ranker fit left a cached frame behind")
+  }
+
+  test("a ranker grid search leaves nothing cached") {
+    spark.catalog.clearCache()
+    val grid = RankerPipeline.crossValidateRaw(spark, fortyUsers)
+      .select("avg_metric").as[Double].collect()
+    assert(grid.length == 4 && grid.forall(m => m >= 0.0 && m <= 1.0))
+    assert(cacheManager.isEmpty, "the grid search left a cached frame behind")
   }
 
   test("dropSuffixed removes exactly the suffixed columns (#14)") {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 class SkewSpec extends SparkSpec {
   import spark.implicits._
@@ -16,14 +15,5 @@ class SkewSpec extends SparkSpec {
     val salted = Skew.saltedEquiJoin(big, small, "k", nSalts = 8)
       .select("k", "payload", "name").collect().toSet
     assert(salted == plain)
-  }
-
-  test("salted collect_set equals direct collect_set") {
-    val df = Seq((1, "a"), (1, "b"), (1, "a"), (2, "c")).toDF("k", "v")
-    val direct = df.groupBy($"k").agg(collect_set($"v").as("s"))
-      .select($"k", array_sort($"s")).as[(Int, Seq[String])].collect().toMap
-    val salted = Skew.saltedCollectSet(df, "k", "v", 4)
-      .select($"k", array_sort($"v_set")).as[(Int, Seq[String])].collect().toMap
-    assert(salted == direct)
   }
 }

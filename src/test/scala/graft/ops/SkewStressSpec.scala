@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.SparkSpec
 import graft.llmops.Dedup
-import graft.reco.ItemCF
+import graft.reco.{ItemCF, NegativeBalancer}
 import org.apache.spark.sql.functions._
 
 /** Scale-stress of the skew guards on a generated hot-key corpus
@@ -54,26 +54,24 @@ class SkewStressSpec extends SparkSpec {
       s"(${before / after}x reduction), sim rows=$simRows")
   }
 
-  test("saltedCollectSet bounds per-task agg state on a hot key") {
-    val df = skewedUi // user 0 has 2000 distinct + 98k duplicate values
-    val nSalts = 16
-    // the guard's first phase: per-(key, salt) partial sets
-    val partialSizes = df
-      .withColumn("__salt", pmod(xxhash64(col("item_id")), lit(nSalts.toLong)))
-      .groupBy(col("user_id"), col("__salt"))
-      .agg(size(collect_set(col("item_id"))).as("n"))
-      .filter(col("user_id") === 0)
-      .select("n").as[Int].collect()
-    assert(partialSizes.length == nSalts)
-    val evenShare = nItems / nSalts
-    assert(partialSizes.max <= evenShare * 2,
-      s"hot-key partial set ${partialSizes.max} exceeds 2x even share $evenShare")
-    // and the two-phase result is still exact
-    val merged = Skew.saltedCollectSet(df, "user_id", "item_id", nSalts)
-      .filter(col("user_id") === 0)
-      .select(size(col("item_id_set"))).head().getInt(0)
-    assert(merged == nItems)
-    info(s"hot-key state split $nItems -> max ${partialSizes.max} per task")
+  test("hot-key negatives equal the reference's driver-side set " +
+      "difference") {
+    // the reference's NegativeBalancer on the driver: popular items by
+    // event count (ties by item id) minus the user's distinct positives,
+    // first n_pos * ratio; the hot user holds every item, so gets none
+    val maxCandidates = 100
+    val rows = skewedUi.as[(Int, Int)].collect()
+    val popular = rows.groupBy(_._2).toSeq.map { case (i, es) => (i, es.length) }
+      .sortBy { case (i, cnt) => (-cnt, i) }.take(maxCandidates).map(_._1)
+    val want = rows.groupBy(_._1).map { case (u, es) =>
+      val positives = es.map(_._2).toSet
+      u -> popular.filterNot(positives).take(positives.size)
+    }.filter(_._2.nonEmpty)
+    val got = NegativeBalancer.negatives(skewedUi, maxCandidates, 1.0)
+      .select("user_id", "item_id").as[(Int, Int)].collect()
+      .groupBy(_._1).map { case (u, es) => u -> es.map(_._2).toSeq }
+    assert(!got.contains(0), "the hot user holds every item")
+    assert(got == want)
   }
 
   test("duplicate flood: exact-dedup collapse bounds MinHash bucket " +

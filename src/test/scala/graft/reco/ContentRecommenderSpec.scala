@@ -111,4 +111,42 @@ class ContentRecommenderSpec extends SparkSpec {
       .select("n2").as[Double].collect()
     norms.foreach(n => assert(math.abs(n - 1.0) < 1e-12))
   }
+
+  test("building tfidf weights runs no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ContentRecommender.tfidfWeights(toy, "doc_id", "text")
+      org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+      assert(jobs.get() == 0,
+        s"building the tfidf weights ran ${jobs.get()} Spark job(s)")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("tfidf idf reads the corpus size, and a term in more than " +
+      "0.8 of the docs is dropped") {
+    // n = 5, so the df cap is (5 * 0.8).toLong = 4: "common" (df 5) is
+    // dropped, "shared" (df 4) is kept
+    val docs = Seq(
+      (1L, "alpha common shared"),
+      (2L, "beta common shared"),
+      (3L, "gamma common shared"),
+      (4L, "delta common shared"),
+      (5L, "alpha alpha common")
+    ).toDF("doc_id", "text")
+    val w = ContentRecommender.tfidfWeights(docs, "doc_id", "text")
+      .select("id", "term", "w").as[(Long, String, Double)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    assert(w.keySet.map(_._2) == Set("alpha", "beta", "gamma", "delta", "shared"))
+    assert(w.keySet.filter(_._1 == 5L) == Set((5L, "alpha")))
+    assert(math.abs(w((5L, "alpha")) - 1.0) < 1e-12)
+    // idf = ln((n + 1) / (df + 1)) + 1: alpha has df 2, shared df 4
+    val want = (math.log(6.0 / 3.0) + 1.0) / (math.log(6.0 / 5.0) + 1.0)
+    assert(math.abs(w((1L, "alpha")) / w((1L, "shared")) - want) < 1e-12)
+  }
 }

@@ -6,23 +6,6 @@ import org.apache.spark.sql.functions._
 class TextSpec extends SparkSpec {
   import spark.implicits._
 
-  test("Porter stemmer canonical examples") {
-    val cases = Map(
-      "caresses" -> "caress", "ponies" -> "poni", "cats" -> "cat",
-      "agreed" -> "agre", "plastered" -> "plaster", "motoring" -> "motor",
-      "happy" -> "happi", "relational" -> "relat", "hopping" -> "hop",
-      "adjustable" -> "adjust", "effective" -> "effect", "rate" -> "rate")
-    cases.foreach { case (in, want) =>
-      assert(PorterStemmer.stem(in) == want, s"stem($in)")
-    }
-  }
-
-  test("stemmer leaves short and non-alpha tokens alone") {
-    assert(PorterStemmer.stem("ab") == "ab")
-    assert(PorterStemmer.stem("c++") == "c++")
-    assert(PorterStemmer.stem(null) == null)
-  }
-
   test("cjkAware tokenizer: keeps c/r/c++/c#, drops 1-char latin, splits CJK") {
     val got = Seq("I use C and C++ with 中文 analysis x")
       .toDF("t").select(Tokenize.cjkAware($"t").as("w"))
