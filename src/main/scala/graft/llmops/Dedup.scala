@@ -445,9 +445,8 @@ object Dedup {
         "similarity join is a CLUSTER operator at this corpus size (its " +
         "candidate volume is measured-linear; the wall is single-box disk). " +
         "Alternatives on one box: minhashCandidatesPortable (the " +
-        "approximate family member), a " +
-        "champion-capped similarity (ContentRecommender.similarDocsPrefix), " +
-        "or a higher threshold. To proceed anyway, set " +
+        "approximate family member) or a higher threshold. To proceed " +
+        "anyway, set " +
         "graft.exactJoin.diskBudgetBytes to the capacity you actually " +
         "have (e.g. per-node free x executor count on a sized cluster).")
   }

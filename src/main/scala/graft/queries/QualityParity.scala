@@ -107,19 +107,9 @@ object QualityParity {
         .withColumnRenamed("candidate", "item_id")
         .select(col("user_id"), col("item_id"), col("score")),
       "content" -> {
-        // TF-IDF weights over the fixed fixture corpus — memoized per
-        // session so repeat invocations skip the index rebuild
         val docs = repoDocs(spark)
-        val weights = graft.ml.ModelMemo.cached(spark, "tfidf-repo-fixture") {
-          // r17: eager checkpoint instead of cache+count — same fit,
-          // materialized once per session into blocks clearCache does
-          // not evict (the docTfidfWeights rationale)
-          graft.reco.ContentRecommender.tfidfWeights(docs, "repo_id", "text")
-            .transform(graft.ops.Checkpoints.cut(_))
-        }
-        new ContentUserRecommender(train, docs,
-          "repo_id", "text", recentK = 3, prefixM = 4,
-          weights = Some(weights))
+        new ContentUserRecommender(train, docs, "repo_id", "text",
+          weights = Some(Ml.memoTfidfWeights(spark, "tfidf-repo-fixture", docs, "repo_id")))
           .recommendForUsers(users, k)
       })
 

@@ -125,7 +125,7 @@ object AlsRecommender {
     * stages per iteration; at the reference's maxIter=26 on a real
     * cluster the un-truncated DAG risks stack-overflow re-computation
     * storms on executor loss. When the session has a checkpoint dir
-    * (set one with [[withCheckpointDir]]), ALS truncates lineage every
+    * (`sparkContext.setCheckpointDir`), ALS truncates lineage every
     * `checkpointInterval` iterations — exactly how the reference's
     * `spark.setCheckpointDir` + ALS interval operate. Local runs leave
     * it unset: fixture-scale lineage fits comfortably and the extra
@@ -148,14 +148,5 @@ object AlsRecommender {
       // (ALS falls back to plain caching) otherwise
       .setCheckpointInterval(checkpointInterval)
     new AlsRecommender(als.fit(ratings))
-  }
-
-  /** Set the session's RDD checkpoint dir (cluster deployments pass a
-    * durable shared path; tests pass a temp dir). Returns the dir so
-    * call sites can log it. */
-  def withCheckpointDir(spark: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    spark.sparkContext.setCheckpointDir(dir)
-    dir
   }
 }

@@ -24,24 +24,32 @@ import org.apache.spark.sql.functions._
   */
 object Bm25 {
 
+  /** The lexical rankers' shared inputs over lower-cased whitespace
+    * tokens (blank text has none): `dl` (doc_id, dl), every doc's token
+    * count, and `tf` (doc_id, term, tf) for the query terms only — the
+    * isin filter runs map-side under the explode. */
+  private[text] def lengthsAndQueryTf(docs: DataFrame, idCol: String,
+      textCol: String, queryTerms: Seq[String]): (DataFrame, DataFrame) = {
+    require(queryTerms.nonEmpty)
+    val base = docs.select(col(idCol).cast("long").as("doc_id"),
+      when(trim(coalesce(col(textCol), lit(""))) === "", array().cast("array<string>"))
+        .otherwise(split(trim(lower(col(textCol))), "\\s+")).as("toks"))
+    val dl = base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
+    val tf = base.select(col("doc_id"), explode(col("toks")).as("term"))
+      .filter(col("term").isin(queryTerms: _*))
+      .groupBy(col("doc_id"), col("term"))
+      .agg(count(lit(1)).as("tf"))
+    (dl, tf)
+  }
+
   /** Top-k documents for a bag-of-words query. Returns
     * (doc_id, score_u, score, rank) with score_u the exact integer
     * micro-score. */
   def search(docs: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], k1: Double = 1.2, b: Double = 0.75,
       topK: Int = 20): DataFrame = {
-    require(queryTerms.nonEmpty)
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-      when(trim(coalesce(col(textCol), lit(""))) === "", array().cast("array<string>"))
-        .otherwise(split(trim(lower(col(textCol))), "\\s+")).as("toks"))
-
-    val dl = base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
+    val (dl, tf) = lengthsAndQueryTf(docs, idCol, textCol, queryTerms)
     val stats = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-
-    val tf = base.select(col("doc_id"), explode(col("toks")).as("term"))
-      .filter(col("term").isin(queryTerms: _*))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
     val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
 
     val contrib = tf

@@ -34,17 +34,8 @@ object HybridSearch {
   def queryLikelihood(docs: DataFrame, idCol: String, textCol: String,
       queryTerms: Seq[String], mu: Double = 300.0, topK: Int = 20)
       : DataFrame = {
-    require(queryTerms.nonEmpty)
-    val base = docs.select(col(idCol).cast("long").as("doc_id"),
-      when(trim(coalesce(col(textCol), lit(""))) === "",
-        array().cast("array<string>"))
-        .otherwise(split(trim(lower(col(textCol))), "\\s+")).as("toks"))
-    val dl = base.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
+    val (dl, tf) = Bm25.lengthsAndQueryTf(docs, idCol, textCol, queryTerms)
     val total = dl.agg(sum(col("dl")).as("total"))
-    val tf = base.select(col("doc_id"), explode(col("toks")).as("term"))
-      .filter(col("term").isin(queryTerms: _*))
-      .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
     val cf = tf.groupBy(col("term")).agg(sum(col("tf")).as("cf"))
     val scored = dl
       .crossJoin(broadcast(cf))

@@ -170,7 +170,7 @@ class SimilaritySpec extends SparkSpec {
       }
   }
 
-  test("multiProbeCollisionProb matches exhaustive Hamming-ball enumeration") {
+  test("multiProbeCollisionPpm matches exhaustive Hamming-ball enumeration") {
     // ground truth: P(pair's codes differ in <= radius of nPlanes bits)
     // when each bit independently agrees w.p. p — enumerate all 2^n
     // disagreement patterns and sum those within the ball
@@ -182,19 +182,15 @@ class SimilaritySpec extends SparkSpec {
             math.pow(1 - p, disagreements.toDouble)
         else 0.0
       }.sum
-      val closed = Similarity.multiProbeCollisionProb(n, p, r)
-      assert(math.abs(closed - exhaustive) < 1e-12,
-        s"n=$n p=$p r=$r: closed $closed vs exhaustive $exhaustive")
-      // the integer ppm chain (r17 — the production derivation): each
-      // floor only LOWERS a term, so ppm <= closed (the safe
-      // direction), and the cumulative floor loss over <= n multiplies
-      // per term is bounded by a few ppm per step
+      // each floor in the integer ppm chain only LOWERS a term, so
+      // ppm <= exhaustive (the safe direction), and the cumulative
+      // floor loss over <= n multiplies per term is a few ppm per step
       val ppm = Similarity.multiProbeCollisionPpm(n,
         math.floor(p * 1e6).toLong, r)
-      assert(ppm <= math.ceil(closed * 1e6).toLong,
-        s"n=$n p=$p r=$r: ppm chain $ppm above closed form $closed")
-      assert(ppm >= math.floor(closed * 1e6).toLong - 6L * (n + 2),
-        s"n=$n p=$p r=$r: ppm chain $ppm drifted below closed form $closed")
+      assert(ppm <= math.ceil(exhaustive * 1e6).toLong,
+        s"n=$n p=$p r=$r: ppm chain $ppm above exhaustive $exhaustive")
+      assert(ppm >= math.floor(exhaustive * 1e6).toLong - 6L * (n + 2),
+        s"n=$n p=$p r=$r: ppm chain $ppm drifted below exhaustive $exhaustive")
     }
   }
 

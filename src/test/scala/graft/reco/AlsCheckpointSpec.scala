@@ -8,7 +8,7 @@ class AlsCheckpointSpec extends SparkSpec {
 
   test("ALS writes checkpoints when a checkpoint dir is set") {
     val dir = Files.createTempDirectory("als_ckpt").toString
-    AlsRecommender.withCheckpointDir(spark, dir)
+    spark.sparkContext.setCheckpointDir(dir)
     try {
       val ratings = (for (u <- 1 to 20; i <- 1 to 10 if (u + i) % 3 != 0)
         yield (u, i, 1.0)).toDF("user_id", "item_id", "rating")

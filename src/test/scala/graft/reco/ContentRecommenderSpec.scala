@@ -1,6 +1,7 @@
 package graft.reco
 
 import graft.SparkSpec
+import org.apache.spark.sql.classic
 
 class ContentRecommenderSpec extends SparkSpec {
   import spark.implicits._
@@ -13,7 +14,7 @@ class ContentRecommenderSpec extends SparkSpec {
   ).toDF("doc_id", "text")
 
   test("similar docs ranks the near-identical doc first") {
-    val sims = ContentRecommender.similarDocs(toy, "doc_id", "text", k = 2)
+    val sims = ContentRecommender.similarDocsPrefix(toy, "doc_id", "text", k = 2)
       .select("id_a", "id_b", "rn").as[(Long, Long, Int)].collect()
       .groupBy(_._1).view.mapValues(_.sortBy(_._3).map(_._2).toList).toMap
     assert(sims(1L).head == 2L)
@@ -22,86 +23,64 @@ class ContentRecommenderSpec extends SparkSpec {
     assert(!sims.contains(4L))
   }
 
-  test("posting cap: default never binds on small postings (exactness)") {
-    val full = ContentRecommender
-      .similarDocsPrefix(toy, "doc_id", "text", k = 2, postingCap = 0)
-      .select("id_a", "id_b", "score", "rn").as[(Long, Long, Double, Int)]
-      .collect().toSet
-    val capped = ContentRecommender
-      .similarDocsPrefix(toy, "doc_id", "text", k = 2) // default cap 2048
-      .select("id_a", "id_b", "score", "rn").as[(Long, Long, Double, Int)]
-      .collect().toSet
-    assert(capped == full)
-  }
+  // one user who touched docs 1 and 3
+  private def inter = Seq((10L, 1L, 1000L), (10L, 3L, 2000L))
+    .toDF("user_id", "item_id", "ts_ns")
+  private def users = Seq(Tuple1(10L)).toDF("user_id")
 
-  test("posting cap: cap=1 keeps only each term's top-weight entry") {
-    // every posting shrinks to length 1 → a term can join a pair only
-    // if the two docs are each other's sole champion for DIFFERENT
-    // terms — on this toy corpus (docs 1,2 share 4 of 5 terms and tie
-    // on weights; id tiebreak gives doc 1 every shared-term slot) no
-    // term retains both docs, so no candidate pair survives.
-    // allowCapTruncation is the REQUIRED opt-in here — the cap binds.
-    val capped = ContentRecommender
-      .similarDocsPrefix(toy, "doc_id", "text", k = 2, postingCap = 1,
-        allowCapTruncation = true)
-    assert(capped.count() == 0L)
-    val uncapped = ContentRecommender
-      .similarDocsPrefix(toy, "doc_id", "text", k = 2, postingCap = 0)
-    assert(uncapped.count() > 0L) // the cap, not the corpus, emptied it
-  }
-
-  test("posting cap: a binding cap without the opt-in fails loudly") {
-    // ADVICE r11 (medium): approximation must never be silent. Docs 1,2
-    // share terms, so cap=1 truncates real postings — strict mode (the
-    // default) must throw instead of answering approximately.
-    val e = intercept[IllegalStateException] {
-      ContentRecommender
-        .similarDocsPrefix(toy, "doc_id", "text", k = 2, postingCap = 1)
-    }
-    assert(e.getMessage.contains("allowCapTruncation"))
-    // same contract on the serving path
-    val q = toy.select($"doc_id")
-    val e2 = intercept[IllegalStateException] {
-      ContentRecommender.similaritiesForQueries(
-        toy, q, "doc_id", "text", postingCap = 1)
-    }
-    assert(e2.getMessage.contains("postingCap=1"))
-    // and a NON-binding cap passes strict mode bit-identically
-    val strict = ContentRecommender
-      .similarDocsPrefix(toy, "doc_id", "text", k = 2) // default cap 2048
-      .select("id_a", "id_b", "score", "rn").as[(Long, Long, Double, Int)]
-      .collect().toSet
-    val exact = ContentRecommender
-      .similarDocsPrefix(toy, "doc_id", "text", k = 2, postingCap = 0)
-      .select("id_a", "id_b", "score", "rn").as[(Long, Long, Double, Int)]
-      .collect().toSet
-    assert(strict == exact)
-  }
-
-  test("ContentUserRecommender surfaces the cap contract at the class " +
-      "boundary (ADVICE r12)") {
-    // interactions: one user who touched docs 1 and 3
-    val inter = Seq((10L, 1L, 1000L), (10L, 3L, 2000L))
-      .toDF("user_id", "item_id", "ts_ns")
-    val users = Seq(Tuple1(10L)).toDF("user_id")
-    // a binding cap with no opt-in must throw from recommendForUsers —
-    // callers now have a remedy AT THE CONSTRUCTOR, not only inside
-    // similaritiesForQueries
-    val strict = new ContentUserRecommender(inter, toy, "doc_id", "text",
-      postingCap = 1)
-    val e = intercept[IllegalStateException] {
-      strict.recommendForUsers(users, topK = 2).collect()
-    }
-    assert(e.getMessage.contains("allowCapTruncation"))
-    // the constructor opt-in unblocks the same corpus
-    val consented = new ContentUserRecommender(inter, toy, "doc_id", "text",
-      postingCap = 1, allowCapTruncation = true)
-    consented.recommendForUsers(users, topK = 2).collect() // no throw
-    // and the default (non-binding cap on this corpus) still recommends
+  test("content recommendations exclude seen items") {
     val recs = new ContentUserRecommender(inter, toy, "doc_id", "text")
       .recommendForUsers(users, topK = 2)
       .select("user_id", "item_id").as[(Long, Long)].collect()
-    assert(recs.nonEmpty && recs.forall(_._1 == 10L))
+    // doc 2 shares doc 1's prefix terms; docs 1 and 3 are seen
+    assert(recs.toSeq == Seq((10L, 2L)))
+  }
+
+  test("a prefix posting above the cap fails both similarity paths") {
+    // 2,100 of 3,000 docs share "hotterm" (df 2,100 <= 0.8·n keeps it),
+    // and with two terms per doc it is in every one of their prefixes
+    val docs = (0 until 3000).map(i =>
+      (i.toLong, if (i < 2100) s"hotterm u$i" else s"u$i v$i"))
+      .toDF("doc_id", "text")
+    val e1 = intercept[Exception] {
+      ContentRecommender.similarDocsPrefix(docs, "doc_id", "text", k = 2).collect()
+    }
+    assert(e1.getMessage.contains("2048"), e1.getMessage)
+    val e2 = intercept[Exception] {
+      new ContentUserRecommender(
+          Seq((10L, 0L, 1000L)).toDF("user_id", "item_id", "ts_ns"),
+          docs, "doc_id", "text")
+        .recommendForUsers(users, topK = 2).collect()
+    }
+    assert(e2.getMessage.contains("2048"), e2.getMessage)
+  }
+
+  test("building a content recommendation runs no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val (i, u) = (inter, users)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      new ContentUserRecommender(i, toy, "doc_id", "text")
+        .recommendForUsers(u, topK = 2)
+      org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+      assert(jobs.get() == 0,
+        s"building the content recommendation ran ${jobs.get()} Spark job(s)")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def cacheManager =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+
+  test("a content recommendation leaves nothing cached") {
+    spark.catalog.clearCache()
+    new ContentUserRecommender(inter, toy, "doc_id", "text")
+      .recommendForUsers(users, topK = 2).collect()
+    assert(cacheManager.isEmpty, "the content recommendation left a cached frame behind")
   }
 
   test("tfidf weights are L2-normalized per doc") {
